@@ -10,10 +10,13 @@ Replication rules:
   base table, same stride on both sides of every join, so each replica
   joins only with itself — join output cardinality scales linearly
   like a real bigger sf).
-- documents.text: every token in replica i>0 gets a `i` suffix
-  (space -> " i"), so shingle sets are DISJOINT across replicas —
-  near-dup structure per replica matches sf0.1 exactly and scales
-  linearly, instead of every doc acquiring 9 artificial twins.
+- documents.text: in replica i>0 every token AFTER the first gets an
+  `i` prefix (space -> " i"). The first token of each document is not
+  tagged, so shingles that lie wholly inside it are shared with the
+  base copy: shingle sets are nearly, not fully, disjoint across
+  replicas. Near-dup structure per replica stays close to sf0.1 and
+  scales about linearly, instead of every doc acquiring 9 artificial
+  twins.
 - nation/region are fixed dimension tables, copied once.
 
 Usage: python bench_sfgen.py [K] [outdir]   (default 10 /tmp/sf1x)
@@ -53,6 +56,7 @@ def scale(name: str, k: int, outdir: str) -> None:
             if c in strides and i > 0:
                 col = pc.add(col, i * strides[c])
             elif name == "documents" and c == "text" and i > 0:
+                # tags every token but the first (see the docstring)
                 col = pc.replace_substring(col, " ", f" {i}")
             cols[c] = col
         reps.append(pa.table(cols, schema=pa.table(cols).schema))

@@ -16,14 +16,16 @@ resume is valid across different cluster sizes.
 from __future__ import annotations
 
 import os
+from contextvars import ContextVar
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .encode import BLOCK_SCHEMA_DDL, encode_df
 from .table import ManifestTable
 
 
-def _check_key_type(schema_ddl: str, key: str, value,
+def _check_key_type(schema, key: str, value,
                     what: str = "lookup") -> None:
     """Fail fast when a probe value's Python type disagrees with the
     key column's declared type (r6 guard): blooms hash strings via md5
@@ -32,12 +34,12 @@ def _check_key_type(schema_ddl: str, key: str, value,
     the bloom tier would silently drop files/blocks that contain the
     value — a silent-empty-result bug, not a slow path. The residual
     filter's implicit cast would mask or ANSI-throw it; neither is
-    acceptable for a lookup API."""
-    from pyspark.sql.types import StringType, StructType
+    acceptable for a lookup API. ``schema`` is the parsed row
+    StructType."""
+    from pyspark.sql.types import StringType
 
     try:
-        f = next(f for f in StructType.fromDDL(schema_ddl).fields
-                 if f.name == key)
+        f = next(f for f in schema.fields if f.name == key)
     except StopIteration:
         return  # key not in the decode schema; nothing to check
     is_str_col = isinstance(f.dataType, StringType)
@@ -53,8 +55,10 @@ def _check_key_type(schema_ddl: str, key: str, value,
 def lookup_files(spark: SparkSession, snap, key_value, key: str,
                  parts: set[int],
                  aliases: set[str] = frozenset()) -> list[str]:
-    """The three file-pruning tiers of a point lookup, in increasing
-    cost order; returns the files whose payloads must be decoded.
+    """The file-pruning tiers of a point lookup, in increasing cost
+    order; returns the files whose payloads must be decoded. All of them
+    run in the driver (the Spark index consult for an index above the
+    planning budget is the one exception).
 
     1. Part coverage (manifest, zero I/O): exact per-file part sets.
        Vacuous on banded tables — hash part ids make every file span
@@ -65,20 +69,20 @@ def lookup_files(spark: SparkSession, snap, key_value, key: str,
        layout preserves input clustering, so each file covers a narrow
        disjoint slice). On hash-scattered input the ranges overlap and
        prune nothing. Files without a recorded range are kept.
-    3. Per-block KEY BLOOMS (r6 — the scattered-layout fix): when the
-       manifest tiers left more than a couple of files, ONE narrow
-       columnar scan of the key blocks' bloom words (footers + ~1% of
-       payload bytes — parquet column projection never touches the
-       payloads) answers "may this file hold the exact key" at ~1%
-       false positives, so the payload decode opens ~1 file with NO
-       layout migration (realign_table demoted to optional). Blooms
-       live IN the data files, not the manifest: a per-file bloom
-       scales with VALUE count (1M-row file @10 bits/key = ~1.25 MB —
-       untenable in a JSON manifest at 100k files), and the narrow
-       scan is exactly how parquet/ORC consult their own column
-       blooms. Pre-bloom files read NULL under mergeSchema and are
-       conservatively kept. Reference analogue:
-       eel-orc/.../OrcSink.scala:15-33 (bloomFilterColumns).
+    3. Per-file SUMMARY blooms (manifest, zero I/O) and the bloom INDEX
+       sidecar (a few narrow files), then per-block KEY BLOOMS (r6 — the
+       scattered-layout fix) for files the index does not cover: when
+       the manifest tiers left more than a couple of files, one narrow
+       pyarrow read of each candidate's key rows (footer + the bloom
+       words, ~1% of its bytes) answers "may this file hold the exact
+       key" at ~1% false positives, so the payload decode opens ~1 file
+       with NO layout migration. Blooms live IN the data files, not the
+       manifest: a per-file bloom scales with VALUE count (1M-row file
+       @10 bits/key = ~1.25 MB — untenable in a JSON manifest at 100k
+       files), and the narrow read is exactly how parquet/ORC consult
+       their own column blooms. Pre-bloom files are conservatively
+       kept. Reference analogue: eel-orc/.../OrcSink.scala:15-33
+       (bloomFilterColumns).
     """
     from .encode import key_cols, key_values
 
@@ -158,44 +162,8 @@ def prune_files_metadata(snap, files: list[str], key: str, key_value,
     # compaction-rewritten) are conservatively kept; the finer tiers
     # below still run on what survives.
     if len(files) > (2 if keep_floor else 0):
-        summaries: dict[str, dict] = {}
-        for r in snap.properties.get("runs", []):
-            fsb = r.get("file_summary_blooms") or {}
-            for n in names:
-                summaries.update(fsb.get(n, {}))
-        if summaries:
-            import base64
-
-            import numpy as _np
-
-            from .encode import SUMMARY_BLOOM_K, bloom_probe_seeds
-
-            # decoded word arrays are cached ON the snapshot object:
-            # base64+frombuffer per file per probe was the consult's
-            # whole cost (~0.35 ms x files); repeat lookups against the
-            # same snapshot now test bits directly
-            cache = getattr(snap, "_fsb_cache", None)
-            if cache is None:
-                cache = {}
-                snap._fsb_cache = cache
-            h1, h2 = bloom_probe_seeds(key_value)
-            kept0 = []
-            for f in files:
-                s = summaries.get(os.path.basename(f))
-                if s is None:
-                    kept0.append(f)
-                    continue
-                w = cache.get(s["b64"])
-                if w is None:
-                    w = _np.frombuffer(base64.b64decode(s["b64"]),
-                                       dtype=_np.uint64)
-                    cache[s["b64"]] = w
-                m = w.size * 64
-                if all((int(w[p >> 6]) >> (p & 63)) & 1
-                       for p in ((h1 + i * h2) % m
-                                 for i in range(SUMMARY_BLOOM_K))):
-                    kept0.append(f)
-            files = kept0 or (files[:1] if keep_floor else [])
+        files = (summary_bloom_survivors(snap, files, names, [key_value])
+                 or (files[:1] if keep_floor else []))
     # tier 0b (r9): the r7 bloom INDEX sidecar, consulted with pyarrow
     # — sidecar files are narrow parquet, readable with NO SparkSession,
     # so the session-less planning contexts (the DataSource's
@@ -216,6 +184,31 @@ def prune_files_metadata(snap, files: list[str], key: str, key_value,
                      or os.path.basename(f) in hits] \
                 or (files[:1] if keep_floor else [])
     return files
+
+
+def summary_bloom_survivors(snap, files: list[str], names: set[str],
+                            values: list) -> list[str]:
+    """Tier 0: the files whose manifest SUMMARY bloom (under any of the
+    component's ``names``) may hold ANY of ``values``; files without a
+    summary are kept. The one summary probe for lookups and purge
+    planning. Decoded word arrays are cached ON the snapshot object:
+    base64+frombuffer per file per probe was the consult's whole cost
+    (~0.35 ms x files), so repeat probes of one snapshot test bits
+    directly."""
+    from .encode import summary_may_contain
+
+    summaries: dict[str, dict] = {}
+    for r in snap.properties.get("runs", []):
+        fsb = r.get("file_summary_blooms") or {}
+        for n in names:
+            summaries.update(fsb.get(n, {}))
+    if not summaries:
+        return list(files)
+    cache = snap.__dict__.setdefault("_fsb_cache", {})
+    return [f for f in files
+            if (s := summaries.get(os.path.basename(f))) is None
+            or any(summary_may_contain(s["b64"], v, cache)
+                   for v in values)]
 
 
 #: driver-side pyarrow index-consult budget: a sidecar bigger than this
@@ -287,78 +280,187 @@ def _bloom_index_verdicts_pyarrow(snap, key_value, names: set[str]):
 def _prune_files_one_component(spark: SparkSession, snap,
                                files: list[str], key: str, key_value,
                                aliases: set[str]) -> list[str]:
-    """Range tier + bloom tiers (index sidecar, per-file narrow scan)
+    """Range tier + bloom tiers (index sidecar, per-file key-row read)
     for one key component over an already part-pruned candidate list."""
     names = {key} | set(aliases)
     files = prune_files_metadata(snap, files, key, key_value,
                                  aliases=aliases)
-    if len(files) > 2:
-        keep: set[str] | None = None
-        uncovered = files
-        idx = snap.properties.get("bloom_index")
-        if idx and idx.get("key") in names:
-            # tier 3a (r7): manifest-registered BLOOM INDEX sidecar — the
-            # per-block key blooms copied into a handful of narrow index
-            # files at build_bloom_index time, so the scan opens O(1)
-            # index files instead of one footer per candidate (at 512
-            # files the per-file footer opens were 1.9 s of a 3.0 s
-            # lookup, BENCH.md round-7; at 100k files they are the whole
-            # lookup). Files committed AFTER the index build are absent
-            # from it and fall through to the per-file scan below —
-            # append-safe without invalidation; compaction survivors
-            # likewise rebuild lazily.
-            from .encode import bloom_may_contain
+    if len(files) <= 2:
+        return files
+    keep: set[str] = set()
+    uncovered = files
+    idx = snap.properties.get("bloom_index")
+    if idx and idx.get("key") in names:
+        # tier 3a (r7): manifest-registered BLOOM INDEX sidecar — the
+        # per-block key blooms copied into a handful of narrow index
+        # files at build_bloom_index time, so the consult opens O(1)
+        # index files instead of one footer per candidate (at 512 files
+        # the per-file footer opens were 1.9 s of a 3.0 s lookup,
+        # BENCH.md round-7). Files committed AFTER the index build are
+        # absent from it and fall through to the per-file read below —
+        # append-safe without invalidation. The driver-side verdicts are
+        # the ones prune_files_metadata already cached on the snapshot;
+        # an index above the planning budget is consulted on executors.
+        v = (_bloom_index_verdicts_pyarrow(snap, key_value, names)
+             or _bloom_index_verdicts_spark(spark, idx, key_value))
+        want = {os.path.basename(f) for f in files}
+        keep = v[1] & want
+        uncovered = [f for f in files if os.path.basename(f) not in v[0]]
+    if uncovered:
+        scanned = _bloom_scan_files(spark, uncovered, key, key_value,
+                                    aliases=aliases)
+        if scanned is None:  # pre-bloom table: keep them all
+            scanned = {os.path.basename(f) for f in uncovered}
+        keep |= scanned
+    return [f for f in files if os.path.basename(f) in keep] or files[:1]
 
-            # no candidate-set filter pushed into the scan: an IN over
-            # 100k file literals is a bigger plan than the index itself —
-            # the per-file verdicts are tiny (one row per indexed file)
-            # and the intersection happens driver-side
-            want = {os.path.basename(f) for f in files}
-            try:
-                verdicts = (spark.read.parquet(*idx["files"])
-                            .groupBy("file")
-                            .agg(F.max(bloom_may_contain(key_value)
-                                       .cast("int")).alias("hit"))
-                            .collect())
-            except Exception:
-                # deleted/unreadable index files must degrade to the
-                # per-file scan, never fail the lookup — the index is an
-                # accelerator, not a correctness dependency
-                verdicts = []
-            covered = {r["file"] for r in verdicts} & want
-            keep = {r["file"] for r in verdicts if r["hit"]} & want
-            uncovered = [f for f in files
-                         if os.path.basename(f) not in covered]
-        if uncovered:
-            scanned = _bloom_scan_files(spark, uncovered, key, key_value,
-                                        aliases=aliases)
-            if scanned is None:  # pre-bloom table: keep them all
-                keep = ((keep or set())
-                        | {os.path.basename(f) for f in uncovered})
-            else:
-                keep = (keep or set()) | scanned
-        if keep is not None:
-            files = [f for f in files
-                     if os.path.basename(f) in keep] or files[:1]
-    return files
+
+def _bloom_index_verdicts_spark(spark: SparkSession, idx: dict,
+                                key_value) -> tuple[set, set]:
+    """(covered, hit) basenames from a bloom index too big for the
+    driver-side consult, scanned on executors. Deleted or unreadable
+    index files degrade to (nothing covered) — the per-file read then
+    answers, never fails the lookup: the index is an accelerator, not a
+    correctness dependency."""
+    from .encode import bloom_may_contain
+
+    # no candidate-set filter pushed into the scan: an IN over 100k file
+    # literals is a bigger plan than the index itself — the per-file
+    # verdicts are tiny and the intersection happens driver-side
+    try:
+        verdicts = (spark.read.parquet(*idx["files"])
+                    .groupBy("file")
+                    .agg(F.max(bloom_may_contain(key_value)
+                               .cast("int")).alias("hit"))
+                    .collect())
+    except Exception:
+        return set(), set()
+    return ({r["file"] for r in verdicts},
+            {r["file"] for r in verdicts if r["hit"]})
+
+
+#: the narrow block-row columns a lookup plans from: group identity,
+#: exact part membership, encoded size, key stats and bloom words (no
+#: payloads)
+_BLOCK_ROW_COLS = ("part_id", "parts", "block_seq", "writer_uid", "col",
+                   "enc_bytes", "min_i", "max_i", "min_s", "max_s",
+                   "key_bloom")
+
+#: ``_block_rows`` tables by path, shared by the tiers of ONE
+#: ``point_lookup`` call (set for its duration), so the block-group plan
+#: reuses the per-file bloom tier's read instead of repeating it
+_BLOCK_ROWS_MEMO: ContextVar[dict | None] = ContextVar("_BLOCK_ROWS_MEMO",
+                                                       default=None)
+
+
+def _block_rows(path: str):
+    """Every block row of ``path``, narrow columns only — footer + ~1%
+    of the file's bytes. Columns a file's generation predates
+    (``parts``, ``key_bloom``) are simply absent."""
+    import pyarrow.dataset as ds
+
+    d = ds.dataset(path, format="parquet")
+    return d.to_table(
+        columns=[c for c in _BLOCK_ROW_COLS if c in d.schema.names],
+        use_threads=False)
+
+
+def _read_block_rows(files: list[str]) -> list:
+    """``_block_rows`` of every file, read on a small thread pool (pyarrow
+    releases the GIL) — the driver-side form of one narrow scan. Within
+    a ``point_lookup`` each file is read once."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    memo = _BLOCK_ROWS_MEMO.get()
+    memo = {} if memo is None else memo
+    todo = [f for f in dict.fromkeys(files) if f not in memo]
+    if len(todo) <= 4:  # a pool costs more than it saves
+        memo.update((f, _block_rows(f)) for f in todo)
+    else:
+        with ThreadPoolExecutor(max_workers=min(16, len(todo))) as ex:
+            memo.update(zip(todo, ex.map(_block_rows, todo)))
+    return [memo[f] for f in files]
+
+
+def _rows_of(table, names):
+    """The block rows of ``table`` whose ``col`` is one of ``names``."""
+    import pyarrow.compute as pc
+
+    return table.filter(pc.is_in(table.column("col"),
+                                 value_set=pa.array(sorted(names))))
 
 
 def _bloom_scan_files(spark: SparkSession, files: list[str], key: str,
                       key_value,
                       aliases: set[str] = frozenset()) -> set[str] | None:
-    """Tier 3b: the per-file narrow columnar bloom scan (footers + the
-    key blocks' bloom words). Returns surviving basenames, or None when
-    the table predates blooms entirely (caller keeps everything)."""
-    from .encode import bloom_may_contain
+    """Tier 3b: per-file key BLOOMS, read in the driver (footers + the
+    key blocks' bloom words; ``spark`` is unused). Returns the basenames
+    of files with a key block whose bloom may hold ``key_value`` — a
+    file whose generation predates blooms, or whose block carries none,
+    is kept — or None when no candidate carries blooms at all (caller
+    keeps everything)."""
+    from .encode import words_may_contain
 
-    nar = spark.read.option("mergeSchema", "true").parquet(*files)
-    if "key_bloom" not in nar.columns:
-        return None
-    cand = (nar.filter(F.col("col").isin(key, *aliases))
-            .filter(bloom_may_contain(key_value))
-            .select(F.input_file_name().alias("f"))
-            .distinct().collect())
-    return {os.path.basename(r["f"]) for r in cand}
+    if not isinstance(key_value, (str, int)):
+        return None  # blooms hash strings and ints only
+    out: set[str] = set()
+    any_bloom = False
+    for f, t in zip(files, _read_block_rows(files)):
+        t = _rows_of(t, {key} | set(aliases))
+        if "key_bloom" not in t.column_names:
+            if t.num_rows:
+                out.add(os.path.basename(f))
+            continue
+        any_bloom = True
+        if any(w is None or words_may_contain(w, key_value)
+               for w in t.column("key_bloom").to_pylist()):
+            out.add(os.path.basename(f))
+    return out if any_bloom else None
+
+
+def _plan_block_groups(table, names_by_col: dict[str, set[str]],
+                       values: list, parts: set[int]) -> tuple[set, int]:
+    """The block groups of one file a point lookup must decode, and
+    their encoded bytes over every column, from its block rows
+    (``_block_rows``): a group survives when, for EVERY key component,
+    its block of that column is a member of a wanted part, its min/max
+    stats admit the value, and its bloom may hold it — missing stats or
+    blooms are conservatively a pass. Groups are ``(part_id, block_seq,
+    writer_uid)``, the 3-key identity that keeps banded writers'
+    same-seq groups apart."""
+    from .encode import words_may_contain
+
+    comp_of = {n: i for i, c in enumerate(names_by_col)
+               for n in names_by_col[c]}
+    cols = _rows_of(table, set(comp_of)).to_pydict()
+    n = len(cols["col"])
+    none = [None] * n
+    passed: dict[tuple, set[int]] = {}
+    for r in range(n):
+        i = comp_of[cols["col"][r]]
+        v = values[i]
+        # pre-banding generations have no parts column: one part a block
+        if parts.isdisjoint(cols.get("parts", none)[r]
+                            or [cols["part_id"][r]]):
+            continue
+        if isinstance(v, (str, int)):  # the values stats and blooms cover
+            fam = "s" if isinstance(v, str) else "i"
+            lo = cols.get(f"min_{fam}", none)[r]
+            hi = cols.get(f"max_{fam}", none)[r]
+            w = cols.get("key_bloom", none)[r]
+            if ((lo is not None and v < lo) or (hi is not None and v > hi)
+                    or (w and not words_may_contain(w, v))):
+                continue
+        g = (cols["part_id"][r], cols["block_seq"][r],
+             cols["writer_uid"][r])
+        passed.setdefault(g, set()).add(i)
+    groups = {g for g, ok in passed.items() if len(ok) == len(values)}
+    if not groups or "enc_bytes" not in table.column_names:
+        return groups, 0
+    ids = zip(*(table.column(c).to_pylist()
+                for c in ("part_id", "block_seq", "writer_uid")))
+    return groups, sum(b or 0 for g, b in zip(
+        ids, table.column("enc_bytes").to_pylist()) if g in groups)
 
 
 def _key_aliases(snap, key: str) -> set[str]:
@@ -807,51 +909,112 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
                  schema_ddl: str | None = None, key="url",
                  salt_by_value: str | None = None,
                  run_index: int = -1) -> DataFrame:
-    """Key point-lookup against an encoded table: recompute the key's
-    part_id with the SAME hash chain the encoder used (one-row Spark job —
-    the JVM xxhash64 has no Python twin), then decode only that part's
-    blocks. Touches 1/n_parts of the table: the encoded analogue of
-    partition-pruned point reads.
+    """Key point-lookup against an encoded table, planned and decoded
+    in the driver process — no Spark job for a lookup whose planned
+    block groups fit one task's input. Returns a local DataFrame of the matching
+    rows.
+
+    1. Part ids come from ``encode.xxhash64``, the Python twin of the
+       encoder's hash chain (``with_part_id``), for every historical
+       width of a widened key (strings, integers and doubles). A key
+       type the twin does not cover keeps every part.
+    2. ``lookup_files`` prunes FILES: part coverage, key ranges and
+       summary blooms from the manifest, then the bloom index sidecar or
+       each candidate's key-block blooms.
+    3. The narrow block rows of each kept file (read once per lookup,
+       shared with the per-file bloom tier) plan its BLOCK GROUPS: part membership, key min/max stats and key blooms per
+       group (``sort_by=[key]`` makes the stats disjoint, so a lookup
+       decodes ~one block instead of the whole part).
+    4. ``decode_file_batches`` decodes only the planned groups,
+       CRC-verified, and keeps the rows equal to the key.
+    5. Live tombstones are checked against those rows, with the
+       anti-join's semantics (a NULL key never matches).
+
+    When the planned groups span several files and their encoded bytes
+    exceed ``spark.sql.files.maxPartitionBytes`` — more than Spark
+    would hand one task — steps 4-5 run as one ``decode_files_df`` job
+    over the same plan, its tasks one file each, and the key-filtered
+    rows are collected. A one-file plan stays in the driver: the job
+    would decode it in one task after paying the job's fixed cost.
+    (Measured on 4 cores, full-table plans: the branches tie at ~50 MB
+    over 8 files; at 136 MB over 16 files the job takes 2.0 s against
+    3.9 s in the driver.)
 
     Salted tables (lineage records salt > 1): pass ``salt_by_value`` (the
     fine-grained value, e.g. the url when key is its domain) to resolve
-    the exact shard; without it, all ``salt`` candidate parts are decoded
-    (salt/n_parts of the table — still pruned).
+    the exact shard; without it, all ``salt`` candidate parts are
+    decoded (salt/n_parts of the table — still pruned)."""
+    from pyspark.sql.types import StructType
 
-    Within the part, block groups are further skipped by the key
-    column's per-block min/max stats. On hash-arrival order the ranges
-    overlap (no skip, no harm); combined with ``encode_df(sort_by=[key])``
-    the ranges are disjoint and a lookup decodes ~one block instead of
-    the whole part."""
-    from .encode import decode_blocks_df, key_cols, key_values
+    from .deletes import (filter_tombstones, load_tombstone_keys,
+                          tombstone_specs)
+    from .encode import (decode_context, decode_file_batches,
+                         decode_files_df, key_cols, key_values)
+    from .table import fold_renames
 
     snap = tbl.current()
     if schema_ddl is None:
         schema_ddl = tbl.row_schema(snap)
     # composite keys: key=["source","doc_id"], key_value=(v1, v2) — the
-    # part hash chains the component literals exactly like the encoder
+    # part hash chains the component values exactly like the encoder
     cols = key_cols(key)
     vals = key_values(key, key_value)
+    schema = StructType.fromDDL(schema_ddl)
     for c, v in zip(cols, vals):
-        _check_key_type(schema_ddl, c, v, "point_lookup")
+        _check_key_type(schema, c, v, "point_lookup")
     aliases_by_col = {c: _key_aliases(snap, c) for c in cols}
-    aliases = aliases_by_col[cols[0]]
     run = snap.properties.get("runs", [])[run_index]
-    n_parts, salt = run["n_parts"], run.get("salt", 1)
-    # probe literals MUST carry the key column's exact type: Py4J boxes
-    # a small Python int as java.lang.Integer, so F.lit(300) is an
-    # IntegerType literal — and xxhash64 hashes int32 and int64
-    # DIFFERENTLY, silently deriving the wrong part for long-keyed
-    # tables (caught by the r8 composite-key gate leg; the same cast
-    # also pins decimal/short keys). A WIDENED key column
-    # (ManifestTable.widen_column) is probed at every historical width
-    # too — old generations' parts were derived from the narrow type.
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    parts = _lookup_parts(snap, run, cols, vals, types, aliases_by_col,
+                          salt_by_value)
+    names_by_col = {c: {c} | aliases_by_col[c] for c in cols}
+    memo = _BLOCK_ROWS_MEMO.set({})
+    try:
+        files = lookup_files(spark, snap, key_value, key, parts,
+                             aliases=aliases_by_col[cols[0]])
+        planned = [_plan_block_groups(t, names_by_col, vals, parts)
+                   for t in _read_block_rows(files)]
+    finally:
+        _BLOCK_ROWS_MEMO.reset(memo)
+    plan = {f: g for f, (g, _) in zip(files, planned) if g}
+    renames = fold_renames(snap.properties.get("column_renames", []))
+    match = dict(zip(cols, vals))
+    col_order, arrow_types, alias_of = decode_context(schema, renames)
+    arrow_schema = pa.schema([(c, arrow_types[c]) for c in col_order])
+    task_bytes = spark._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
+    if len(plan) > 1 and sum(b for _, b in planned) > task_bytes:
+        rows = decode_files_df(spark, list(plan), schema_ddl,
+                               renames=renames, groups=plan,
+                               match=match).toArrow().cast(arrow_schema)
+    else:
+        rows = pa.Table.from_batches(
+            [b for f, g in plan.items()
+             for b in decode_file_batches(f, col_order, arrow_types,
+                                          alias_of, True, groups=g,
+                                          match=match)],
+            schema=arrow_schema)
+    tombstones = tombstone_specs(snap)
+    if tombstones:
+        rows = filter_tombstones(rows, load_tombstone_keys(tombstones))
+    return spark.createDataFrame(rows, schema=schema)
+
+
+def _lookup_parts(snap, run: dict, cols: list[str], vals: list,
+                  types: dict[str, str], aliases_by_col: dict,
+                  salt_by_value) -> set[int]:
+    """The parts a key value may live in, from the Python xxhash64 twin.
+    A WIDENED key column (ManifestTable.widen_column) is hashed at every
+    historical width — old generations' parts were derived from the
+    narrow type, and xxhash64 hashes int32 and int64 differently.
+    Salted runs add the shard: the exact one from ``salt_by_value``,
+    else every shard. A key type the twin does not cover keeps every
+    part (the finer tiers still apply)."""
     from itertools import product
 
-    from pyspark.sql.types import StructType
+    from .encode import part_id_of, xxhash64
 
-    types = {f.name: f.dataType.simpleString()
-             for f in StructType.fromDDL(schema_ddl).fields}
+    n_parts, salt = run["n_parts"], run.get("salt", 1)
     widenings = snap.properties.get("column_widenings", [])
     type_variants = []
     for c in cols:
@@ -859,86 +1022,29 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
         chain = [types.get(c)] + [e["from"] for e in widenings
                                   if e["col"] in names_c]
         type_variants.append(list(dict.fromkeys(chain)))
-
-    def _parts_expr(kvs):
+    shards: list = [None]
+    try:
         if salt > 1 and salt_by_value is not None:
-            shard = F.pmod(F.xxhash64(F.lit(salt_by_value)), F.lit(salt))
-            return F.array(F.pmod(F.xxhash64(*kvs, shard),
-                                  F.lit(n_parts)).cast("int"))
-        if salt > 1:
-            # shard values must be hashed as BIGINT — that is the type
-            # of the encoder's pmod(xxhash64(salt_by), salt) column, and
-            # xxhash64 hashes int32 and int64 inputs differently
-            return F.array(*[
-                F.pmod(F.xxhash64(*kvs, F.lit(s).cast("long")),
-                       F.lit(n_parts)).cast("int")
-                for s in range(salt)])
-        return F.array(F.pmod(F.xxhash64(*kvs), F.lit(n_parts))
-                       .cast("int"))
+            shards = [xxhash64([salt_by_value],
+                               [types.get(run.get("salt_by"))]) % salt]
+        elif salt > 1:
+            shards = list(range(salt))
+        # a value outside a historical narrow type's range cannot exist
+        # in that generation — skip the variant
+        return {part_id_of(vals, list(combo), n_parts, shard)
+                for combo in product(*type_variants)
+                if all(_fits(v, t) for v, t in zip(vals, combo))
+                for shard in shards}
+    except TypeError:
+        return set(range(n_parts))
 
-    # a value outside a historical narrow type's range cannot exist in
-    # that generation — skip the variant (also avoids the ANSI
-    # CAST_OVERFLOW throw on the literal)
-    int_caps = {"tinyint": 2**7, "smallint": 2**15, "int": 2**31}
 
-    def _fits(v, t):
-        cap = int_caps.get(t)
-        return cap is None or not isinstance(v, int) or -cap <= v < cap
+_INT_CAPS = {"tinyint": 2**7, "smallint": 2**15, "int": 2**31}
 
-    exprs = []
-    for combo in product(*type_variants):
-        if not all(_fits(v, t) for v, t in zip(vals, combo)):
-            continue
-        kvs = [F.lit(v).cast(t) if t else F.lit(v)
-               for v, t in zip(vals, combo)]
-        exprs.append(_parts_expr(kvs))
-    row = spark.range(1).select(*[e.alias(f"p{i}")
-                                  for i, e in enumerate(exprs)]).first()
-    parts = {p for i in range(len(exprs)) for p in row[f"p{i}"]}
-    files = lookup_files(spark, snap, key_value, key, parts,
-                         aliases=aliases)
-    # mergeSchema: a table appended onto across layout generations mixes
-    # files WITH and WITHOUT the banded parts/part_hi columns — without
-    # merging, whichever file Spark samples first dictates the schema and
-    # the other generation's rows silently vanish from the filter below
-    blocks = spark.read.option("mergeSchema", "true").parquet(*files)
-    for c in cols:
-        blocks = _relabel_blocks(blocks, aliases_by_col[c], c)
-    if "parts" in blocks.columns:
-        # exact membership: banded 'local' blocks span a part run, so
-        # anchor equality would miss parts above the anchor. Pre-banding
-        # rows read NULL for parts under the merged schema — normalize to
-        # their single-part membership [part_id] instead of dropping them
-        want = F.array(*[F.lit(p).cast("int") for p in parts])
-        membership = F.coalesce(F.col("parts"),
-                                F.array(F.col("part_id")))
-        blocks = blocks.filter(F.arrays_overlap(membership, want))
-    else:  # pre-banding table layout
-        blocks = blocks.filter(F.col("part_id").isin(*parts))
-    # within the part, skip whole BLOCK GROUPS whose key-column min/max
-    # range excludes the value (block stats ride the blocks table; this
-    # is the same machinery as predicate pushdown, aimed at the key) —
-    # with 64k-row blocks a 10M-row part decodes ~1 block instead of ~160
-    from functools import reduce
-    from operator import and_
 
-    from .encode import prune_block_groups, prune_block_groups_bloom
-
-    for c, v in zip(cols, vals):
-        if isinstance(v, str):
-            blocks = prune_block_groups(blocks, c, lower_s=v, upper_s=v)
-        elif isinstance(v, int):
-            blocks = prune_block_groups(blocks, c, lower=v, upper=v)
-        # block tier of the same bloom machinery: within surviving files,
-        # drop whole block groups whose key bloom excludes the value (the
-        # finer skip min/max can't provide on scattered layouts)
-        if "key_bloom" in blocks.columns:
-            blocks = prune_block_groups_bloom(blocks, c, v)
-    out = decode_blocks_df(blocks, schema_ddl).filter(
-        reduce(and_, [F.col(c) == v for c, v in zip(cols, vals)]))
-    from .deletes import apply_deletes  # tombstoned keys stay suppressed
-
-    return apply_deletes(spark, out, snap)
+def _fits(v, t: str) -> bool:
+    cap = _INT_CAPS.get(t)
+    return cap is None or not isinstance(v, int) or -cap <= v < cap
 
 
 def range_lookup(spark: SparkSession, tbl: ManifestTable,
@@ -957,8 +1063,11 @@ def range_lookup(spark: SparkSession, tbl: ManifestTable,
     snap = tbl.current()
     if schema_ddl is None:
         schema_ddl = tbl.row_schema(snap)
-    _check_key_type(schema_ddl, key, lower, "range_lookup")
-    _check_key_type(schema_ddl, key, upper, "range_lookup")
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(schema_ddl)
+    _check_key_type(schema, key, lower, "range_lookup")
+    _check_key_type(schema, key, upper, "range_lookup")
     if snap is None or not snap.files:
         raise FileNotFoundError(f"table {tbl.dir} has no committed snapshot")
     # ``key`` is ONE column — on composite-keyed tables pass any

@@ -199,6 +199,70 @@ def apply_deletes(spark: SparkSession, df: DataFrame, snap) -> DataFrame:
     return df
 
 
+def tombstone_specs(snap) -> list[tuple[tuple[str, ...], list[str]]]:
+    """Live tombstones as (current key columns, sidecar parquet paths)
+    pairs — the Spark-free twin of :func:`tombstone_keys`, used by the
+    DataSource's executor-side reads and by the driver-side point
+    lookup."""
+    from .table import fold_renames
+
+    fold = fold_renames(snap.properties.get("column_renames", []))
+    by: dict[tuple[str, ...], list[str]] = {}
+    for e in _tombstone_entries(snap):
+        k = _entry_key(e)
+        cols = (k,) if isinstance(k, str) else tuple(k)
+        now = tuple(fold.get(c, c) for c in cols)
+        by.setdefault(now, []).extend(e["files"])
+    return sorted(by.items())
+
+
+def load_tombstone_keys(specs):
+    """Materialize the sidecar parquets ONCE per task (decode yields
+    many batches per file — re-reading per batch would multiply the
+    I/O): (cols, single-column Array | set of tuples) pairs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = []
+    for cols, sidecars in specs:
+        keys = pa.concat_tables(
+            pq.read_table(f, use_threads=False) for f in sidecars)
+        out.append((cols, keys.column(0).combine_chunks()
+                    if len(cols) == 1
+                    else set(zip(*(keys.column(i).to_pylist()
+                                   for i in range(len(cols)))))))
+    return out
+
+
+def filter_tombstones(batch, loaded):
+    """Drop tombstoned rows from a decoded RecordBatch or Table with the
+    anti-join's semantics: a row whose key holds a NULL never matches.
+    Single-column keys take the vectorized ``is_in`` path; composite
+    keys fall back to a per-row tuple test (tombstone lists are bounded
+    takedown sets, and the loop runs only on tables that HAVE them)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for cols, keys in loaded:
+        if any(c not in batch.schema.names for c in cols):
+            continue
+        if len(cols) == 1:
+            col = batch.column(cols[0])
+            try:
+                keys = keys.cast(col.type)
+            except pa.ArrowInvalid:
+                # a tombstone outside the column's type (a bigint on an
+                # int key) matches nothing: compare in the wider type
+                col = col.cast(keys.type)
+            mask = pc.is_in(col, value_set=keys, skip_nulls=True)
+        else:
+            rows = zip(*(batch.column(c).to_pylist() for c in cols))
+            mask = pa.array([None not in r and r in keys for r in rows],
+                            pa.bool_())
+        batch = batch.filter(pc.fill_null(pc.invert(mask), True))
+    return batch
+
+
 def _purge_candidates(spark: SparkSession, snap, key: str,
                       values: list, names: set | None = None) -> list[str]:
     """Files that MAY hold any of ``values`` in ONE key component, via
@@ -210,7 +274,7 @@ def _purge_candidates(spark: SparkSession, snap, key: str,
     'all files' whenever a tier can't answer — pruning here is an
     efficiency tier, never a correctness dependency. Composite-key
     callers run this per component and intersect."""
-    from .checkpoint import _component_key_ranges
+    from .checkpoint import _component_key_ranges, summary_bloom_survivors
     from .encode import bloom_may_contain
 
     names = set(names or ()) | {key}
@@ -231,20 +295,9 @@ def _purge_candidates(spark: SparkSession, snap, key: str,
     # tier 0 (r8): manifest-resident summary blooms, probed driver-side
     # before the batched narrow scan opens any footer — a file survives
     # if ANY value may be present; summary-less files are kept
-    summaries: dict[str, dict] = {}
-    for r in snap.properties.get("runs", []):
-        fsb = r.get("file_summary_blooms") or {}
-        for n in names:
-            summaries.update(fsb.get(n, {}))
-    if summaries:
-        from .encode import summary_may_contain
-
-        files = [f for f in files
-                 if (s := summaries.get(os.path.basename(f))) is None
-                 or any(summary_may_contain(s["b64"], v)
-                        for v in values)]
-        if not files or len(files) <= 2:
-            return files
+    files = summary_bloom_survivors(snap, files, names, values)
+    if len(files) <= 2:
+        return files
     # tier 2: ONE narrow columnar scan, all probes OR-chained; per-file
     # verdict = max over its bloomed key blocks. Files with no bloomed
     # key blocks at all never appear in the aggregate and are kept

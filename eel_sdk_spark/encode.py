@@ -264,19 +264,38 @@ def summary_bloom_words(n: int) -> "np.ndarray | None":
     return np.zeros(SUMMARY_MAX_BITS // 64, dtype=np.uint64)
 
 
-def summary_may_contain(b64_words: str, key_value) -> bool:
-    """Driver-side membership probe of a stored file-summary bloom
-    (same (h1, h2) family as the block blooms, k=SUMMARY_BLOOM_K)."""
-    import base64
-
-    words = np.frombuffer(base64.b64decode(b64_words), dtype=np.uint64)
-    m = words.size * 64
+def words_may_contain(words, key_value, k: int = BLOOM_K) -> bool:
+    """Driver-side membership probe of one bloom's words (a block's
+    ``key_bloom`` list or a decoded file summary): the same (h1 + i*h2)
+    mod m positions ``bloom_may_contain`` tests as a Column. Empty words
+    carry no bloom and are conservatively a hit."""
+    m = len(words) * 64
+    if not m:
+        return True
     h1, h2 = bloom_probe_seeds(key_value)
-    for i in range(SUMMARY_BLOOM_K):
+    for i in range(k):
         pos = (h1 + i * h2) % m
+        # int64 bit patterns: Python's shift on a negative int keeps
+        # two's-complement bits, so bits 0..63 read as unsigned
         if not (int(words[pos >> 6]) >> (pos & 63)) & 1:
             return False
     return True
+
+
+def summary_may_contain(b64_words: str, key_value,
+                        cache: dict | None = None) -> bool:
+    """Driver-side membership probe of a stored file-summary bloom
+    (same (h1, h2) family as the block blooms, k=SUMMARY_BLOOM_K).
+    ``cache`` maps the base64 text to its decoded words, so repeat
+    probes against one snapshot skip the base64 decode."""
+    import base64
+
+    words = None if cache is None else cache.get(b64_words)
+    if words is None:
+        words = np.frombuffer(base64.b64decode(b64_words), dtype=np.uint64)
+        if cache is not None:
+            cache[b64_words] = words
+    return words_may_contain(words, key_value, SUMMARY_BLOOM_K)
 
 
 def bloom_probe_seeds(key_value) -> tuple[int, int]:
@@ -393,6 +412,114 @@ def with_part_id(df: DataFrame, key, n_parts: int,
         shard = F.pmod(F.xxhash64(F.col(salt_by)), F.lit(salt))
         h = F.xxhash64(*cols, shard)
     return df.withColumn(PART_COL, F.pmod(h, F.lit(n_parts)).cast("int"))
+
+
+# -- Python twin of Spark's xxhash64 ---------------------------------------
+# Spark's XxHash64 expression (seed 42) is plain XXH64 over each value's
+# little-endian bytes, chained: every column's hash seeds the next, and a
+# NULL leaves the running hash unchanged. tinyint/smallint/int hash as 4
+# bytes (sign-extended to int32), bigint as 8, strings as their UTF-8
+# bytes. The twin lets a lookup derive ``with_part_id``'s part in the
+# driver with no Spark job; a type it does not cover raises TypeError.
+_M64 = (1 << 64) - 1
+_XXP1 = 0x9E3779B185EBCA87
+_XXP2 = 0xC2B2AE3D27D4EB4F
+_XXP3 = 0x165667B19E3779F9
+_XXP4 = 0x85EBCA77C2B2AE63
+_XXP5 = 0x27D4EB2F165667C5
+_XX_INT_FORMATS = {"tinyint": "<i", "smallint": "<i", "int": "<i",
+                   "bigint": "<q"}
+_XX_CANONICAL_NAN = (0x7FF8000000000000).to_bytes(8, "little")
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xx_round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _XXP2) & _M64, 31) * _XXP1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned result), the algorithm Spark's
+    ``XXH64.hashUnsafeBytes`` / ``hashInt`` / ``hashLong`` implement."""
+    import struct
+
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _XXP1 + _XXP2) & _M64, (seed + _XXP2) & _M64,
+             seed & _M64, (seed - _XXP1) & _M64]
+        while i <= n - 32:
+            v = [_xx_round(a, lane) for a, lane in
+                 zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xx_round(0, a)) * _XXP1 + _XXP4) & _M64
+    else:
+        h = (seed + _XXP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xx_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl64(h, 27) * _XXP1 + _XXP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _XXP1 & _M64
+        h = (_rotl64(h, 23) * _XXP2 + _XXP3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _XXP5 & _M64), 11) * _XXP1 & _M64
+    h = (h ^ (h >> 33)) * _XXP2 & _M64
+    h = (h ^ (h >> 29)) * _XXP3 & _M64
+    return h ^ (h >> 32)
+
+
+def xxhash64(values: list, types: list[str], seed: int = 42) -> int:
+    """Spark's ``xxhash64(v1, v2, ...)`` (signed, like the JVM long) for
+    literal ``values`` of the Spark SQL ``types`` (``simpleString``
+    names). Raises TypeError for a type the twin does not cover."""
+    import struct
+
+    h = seed & _M64
+    for v, t in zip(values, types):
+        if v is None:
+            continue
+        if t == "string" and isinstance(v, str):
+            data = v.encode("utf-8")
+        elif t in _XX_INT_FORMATS and isinstance(v, int) \
+                and not isinstance(v, bool):
+            try:
+                data = struct.pack(_XX_INT_FORMATS[t], v)
+            except struct.error:
+                raise TypeError(f"xxhash64: {v!r} overflows {t}") from None
+        elif t == "double" and isinstance(v, (int, float)) \
+                and not isinstance(v, bool):
+            # the JVM hashes doubleToLongBits: -0.0 folds into 0.0 and
+            # every NaN into the one canonical NaN
+            try:
+                d = float(v) + 0.0
+            except OverflowError:
+                raise TypeError(f"xxhash64: {v!r} overflows {t}") from None
+            data = (_XX_CANONICAL_NAN if d != d
+                    else struct.pack("<d", d))
+        else:
+            raise TypeError(f"xxhash64: no Python twin for {t} "
+                            f"value {v!r}")
+        h = _xxh64(data, h)
+    return h - (1 << 64) if h >> 63 else h
+
+
+def part_id_of(values: list, types: list[str], n_parts: int,
+               shard: int | None = None) -> int:
+    """The part ``with_part_id`` assigns to a row whose key columns hold
+    ``values`` (of ``types``): pmod(xxhash64(key..., shard), n_parts).
+    ``shard`` is the salted layout's pmod(xxhash64(salt_by), salt)
+    value, which the encoder hashes as a bigint."""
+    h = xxhash64(values, types)
+    if shard is not None:
+        h = xxhash64([shard], ["bigint"], seed=h)
+    return h % n_parts
 
 
 def recommend_salt(df: DataFrame, key: str, n_parts: int,
@@ -1055,33 +1182,91 @@ def decode_blocks_df(blocks: DataFrame, schema_ddl: str,
     )
 
 
+def decode_context(schema, renames: dict[str, str] | None = None,
+                   columns: list[str] | None = None):
+    """(col_order, arrow_types, alias_of) for ``decode_file_batches``:
+    the output columns of a Spark ``schema`` (``columns`` projects),
+    their CURRENT arrow types, and the historical names
+    (``rename_column``) whose blocks relabel to a requested column —
+    block files key columns by name, so the manifest-recorded mapping
+    plays the part of Iceberg's field ids."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    col_order = [f.name for f in schema.fields
+                 if columns is None or f.name in columns]
+    arrow_types = {f.name: to_arrow_type(f.dataType)
+                   for f in schema.fields if f.name in col_order}
+    alias_of = {h: c for h, c in (renames or {}).items()
+                if c in col_order and h not in col_order}
+    return col_order, arrow_types, alias_of
+
+
+def _match_mask(rb: pa.RecordBatch, match: dict) -> pa.Array:
+    """Rows of ``rb`` whose columns equal every ``match`` value, compared
+    in their common type like Spark's ``==`` (an int probe against an
+    int32 column, or 1.5 against a bigint one, simply matches nothing);
+    NULL never matches, and NaN matches NaN as in Spark."""
+    import datetime
+
+    import pyarrow.compute as pc
+
+    mask = None
+    for c, v in match.items():
+        col = rb.column(c)
+        if isinstance(v, datetime.datetime) and v.tzinfo is None \
+                and getattr(col.type, "tz", None):
+            v = v.astimezone()  # naive means local time, as in PySpark
+        if v != v and pa.types.is_floating(col.type):
+            m = pc.is_nan(col)
+        else:
+            m = pc.equal(col, v)
+        mask = m if mask is None else pc.and_(mask, m)
+    return pc.fill_null(mask, False)
+
+
 def decode_file_batches(path: str, col_order: list[str],
                         arrow_types: dict, alias_of: dict[str, str],
-                        verify: bool) -> Iterator[pa.RecordBatch]:
+                        verify: bool, groups: set | None = None,
+                        match: dict | None = None
+                        ) -> Iterator[pa.RecordBatch]:
     """Decode ONE encoded block file into output RecordBatches — pure
     pyarrow/numpy, no SparkSession. This is the executor-side unit of
     ``decode_files_df`` (whole files per task — block groups are
-    file-adjacent by construction) and of the Python DataSource read
-    path (sources/eel_datasource.py), so both read surfaces share one
-    kernel. ``alias_of`` maps historical column names (rename_column)
-    to current ones; ``arrow_types`` carries the CURRENT (possibly
-    widened) target type per column — narrow pre-widen blocks are
-    safe-cast up."""
+    file-adjacent by construction), of the Python DataSource read path
+    (sources/eel_datasource.py) and of the driver-side point lookup, so
+    every read surface shares one kernel. ``alias_of`` maps historical
+    column names (rename_column) to current ones; ``arrow_types``
+    carries the CURRENT (possibly widened) target type per column —
+    narrow pre-widen blocks are safe-cast up.
+
+    ``groups`` (a set of ``(part_id, block_seq, writer_uid)``) decodes
+    only those block groups — a lookup's plan; the parquet read is
+    filtered to them, so no other group is CRC-checked or decoded.
+    ``match`` ({column: value}) keeps only the decoded rows equal to
+    every value (the lookup's exact residual filter)."""
+    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
+    if groups is not None and not groups:
+        return
     n_cols = len(col_order)
     scan_names = list(col_order) + sorted(alias_of)
     want = ["part_id", "block_seq", "writer_uid", "col",
             "header", "payload"]
     if verify and "payload_crc" in pq.read_schema(path).names:
         want.append("payload_crc")
+    flt = ds.field("col").isin(scan_names)
+    if groups is not None:
+        from functools import reduce
+        from operator import or_
+
+        flt = flt & reduce(or_, [(ds.field("part_id") == p)
+                                 & (ds.field("block_seq") == s)
+                                 & (ds.field("writer_uid") == u)
+                                 for p, s, u in sorted(groups)])
     # single-threaded per task: N tasks already saturate the
     # cores, arrow's internal pool would only oversubscribe
-    t = pq.read_table(
-        path,
-        columns=want,
-        filters=[("col", "in", scan_names)],
-        use_threads=False)
+    t = pq.read_table(path, columns=want, filters=flt, use_threads=False)
     pending: dict[tuple, dict[str, pa.Array]] = {}
     for tb in t.to_batches():
         keys = zip(tb.column("part_id").to_pylist(),
@@ -1103,11 +1288,16 @@ def decode_file_batches(path: str, col_order: list[str],
                            part, seq, uid, name, path=path)
             group[name] = decode_column(hdr, buf)
             if len(group) == n_cols:
-                yield from _sliced(pa.record_batch(
+                rb = pa.record_batch(
                     [_widened(group[c], arrow_types.get(c))
                      for c in col_order],
-                    names=col_order))
+                    names=col_order)
                 del pending[key]
+                if match:
+                    rb = rb.filter(_match_mask(rb, match))
+                    if not rb.num_rows:
+                        continue
+                yield from _sliced(rb)
     if pending:
         raise ValueError(
             f"{len(pending)} incomplete block groups in {path} "
@@ -1118,7 +1308,9 @@ def decode_files_df(spark, files: list[str], schema_ddl: str,
                     columns: list[str] | None = None,
                     n_tasks: int | None = None,
                     verify: bool = True,
-                    renames: dict[str, str] | None = None) -> DataFrame:
+                    renames: dict[str, str] | None = None,
+                    groups: dict[str, set] | None = None,
+                    match: dict | None = None) -> DataFrame:
     """Zero-shuffle decode FROM STORAGE: the unit of work is the FILE.
 
     ``decode_blocks_df`` over a re-read table must either shuffle to
@@ -1143,35 +1335,27 @@ def decode_files_df(spark, files: list[str], schema_ddl: str,
     This is the manifest-driven read path a 100 TB table actually wants:
     ``ManifestTable.read_decoded`` feeds it the snapshot's (optionally
     partition-pruned) file list. Projection pushdown: only the requested
-    columns' block rows are materialized from parquet
-    (``filters=[('col', 'in', ...)]`` reaches the parquet reader)."""
+    columns' block rows are materialized from parquet (the ``col``
+    filter reaches the parquet reader). ``groups`` (path -> block-group
+    plan) and ``match`` pass straight to ``decode_file_batches`` — the
+    executor form of a point lookup too big for one driver read."""
     from pyspark.sql.types import StructType
 
     out_schema = StructType.fromDDL(schema_ddl)
-    col_order = [f.name for f in out_schema.fields]
+    col_order, arrow_types, alias_of = decode_context(out_schema, renames,
+                                                      columns)
     if columns is not None:
-        col_order = [c for c in col_order if c in columns]
         schema_ddl = ", ".join(
             f"{f.name} {f.dataType.simpleString()}"
             for f in out_schema.fields if f.name in col_order)
-    # column-rename name mapping (ManifestTable.rename_column): blocks
-    # written before a rename carry the HISTORICAL name — accept those
-    # names in the parquet filter and relabel as they decode (Iceberg
-    # resolves renames by field id; block files key columns by name, so
-    # the manifest-recorded mapping is the equivalent). Only mappings
-    # whose target is actually requested matter here.
-    alias_of = {h: c for h, c in (renames or {}).items()
-                if c in col_order and h not in col_order}
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    arrow_types = {f.name: to_arrow_type(f.dataType)
-                   for f in out_schema.fields if f.name in col_order}
 
     def _read_decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             for path in b.column("path").to_pylist():
                 yield from decode_file_batches(
-                    path, col_order, arrow_types, alias_of, verify)
+                    path, col_order, arrow_types, alias_of, verify,
+                    groups=None if groups is None else groups[path],
+                    match=match)
 
     n_tasks = n_tasks or min(
         len(files), spark.sparkContext.defaultParallelism * 2) or 1

@@ -982,6 +982,7 @@ def semantic_dedup(emb: DataFrame, id_col: str, vec_col: str,
     id_field = assigned.schema[id_col]
     id_t = id_field.dataType.simpleString()
     thr = float(threshold)
+    dim = cents.shape[1]
 
     def _exact_cos(u, v) -> float:
         d = na = nb = 0.0
@@ -993,7 +994,14 @@ def semantic_dedup(emb: DataFrame, id_col: str, vec_col: str,
         return d / den if den > 0 else 0.0
 
     def _dominated(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        # a NULL or off-dimension vector has a NULL cosine under the
+        # JVM fold, so it neither dominates nor is dominated: split it
+        # off before the stack and let it pass through
+        ok = pdf[vec_col].map(lambda v: v is not None and len(v) == dim)
+        pdf = pdf[ok.to_numpy(dtype=bool)]
         ids = pdf[id_col].to_numpy()
+        if not len(ids):
+            return pd.DataFrame({id_col: pd.Series(ids)})
         order = np.argsort(ids, kind="stable")
         ids_s = ids[order]
         V = np.stack([np.asarray(v, dtype=np.float64)

@@ -44,9 +44,9 @@ Streaming read
     classification logic and differ only in who owns the offset.
 
 Writes stay on the Spark-level API (``checkpoint.encode_with_checkpoint``
-/ ``append_encode``): lineage part-ids are ``pmod(xxhash64(key), n)``
-and the JVM xxhash64 has no Python twin, so a DataSource writer could
-not reproduce the layout the lookup tiers rely on.
+/ ``append_encode``): the lineage commit the lookup tiers rely on (run
+records, part coverage, summary blooms) is built by those encode jobs,
+which a DataSource writer does not run.
 
 Reference analogue: eel's Source/Publisher abstraction is its own SPI
 (eel-core/src/main/scala/io/eels/Source.scala); this is the same idea
@@ -71,6 +71,8 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+
+from ..deletes import filter_tombstones, load_tombstone_keys, tombstone_specs
 
 __all__ = ["EelDataSource", "register"]
 
@@ -126,17 +128,11 @@ def _resolve_snapshot(tbl, options):
 def _decode_context(snap, schema):
     """(col_order, arrow_types, alias_of) for ``decode_file_batches``,
     from the resolved Spark schema + the snapshot's rename history."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
+    from ..encode import decode_context
     from ..table import fold_renames
 
-    col_order = [f.name for f in schema.fields]
-    arrow_types = {f.name: to_arrow_type(f.dataType)
-                   for f in schema.fields}
-    fold = fold_renames(snap.properties.get("column_renames", []))
-    alias_of = {h: c for h, c in fold.items()
-                if c in col_order and h not in col_order}
-    return col_order, arrow_types, alias_of
+    return decode_context(
+        schema, fold_renames(snap.properties.get("column_renames", [])))
 
 
 def _file_sizes(snap, files: list[str]) -> list[int]:
@@ -158,61 +154,6 @@ def _file_sizes(snap, files: list[str]) -> list[int]:
             except OSError:
                 out.append(0)
     return out
-
-
-def _tombstone_specs(snap) -> list[tuple[tuple[str, ...], list[str]]]:
-    """Live tombstones as (current key columns, sidecar parquet paths)
-    pairs — the Spark-free twin of ``deletes.tombstone_keys``."""
-    from ..deletes import _entry_key, _tombstone_entries
-    from ..table import fold_renames
-
-    fold = fold_renames(snap.properties.get("column_renames", []))
-    by: dict[tuple[str, ...], list[str]] = {}
-    for e in _tombstone_entries(snap):
-        k = _entry_key(e)
-        cols = (k,) if isinstance(k, str) else tuple(k)
-        now = tuple(fold.get(c, c) for c in cols)
-        by.setdefault(now, []).extend(e["files"])
-    return sorted(by.items())
-
-
-def _load_tombstone_keys(specs):
-    """Materialize the sidecar parquets ONCE per task (decode yields
-    many batches per file — re-reading per batch would multiply the
-    I/O): (cols, single-column Array | set of tuples) pairs."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = []
-    for cols, sidecars in specs:
-        keys = pa.concat_tables(
-            pq.read_table(f, use_threads=False) for f in sidecars)
-        out.append((cols, keys.column(0).combine_chunks()
-                    if len(cols) == 1
-                    else set(zip(*(keys.column(i).to_pylist()
-                                   for i in range(len(cols)))))))
-    return out
-
-
-def _filter_tombstones(batch, loaded):
-    """Drop tombstoned rows from one decoded RecordBatch, executor-side.
-    Single-column keys take the vectorized ``is_in`` path; composite
-    keys fall back to a per-row tuple test (tombstone lists are bounded
-    takedown sets, and the loop runs only on tables that HAVE them)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    for cols, keys in loaded:
-        if any(c not in batch.schema.names for c in cols):
-            continue
-        if len(cols) == 1:
-            vals = keys.cast(batch.column(cols[0]).type)
-            mask = pc.is_in(batch.column(cols[0]), value_set=vals)
-        else:
-            rows = zip(*(batch.column(c).to_pylist() for c in cols))
-            mask = pa.array([r in keys for r in rows], pa.bool_())
-        batch = batch.filter(pc.fill_null(pc.invert(mask), True))
-    return batch
 
 
 #: never shatter a scan into bins smaller than this (raw bytes): a
@@ -238,7 +179,7 @@ class EelBatchReader(DataSourceReader):
         self._verify = str(options.get("verify", "true")).lower() != "false"
         self._ctx = _decode_context(self._snap, schema)
         self._tombstones = (
-            _tombstone_specs(self._snap)
+            tombstone_specs(self._snap)
             if str(options.get("with_deletes",
                                "true")).lower() != "false" else [])
         self._target_bytes = int(options.get("scan_partition_bytes",
@@ -305,12 +246,12 @@ class EelBatchReader(DataSourceReader):
         from ..encode import decode_file_batches
 
         col_order, arrow_types, alias_of = self._ctx
-        loaded = _load_tombstone_keys(self._tombstones)
+        loaded = load_tombstone_keys(self._tombstones)
         for path in partition.value:
             for batch in decode_file_batches(path, col_order,
                                              arrow_types, alias_of,
                                              self._verify):
-                out = (_filter_tombstones(batch, loaded)
+                out = (filter_tombstones(batch, loaded)
                        if loaded else batch)
                 if out.num_rows:
                     yield out
@@ -447,11 +388,25 @@ class EelStreamReader(DataSourceStreamReader):
                             f"{self._stream_id}.offset.json")
 
     def _load_state(self) -> dict | None:
+        """The persisted cursor, or None for a fresh stream (no state
+        file yet). A state file that exists but cannot be read as a
+        cursor raises: treating it as fresh would silently re-read the
+        table from the configured origin."""
+        path = self._state_path()
         try:
-            with open(self._state_path()) as f:
-                return json.load(f)
-        except (OSError, ValueError):
+            with open(path) as f:
+                state = json.load(f)
+        except FileNotFoundError:
             return None
+        except ValueError as e:
+            raise ValueError(f"eel stream: cursor state {path} is not "
+                             f"valid JSON ({e}) — restore it or use a "
+                             f"fresh stream_id/checkpoint") from None
+        if not isinstance(state, dict) or "sid" not in state:
+            raise ValueError(f"eel stream: cursor state {path} holds "
+                             f"{state!r}, not a cursor — restore it or "
+                             f"use a fresh stream_id/checkpoint")
+        return state
 
     def _save_state(self, off: dict) -> None:
         path = self._state_path()
@@ -595,7 +550,7 @@ class EelStreamReader(DataSourceStreamReader):
         # are as-of the window's END snapshot, and the reader object
         # executors hold may predate this batch
         ctx = _decode_context(snap, self._schema)
-        specs = _tombstone_specs(snap) if self._with_deletes else []
+        specs = tombstone_specs(snap) if self._with_deletes else []
         return [InputPartition((p, ctx, specs)) for p in files]
 
     def read(self, partition) -> Iterator:
@@ -604,10 +559,10 @@ class EelStreamReader(DataSourceStreamReader):
         from ..encode import decode_file_batches
 
         path, (col_order, arrow_types, alias_of), specs = partition.value
-        loaded = _load_tombstone_keys(specs)
+        loaded = load_tombstone_keys(specs)
         for batch in decode_file_batches(path, col_order, arrow_types,
                                          alias_of, self._verify):
-            out = _filter_tombstones(batch, loaded) if loaded else batch
+            out = filter_tombstones(batch, loaded) if loaded else batch
             if out.num_rows:
                 yield out
 

@@ -467,6 +467,30 @@ def test_bounded_bootstrap_offset_math(spark, tmp_path):
     assert rc.latestOffset() == {"sid": head.snapshot_id, "c": 4}
 
 
+@pytest.mark.parametrize("content", ["", "{\"sid\": 3, \"c\"", "[1, 2]",
+                                     "{\"c\": 2}"])
+def test_bounded_stream_unreadable_state_fails(spark, tmp_path, content):
+    """A cursor state file that exists but cannot be read must fail the
+    stream, not read as a fresh one (which would re-deliver the table
+    from the origin); only a MISSING file means a fresh stream."""
+    import os
+
+    docs = webtext_df(spark, 300, parts=2)
+    tbl = ManifestTable(str(tmp_path), "blocks")
+    encode_with_checkpoint(spark, docs, tbl, n_parts=4, run_id="r1")
+    r = _stream_reader(spark, tmp_path, max_files_per_trigger=1,
+                       stream_id="s1")
+    assert r._load_state() is None  # no state file yet: fresh
+    path = r._state_path()
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        f.write(content)
+    fresh = _stream_reader(spark, tmp_path, max_files_per_trigger=1,
+                           stream_id="s1")
+    with pytest.raises(ValueError, match="cursor state"):
+        fresh.latestOffset()
+
+
 def test_stream_bounded_bootstrap_batches_and_restart(spark, tmp_path):
     """e2e pin (VERDICT r8 #1): a bootstrap under max_files_per_trigger
     lands in multiple micro-batches with exact totals, and a restart

@@ -447,7 +447,12 @@ def test_semantic_dedup_numpy_dominance_matches_fold(spark):
             for i in range(400)]
     rows += [(1_000 + i, [0.0] * dim) for i in range(3)]   # zero-norm
     rows += [(2_000 + i, list(rows[5][1])) for i in range(3)]  # exact dups
-    emb = spark.createDataFrame(rows,
+    # NULL and off-dimension vectors: the JVM fold gave them a NULL
+    # cosine, so they neither dominate nor are dominated — even the
+    # one-longer copy of row 5 and its prefix survive, and row 5 too
+    planted = [(3_000, None), (3_001, list(rows[5][1]) + [0.0]),
+               (3_002, list(rows[5][1])[:dim - 1]), (3_003, [])]
+    emb = spark.createDataFrame(rows + planted,
                                 "vec_id bigint, embedding array<double>")
     cents = np.stack([np.asarray(rows[i][1]) for i in range(4)])
     thr = 0.35
@@ -476,6 +481,6 @@ def test_semantic_dedup_numpy_dominance_matches_fold(spark):
         for j, (jid, jv) in enumerate(members):
             if not any(cos(iv, jv) >= thr for _, iv in members[:j]):
                 keep.add(jid)
-    assert got == keep
+    assert got == keep | {i for i, _ in planted}
     assert {1_000, 1_001, 1_002} <= got  # zero vectors: cos 0.0, survive
     assert not ({2_000, 2_001, 2_002} & got)  # dominated by row 5
