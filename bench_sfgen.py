@@ -12,11 +12,11 @@ Replication rules:
   like a real bigger sf).
 - documents.text: in replica i>0 every token AFTER the first gets an
   `i` prefix (space -> " i"). The first token of each document is not
-  tagged, so shingles that lie wholly inside it are shared with the
-  base copy: shingle sets are nearly, not fully, disjoint across
-  replicas. Near-dup structure per replica stays close to sf0.1 and
-  scales about linearly, instead of every doc acquiring 9 artificial
-  twins.
+  tagged, so that token, and every character shingle inside it, is
+  shared with the base copy: token and shingle sets are nearly, not
+  fully, disjoint across replicas. Near-dup structure per replica
+  stays close to sf0.1 and scales about linearly, instead of every doc
+  acquiring 9 artificial twins.
 - nation/region are fixed dimension tables, copied once.
 
 Usage: python bench_sfgen.py [K] [outdir]   (default 10 /tmp/sf1x)

@@ -353,32 +353,36 @@ _BLOCK_ROWS_MEMO: ContextVar[dict | None] = ContextVar("_BLOCK_ROWS_MEMO",
                                                        default=None)
 
 
-def _block_rows(path: str):
-    """Every block row of ``path``, narrow columns only — footer + ~1%
-    of the file's bytes. Columns a file's generation predates
+def _block_rows(path: str, columns=_BLOCK_ROW_COLS):
+    """Every block row of ``path``, narrow ``columns`` only — footer +
+    ~1% of the file's bytes. Columns a file's generation predates
     (``parts``, ``key_bloom``) are simply absent."""
     import pyarrow.dataset as ds
 
     d = ds.dataset(path, format="parquet")
     return d.to_table(
-        columns=[c for c in _BLOCK_ROW_COLS if c in d.schema.names],
+        columns=[c for c in columns if c in d.schema.names],
         use_threads=False)
 
 
-def _read_block_rows(files: list[str]) -> list:
-    """``_block_rows`` of every file, read on a small thread pool (pyarrow
-    releases the GIL) — the driver-side form of one narrow scan. Within
-    a ``point_lookup`` each file is read once."""
+def _read_block_rows(files: list[str], columns=None) -> list:
+    """``_block_rows`` of every file (``columns``, default the lookup's
+    ``_BLOCK_ROW_COLS``), read on a small thread pool (pyarrow releases
+    the GIL) — the driver-side form of one narrow scan. Within a
+    ``point_lookup`` each file is read once."""
     from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
-    memo = _BLOCK_ROWS_MEMO.get()
+    read = _block_rows if columns is None else partial(_block_rows,
+                                                       columns=columns)
+    memo = _BLOCK_ROWS_MEMO.get() if columns is None else None
     memo = {} if memo is None else memo
     todo = [f for f in dict.fromkeys(files) if f not in memo]
     if len(todo) <= 4:  # a pool costs more than it saves
-        memo.update((f, _block_rows(f)) for f in todo)
+        memo.update((f, read(f)) for f in todo)
     else:
         with ThreadPoolExecutor(max_workers=min(16, len(todo))) as ex:
-            memo.update(zip(todo, ex.map(_block_rows, todo)))
+            memo.update(zip(todo, ex.map(read, todo)))
     return [memo[f] for f in files]
 
 
@@ -879,15 +883,9 @@ def _repair_once(spark: SparkSession, tbl: ManifestTable,
                    .drop(PART_COL))
         blocks = encode_df(src, key=key, n_parts=n_parts,
                            salt=salt, salt_by=salt_by)
-        job_dir = tbl.new_data_path()
-        blocks.write.mode("overwrite").parquet(job_dir)
-        new_files = ManifestTable.list_written_files(job_dir)
-        rec = _run_record(spark, job_dir, new_files,
-                          run_id=f"repair-{snap.snapshot_id}",
-                          fingerprint=cur_fp, n_parts=n_parts, salt=salt,
-                          salt_by=salt_by, key=key,
-                          bloom_bits=getattr(blocks, "_eel_bloom_bits",
-                                             None))
+        new_files, rec = write_run(blocks, tbl,
+                                   f"repair-{snap.snapshot_id}", cur_fp,
+                                   n_parts, salt, salt_by, key)
     # else: every damaged file covered ZERO parts (hash-empty writes) —
     # dropping them from the snapshot IS the repair
     props = dict(snap.properties)
@@ -968,11 +966,14 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
     parts = _lookup_parts(snap, run, cols, vals, types, aliases_by_col,
                           salt_by_value)
     names_by_col = {c: {c} | aliases_by_col[c] for c in cols}
+    # the range, summary-bloom and block tiers compare in the stored unit
+    probe = [_stored_probe(v, types.get(c)) for c, v in zip(cols, vals)]
     memo = _BLOCK_ROWS_MEMO.set({})
     try:
-        files = lookup_files(spark, snap, key_value, key, parts,
-                             aliases=aliases_by_col[cols[0]])
-        planned = [_plan_block_groups(t, names_by_col, vals, parts)
+        files = lookup_files(spark, snap,
+                             probe[0] if isinstance(key, str) else probe,
+                             key, parts, aliases=aliases_by_col[cols[0]])
+        planned = [_plan_block_groups(t, names_by_col, probe, parts)
                    for t in _read_block_rows(files)]
     finally:
         _BLOCK_ROWS_MEMO.reset(memo)
@@ -998,6 +999,23 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
     if tombstones:
         rows = filter_tombstones(rows, load_tombstone_keys(tombstones))
     return spark.createDataFrame(rows, schema=schema)
+
+
+def _stored_probe(value, typ: str | None):
+    """``value`` in the unit the block stats, key ranges and blooms hold
+    for a ``typ`` key column (``codecs.base.int_view``): PySpark's own
+    conversion to epoch microseconds for a timestamp, to days for a
+    date. Other values pass through."""
+    from datetime import date, datetime
+
+    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
+
+    conv = {"timestamp": (datetime, TimestampType),
+            "timestamp_ntz": (datetime, TimestampNTZType),
+            "date": (date, DateType)}.get(typ)
+    if conv and isinstance(value, conv[0]):
+        return conv[1]().toInternal(value)
+    return value
 
 
 def _lookup_parts(snap, run: dict, cols: list[str], vals: list,
@@ -1310,40 +1328,14 @@ def encode_with_checkpoint(
                        key_bloom=key_bloom, bloom_cols=bloom_cols,
                        bloom_bits=bloom_bits)
 
-    job_dir = tbl.new_data_path()
-    blocks.write.mode("overwrite").parquet(job_dir)
-    files = ManifestTable.list_written_files(job_dir)
-
-    run = _run_record(spark, job_dir, files, run_id,
-                      cur_fp if cur_fp is not None
-                      else input_fingerprint(df, key),
-                      n_parts, salt, salt_by, key,
-                      bloom_bits=getattr(blocks, "_eel_bloom_bits",
-                                         bloom_bits))
+    files, run = write_run(blocks, tbl, run_id,
+                           cur_fp if cur_fp is not None
+                           else input_fingerprint(df, key),
+                           n_parts, salt, salt_by, key)
     if run is None:
         return {"run_id": run_id, "part_ids": [], "skipped_parts": sorted(done),
                 "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
-    from .table import CommitConflict, ddl_of
-
-    # the runs list is a read-modify-write: CAS + retry (r8 audit), or
-    # two concurrent committers would each append to the same stale
-    # list and the second would erase the first's lineage record
-    for _ in range(5):
-        snap = tbl.head(stage)
-        runs0 = snap.properties.get("runs") if snap else None
-        try:
-            tbl.commit(files, BLOCK_SCHEMA_DDL,
-                       {"runs": (runs0 or []) + [run],
-                        "row_schema_ddl": ddl_of(df)},
-                       mode="append", stage=stage,
-                       expect_properties={"runs": runs0})
-            break
-        except CommitConflict:
-            continue
-    else:
-        raise CommitConflict(
-            f"encode commit to {tbl.dir}: runs lineage kept changing "
-            f"under 5 retries")
+    _commit_run(tbl, files, run, df, stage, "encode commit")
     return run
 
 
@@ -1391,20 +1383,25 @@ def append_encode(spark: SparkSession, df: DataFrame, tbl: ManifestTable,
     blocks = encode_df(df, key=key, n_parts=n_parts, salt=salt,
                        salt_by=salt_by, profile=profile, shuffle=shuffle,
                        sort_by=sort_by, **encode_kw)
-    job_dir = tbl.new_data_path()
-    blocks.write.mode("overwrite").parquet(job_dir)
-    files = ManifestTable.list_written_files(job_dir)
-    run = _run_record(spark, job_dir, files, run_id,
-                      fingerprint=None, n_parts=n_parts, salt=salt,
-                      salt_by=salt_by, key=key,
-                      bloom_bits=getattr(blocks, "_eel_bloom_bits",
-                                         None))
+    files, run = write_run(blocks, tbl, run_id, None, n_parts, salt,
+                           salt_by, key)
     if run is None:
         return {"run_id": run_id, "part_ids": [], "n_rows": 0,
                 "raw_bytes": 0, "enc_bytes": 0}
+    _commit_run(tbl, files, run, df, stage, "append_encode")
+    return run
+
+
+def _commit_run(tbl: ManifestTable, files: list[str], run: dict,
+                df: DataFrame, stage: str | None, what: str) -> None:
+    """Append ``files`` and ``run`` (with ``df``'s row schema) to the
+    head of ``stage``. The runs list is a read-modify-write: CAS +
+    retry, or two concurrent committers would each append to the same
+    stale list and the second would erase the first's lineage
+    record."""
     from .table import CommitConflict, ddl_of
 
-    for _ in range(5):  # runs-list read-modify-write: CAS + retry
+    for _ in range(5):
         head = tbl.head(stage)
         runs0 = head.properties.get("runs") if head else None
         try:
@@ -1413,14 +1410,26 @@ def append_encode(spark: SparkSession, df: DataFrame, tbl: ManifestTable,
                         "row_schema_ddl": ddl_of(df)},
                        mode="append", stage=stage,
                        expect_properties={"runs": runs0})
-            break
+            return
         except CommitConflict:
             continue
-    else:
-        raise CommitConflict(
-            f"append_encode to {tbl.dir}: runs lineage kept changing "
-            f"under 5 retries")
-    return run
+    raise CommitConflict(f"{what} to {tbl.dir}: runs lineage kept "
+                         f"changing under 5 retries")
+
+
+def write_run(blocks: DataFrame, tbl: ManifestTable, run_id: str,
+              fingerprint: str | None, n_parts: int, salt: int,
+              salt_by: str | None, key) -> tuple[list[str], dict | None]:
+    """Write ``encode_df``'s ``blocks`` into a fresh data directory of
+    ``tbl`` — the one Spark job — and build their run record from the
+    written files in the driver: ``(files, run)``, ``run`` None for an
+    empty write. Nothing is committed."""
+    job_dir = tbl.new_data_path()
+    blocks.write.mode("overwrite").parquet(job_dir)
+    files = ManifestTable.list_written_files(job_dir)
+    return files, _run_record(files, run_id, fingerprint, n_parts, salt,
+                              salt_by, key,
+                              bloom_bits=blocks._eel_bloom_bits)
 
 
 def _fold_summaries(rows) -> dict:
@@ -1441,52 +1450,78 @@ def _fold_summaries(rows) -> dict:
     return out
 
 
-def _run_record(spark, job_dir: str, files: list[str], run_id: str,
-                fingerprint: str, n_parts: int, salt: int,
-                salt_by: str | None, key: str,
-                bloom_bits: int | None = None) -> dict | None:
-    """ONE scan, ONE action over freshly-written blocks: a grouped
-    aggregate on (file, parts, col, codec) — cardinality n_files x n_cols
-    x codecs, tiny — carries everything the run record needs (part ids,
-    rows, byte totals, codec mix) PLUS the per-file part coverage,
-    recorded in the manifest so point lookups prune files with ZERO I/O
-    (no footer pass at all). Parquet column pruning keeps the payload
-    bytes unread. Grouping on the EXACT parts array (banded 'local'
-    blocks span a sorted part run; part-aligned blocks carry [part_id])
-    keeps run part_ids and file coverage exact in every layout.
-    Returns None for an empty write."""
-    from .encode import SUMMARY_COL_PREFIX, effective_bloom_bits
+#: the block-row columns a run record folds: part membership, codec,
+#: value and byte counts, key stats, and the summary sentinels' words
+#: (never ``header`` or ``payload``)
+_RUN_RECORD_COLS = ("parts", "col", "codec", "n_values", "raw_bytes",
+                    "enc_bytes", "min_s", "max_s", "min_i", "max_i",
+                    "key_bloom")
 
-    stats = []
-    summary_rows = []
-    if files:
-        blocks = spark.read.parquet(job_dir)
-        # tier-0 sentinels (one per file per bloomed column) are lifted
-        # into the manifest and EXCLUDED from the stats aggregate (their
-        # synthetic col name would otherwise pollute first_col/codec_mix)
-        summary_rows = (blocks
-                        .filter(F.col("col").startswith(SUMMARY_COL_PREFIX))
-                        .select(F.input_file_name().alias("file"), "col",
-                                "key_bloom", "n_values")
-                        .collect())
-        stats = (blocks
-                 .filter(~F.col("col").startswith(SUMMARY_COL_PREFIX))
-                 .groupBy(F.input_file_name().alias("file"),
-                          "parts", "col", "codec")
-                 .agg(F.sum("n_values").alias("nv"),
-                      F.sum("raw_bytes").alias("raw"),
-                      F.sum("enc_bytes").alias("enc"),
-                      F.count("*").alias("cnt"),
-                      F.min("min_s").alias("mns"), F.max("max_s").alias("mxs"),
-                      F.min("min_i").alias("mni"), F.max("max_i").alias("mxi"),
-                      F.count("min_s").alias("cns"),
-                      F.count("min_i").alias("cni"))
-                 .collect())
+
+def _file_block_stats(files: list[str]) -> tuple[list, list]:
+    """(stats, summary_rows) of written block files, from one narrow
+    pyarrow read of each: one ``_merge_stats`` row per (file, parts,
+    col, codec) group, and the tier-0 sentinel rows apart (their
+    synthetic col names must stay out of the stats)."""
+    import pyarrow.compute as pc
+
+    from .encode import SUMMARY_COL_PREFIX
+
+    groups: dict[tuple, dict] = {}
+    summary_rows: list[dict] = []
+    for f, t in zip(files, _read_block_rows(files, _RUN_RECORD_COLS)):
+        sentinel = pc.starts_with(t.column("col"), SUMMARY_COL_PREFIX)
+        summary_rows += [
+            {"file": f, **r} for r in t.filter(sentinel).select(
+                ["col", "key_bloom", "n_values"]).to_pylist()]
+        t = t.filter(pc.invert(sentinel))
+        cols = t.select([c for c in t.column_names
+                         if c != "key_bloom"]).to_pydict()
+        for parts, col, codec, nv, raw, enc, mns, mxs, mni, mxi in zip(
+                *(cols[c] for c in _RUN_RECORD_COLS[:-1])):
+            _merge_stats(groups.setdefault(
+                (f, tuple(parts), col, codec),
+                {"file": f, "parts": parts, "col": col, "codec": codec,
+                 **_NO_STATS}),
+                {"nv": nv, "raw": raw, "enc": enc, "cnt": 1,
+                 "cns": int(mns is not None), "cni": int(mni is not None),
+                 "mns": mns, "mxs": mxs, "mni": mni, "mxi": mxi})
+    return list(groups.values()), summary_rows
+
+
+#: an empty ``_merge_stats`` accumulator
+_NO_STATS = {"nv": 0, "raw": 0, "enc": 0, "cnt": 0, "cns": 0, "cni": 0,
+             "mns": None, "mxs": None, "mni": None, "mxi": None}
+
+
+def _merge_stats(acc: dict, r) -> None:
+    """Fold one row's sums, counts and key min/max into ``acc`` as
+    Spark's sum/count/min/max aggregates do: NULL stats are skipped."""
+    for k in ("nv", "raw", "enc", "cnt", "cns", "cni"):
+        acc[k] += int(r[k])
+    for k, pick in (("mns", min), ("mxs", max), ("mni", min),
+                    ("mxi", max)):
+        if r[k] is not None:
+            acc[k] = r[k] if acc[k] is None else pick(acc[k], r[k])
+
+
+def _run_record(files: list[str], run_id: str,
+                fingerprint: str | None, n_parts: int, salt: int,
+                salt_by: str | None, key,
+                bloom_bits: int | None = None) -> dict | None:
+    """The lineage record of one write, folded in the driver from the
+    (file, parts, col, codec) groups of the files it wrote
+    (``_file_block_stats``, no Spark job; n_files x n_cols x codecs
+    rows): part ids, rows, byte totals and codec mix, plus the per-file
+    part coverage, key ranges, summary blooms and stats that let lookups
+    prune files with ZERO I/O. Grouping on the EXACT parts array keeps
+    part ids and coverage exact in every layout. None for an empty
+    write."""
+    from .encode import effective_bloom_bits, key_cols as _kc
+
+    stats, summary_rows = _file_block_stats(files)
     if not stats:
         return None
-
-    from .encode import key_cols as _kc
-
     kset = set(_kc(key))
     first_col = min(r["col"] for r in stats)
     codec_mix: dict[str, int] = {}
@@ -1508,38 +1543,17 @@ def _run_record(spark, job_dir: str, files: list[str], run_id: str,
         fs[2] += int(r["enc"])
         fp_sets.setdefault(base, set()).update(int(p) for p in r["parts"])
         if r["col"] in kset:
-            a = key_acc.setdefault((r["col"], base),
-                                   {"cnt": 0, "cns": 0, "cni": 0,
-                                    "mns": None, "mxs": None,
-                                    "mni": None, "mxi": None})
-            a["cnt"] += int(r["cnt"])
-            a["cns"] += int(r["cns"])
-            a["cni"] += int(r["cni"])
-            for lo_k, hi_k in (("mns", "mxs"), ("mni", "mxi")):
-                if r[lo_k] is not None:
-                    a[lo_k] = (r[lo_k] if a[lo_k] is None
-                               else min(a[lo_k], r[lo_k]))
-                if r[hi_k] is not None:
-                    a[hi_k] = (r[hi_k] if a[hi_k] is None
-                               else max(a[hi_k], r[hi_k]))
-    # Per-file KEY RANGE (min..max of the key column across the file's
-    # blocks) — the manifest-side lookup pruner for banded tables whose
-    # input arrives CLUSTERED by the key (time-ordered appends,
-    # monotonic ids, range-partitioned upstreams): the no-exchange
-    # layout preserves input clustering, so files cover disjoint key
-    # slices and a lookup opens ~1 file instead of all of them (part
-    # coverage is vacuous under hash part ids; BENCH.md round-5 lookup
-    # table). On hash-scattered input the ranges overlap harmlessly.
-    # Recorded ONLY when every key block in the file carries stats:
-    # string stats are omitted past 64 chars (parquet-style truncation
-    # would make max an invalid upper bound), and a range built from the
-    # other blocks would wrongly exclude the statless block's keys.
-    # Consumers treat a missing entry as keep — over-approximation safe,
-    # like part coverage.
-    # Composite keys record a range per COMPONENT column
-    # (file_key_ranges_cols); the legacy single-map field keeps carrying
-    # the PRIMARY (first) component so every existing consumer — lookup
-    # tiers, purge/upsert pruners, analyze-table — works unchanged.
+            _merge_stats(key_acc.setdefault((r["col"], base),
+                                            dict(_NO_STATS)), r)
+    # Per-file KEY RANGE (min..max of the key column over the file's
+    # blocks): the manifest-side lookup pruner for banded tables whose
+    # input arrives CLUSTERED by the key — the no-exchange layout keeps
+    # that clustering, so files cover disjoint key slices. Recorded ONLY
+    # when every key block in the file carries stats (strings past
+    # STATS_STR_LEN carry none, and a range from the other blocks would
+    # exclude their keys); a missing entry means keep. Composite keys
+    # record a range per COMPONENT (file_key_ranges_cols); the single
+    # map carries the PRIMARY component for every existing consumer.
     ranges_by_col: dict[str, dict[str, dict]] = {}
     for (col, base), a in key_acc.items():
         if a["cnt"] and a["cns"] == a["cnt"] and a["mns"] is not None:
@@ -1567,9 +1581,9 @@ def _run_record(spark, job_dir: str, files: list[str], run_id: str,
     return {
         "run_id": run_id,
         "part_ids": sorted({int(p) for r in stats for p in r["parts"]}),
-        "n_rows": sum(int(r["nv"]) for r in stats if r["col"] == first_col),
-        "raw_bytes": sum(int(r["raw"]) for r in stats),
-        "enc_bytes": sum(int(r["enc"]) for r in stats),
+        "n_rows": sum(fs[0] for fs in file_stats.values()),
+        "raw_bytes": sum(cb[0] for cb in col_bytes.values()),
+        "enc_bytes": sum(cb[1] for cb in col_bytes.values()),
         "codec_mix": codec_mix,
         # col -> [raw_bytes, enc_bytes]: per-column ratio accounting (the
         # signal that tells an operator WHICH column to re-profile/sort)
@@ -1673,12 +1687,8 @@ def _realign_once(spark: SparkSession, tbl: ManifestTable, schema_ddl: str,
     blocks = encode_df(df, key, n_parts, salt, salt_by, profile=profile,
                        codec_overrides=codec_overrides, shuffle=True,
                        sort_by=sort_by)
-    job_dir = tbl.new_data_path()
-    blocks.write.mode("overwrite").parquet(job_dir)
-    files = ManifestTable.list_written_files(job_dir)
-    run = _run_record(spark, job_dir, files, run_id, fp,
-                      n_parts, salt, salt_by, key,
-                      bloom_bits=getattr(blocks, "_eel_bloom_bits", None))
+    files, run = write_run(blocks, tbl, run_id, fp, n_parts, salt,
+                           salt_by, key)
     if run is None:
         raise ValueError("realign_table: empty table")
     # carry durable properties forward (r8 fix — the bare {"runs": [run]}

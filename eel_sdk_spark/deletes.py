@@ -367,7 +367,7 @@ def purge_deletes(spark: SparkSession, tbl: ManifestTable,
 
 def _purge_once(spark: SparkSession, tbl: ManifestTable,
                 schema_ddl: str, stage: str | None = None) -> dict:
-    from .checkpoint import _run_record
+    from .checkpoint import write_run
     from .encode import encode_df
     from .table import fold_renames
 
@@ -417,18 +417,10 @@ def _purge_once(spark: SparkSession, tbl: ManifestTable,
                                n_parts=run["n_parts"],
                                salt=run.get("salt", 1),
                                salt_by=run.get("salt_by"))
-            job_dir = tbl.new_data_path()
-            blocks.write.mode("overwrite").parquet(job_dir)
-            new_files = ManifestTable.list_written_files(job_dir)
-            rec = _run_record(spark, job_dir, new_files,
-                              run_id=f"purge-{snap.snapshot_id}",
-                              fingerprint=None,
-                              n_parts=run["n_parts"],
-                              salt=run.get("salt", 1),
-                              salt_by=run.get("salt_by"),
-                              key=run_key,
-                              bloom_bits=getattr(
-                                  blocks, "_eel_bloom_bits", None))
+            new_files, rec = write_run(
+                blocks, tbl, f"purge-{snap.snapshot_id}", None,
+                run["n_parts"], run.get("salt", 1), run.get("salt_by"),
+                run_key)
     props = dict(snap.properties)
     props["tombstones"] = []
     props["runs"] = runs + ([rec] if rec else [])
@@ -565,7 +557,7 @@ def upsert_rows(spark: SparkSession, tbl: ManifestTable,
 def _upsert_once(spark: SparkSession, tbl: ManifestTable,
                  incoming: DataFrame, schema_ddl: str,
                  readmit: bool, stage: str | None) -> dict:
-    from .checkpoint import _run_record
+    from .checkpoint import write_run
     from .encode import decode_files_df, encode_df
     from .table import fold_renames
 
@@ -653,31 +645,19 @@ def _upsert_once(spark: SparkSession, tbl: ManifestTable,
             blocks = encode_df(kept, key=key, n_parts=run["n_parts"],
                                salt=run.get("salt", 1),
                                salt_by=run.get("salt_by"))
-            job_dir = tbl.new_data_path()
-            blocks.write.mode("overwrite").parquet(job_dir)
-            files_a = ManifestTable.list_written_files(job_dir)
-            rec = _run_record(spark, job_dir, files_a,
-                              run_id=f"upsert-rewrite-{snap.snapshot_id}",
-                              fingerprint=None, n_parts=run["n_parts"],
-                              salt=run.get("salt", 1),
-                              salt_by=run.get("salt_by"), key=key,
-                              bloom_bits=getattr(
-                                  blocks, "_eel_bloom_bits", None))
+            files_a, rec = write_run(
+                blocks, tbl, f"upsert-rewrite-{snap.snapshot_id}", None,
+                run["n_parts"], run.get("salt", 1), run.get("salt_by"),
+                key)
             new_files += files_a
             recs.append(rec)
 
     n_in = incoming.count()
     blocks = encode_df(incoming, key=key, n_parts=run["n_parts"],
                        salt=run.get("salt", 1), salt_by=run.get("salt_by"))
-    job_dir = tbl.new_data_path()
-    blocks.write.mode("overwrite").parquet(job_dir)
-    files_b = ManifestTable.list_written_files(job_dir)
-    rec = _run_record(spark, job_dir, files_b,
-                      run_id=f"upsert-{snap.snapshot_id}",
-                      fingerprint=None, n_parts=run["n_parts"],
-                      salt=run.get("salt", 1), salt_by=run.get("salt_by"),
-                      key=key,
-                      bloom_bits=getattr(blocks, "_eel_bloom_bits", None))
+    files_b, rec = write_run(blocks, tbl, f"upsert-{snap.snapshot_id}",
+                             None, run["n_parts"], run.get("salt", 1),
+                             run.get("salt_by"), key)
     new_files += files_b
     if rec:
         recs.append(rec)

@@ -43,6 +43,11 @@ Streaming read
     sink-side cursor ``follow_once`` uses — the two consumers share the
     classification logic and differ only in who owns the offset.
 
+Bounded streams (``max_files_per_trigger`` / ``max_bytes_per_trigger``)
+    persist their cursor under ``<warehouse>/_streams/``, so they need a
+    warehouse on a local filesystem: the reader refuses, when it is
+    constructed, a path that is not a writable local directory.
+
 Writes stay on the Spark-level API (``checkpoint.encode_with_checkpoint``
 / ``append_encode``): the lineage commit the lookup tiers rely on (run
 records, part coverage, summary blooms) is built by those encode jobs,
@@ -379,12 +384,24 @@ class EelStreamReader(DataSourceStreamReader):
                 "eel stream: max_files_per_trigger/max_bytes_per_trigger "
                 "need option('stream_id', ...) — the bounded cursor is "
                 "persisted per stream under <warehouse>/_streams/")
+        if self._bounded:
+            root = self._warehouse()
+            if not (os.path.isdir(root) and os.access(root, os.W_OK)):
+                raise ValueError(
+                    f"eel stream: bounded mode persists its cursor under "
+                    f"<warehouse>/_streams/, but {root!r} is not a "
+                    f"writable local directory — bounded mode needs a "
+                    f"warehouse on a local filesystem")
         self._hwm: dict | None = None  # highest offset seen/returned
 
     # -- durable high-water mark (bounded mode only) ----------------------
 
+    def _warehouse(self) -> str:
+        path = self._options.get("path") or self._options.get("warehouse")
+        return _split_warehouse(str(path))[0]
+
     def _state_path(self) -> str:
-        return os.path.join(str(self._options["path"]), "_streams",
+        return os.path.join(self._warehouse(), "_streams",
                             f"{self._stream_id}.offset.json")
 
     def _load_state(self) -> dict | None:
@@ -518,7 +535,19 @@ class EelStreamReader(DataSourceStreamReader):
         if c0 is not None or c1 is not None:
             # bootstrap slice over snapshot s1's sorted file list:
             # (start {"sid":0} or {"sid":s1,"c":K}) -> end
-            # ({"sid":s1,"c":K'} or the plain {"sid":s1} final slice)
+            # ({"sid":s1,"c":K'} or the plain {"sid":s1} final slice).
+            # A cursor indexes ONE snapshot's list: a start that consumed
+            # a snapshot (plain sid > 0) or holds a cursor over another
+            # snapshot's list cannot be sliced against s1's — the state
+            # behind this end was lost or predates the checkpoint
+            if (c0 is None and s0 > 0) or (c0 is not None and s0 != s1):
+                raise ValueError(
+                    f"eel stream: window {start} -> {end} slices "
+                    f"snapshot {s1}'s file list from a start not minted "
+                    f"on that list (cursor state lost, or caps switched "
+                    f"on or off against an existing checkpoint) — it "
+                    f"would re-deliver rows; use a fresh "
+                    f"stream_id/checkpoint")
             files_all = self._bootstrap_files(tbl, s1)
             i0 = int(c0) if c0 is not None else 0
             i1 = int(c1) if c1 is not None else len(files_all)

@@ -133,23 +133,17 @@ def follow_once(spark, src: ManifestTable, sink: ManifestTable,
             return {"rows": 0, "cursor_from": cursor, "cursor_to": target,
                     "bootstrap": is_bootstrap, "deleted_keys": n_deletes}
         blocks = encode_df(df, key=key, n_parts=n_parts, profile=profile)
-        job_dir = sink.new_data_path()
-        blocks.write.mode("overwrite").parquet(job_dir)
-        files = ManifestTable.list_written_files(job_dir)
         # the sink is a first-class encoded table: commit a run record
         # (lineage for prune tiers, CDC classification, and chained
         # followers adopting key/n_parts) and the row schema (so
         # read_decoded(schema_ddl=None)/row_schema() work on the sink),
         # exactly as append_encode does
-        from ..checkpoint import _run_record
+        from ..checkpoint import write_run
         from ..table import ddl_of
 
-        rec = _run_record(spark, job_dir, files,
-                          run_id=f"follow-{consumer_id}-{target}",
-                          fingerprint=None, n_parts=n_parts, salt=1,
-                          salt_by=None, key=key,
-                          bloom_bits=getattr(blocks, "_eel_bloom_bits",
-                                             None))
+        files, rec = write_run(blocks, sink,
+                               f"follow-{consumer_id}-{target}", None,
+                               n_parts, 1, None, key)
         # the cursor guard already detects rival FOLLOWERS; guarding
         # the runs list too keeps a rival APPENDER's lineage record
         # from being erased by this read-modify-write (r8 audit). On a

@@ -552,3 +552,134 @@ def test_stream_bounded_bootstrap_batches_and_restart(spark, tmp_path):
     assert got.select("url").distinct().count() == n  # exactly-once
     assert len(batches) >= 3  # bounded: bootstrap spanned >=3 batches
     assert max(batches.values()) < n  # no slice carried the whole table
+
+
+def _drain(spark, src, ckpt, batches, want, settle=True, **caps):
+    """Run a foreachBatch stream over ``src`` (bounded by ``caps``) until
+    ``want`` rows landed — and, with ``settle``, no batch followed for
+    3 s, so a re-delivery after the last wanted row shows — the query
+    failed, or 120 s passed. Returns the query's exception, or None."""
+    import time as _time
+
+    def each(df, bid):
+        c = df.count()
+        if c:
+            # batch-id-keyed overwrite: a replayed batch replaces itself
+            df.write.mode("overwrite").parquet(f"{ckpt}-sink/bid={bid}")
+            batches[int(bid)] = c
+
+    rs = spark.readStream.format("eel")
+    for k, v in caps.items():
+        rs = rs.option(k, v)
+    q = (rs.load(src).writeStream.foreachBatch(each)
+         .option("checkpointLocation", ckpt)
+         .trigger(processingTime="50 milliseconds").start())
+    quiet = 0
+    for _ in range(1200):
+        if not q.isActive:
+            break
+        seen = len(batches)
+        _time.sleep(0.1)
+        quiet = quiet + 1 if len(batches) == seen else 0
+        if sum(batches.values()) >= want and (quiet >= 30 or not settle):
+            break
+    if q.isActive:
+        q.stop()
+    q.awaitTermination(60)
+    return q.exception()
+
+
+@pytest.mark.parametrize("case", ["caps_on_old_checkpoint",
+                                  "state_deleted", "state_corrupted"])
+def test_bounded_stream_restart_matrix(spark, tmp_path, case):
+    """Restarts that lose the bounded cursor's context while the table
+    has new snapshots: each either fails loudly or delivers every row
+    exactly once — never re-delivers a bootstrap slice."""
+    import os
+
+    n, m = 900, 150
+    src = str(tmp_path / "src")
+    tbl = ManifestTable(src, "blocks")
+    encode_with_checkpoint(spark, webtext_df(spark, n, parts=6), tbl,
+                           n_parts=6, run_id="r1")
+    register(spark)
+    ckpt = str(tmp_path / "ckpt")
+    caps = {"max_files_per_trigger": 1, "stream_id": "matrix"}
+    state = os.path.join(src, "_streams", "matrix.offset.json")
+    batches: dict[int, int] = {}
+    if case == "caps_on_old_checkpoint":
+        assert _drain(spark, src, ckpt, batches, n) is None  # unbounded
+        assert sum(batches.values()) == n
+    else:  # killed mid-bootstrap
+        assert _drain(spark, src, ckpt, batches, 1, settle=False,
+                      **caps) is None
+        assert 0 < sum(batches.values()) < n
+        if case == "state_deleted":
+            os.remove(state)
+        else:
+            with open(state, "w") as f:
+                f.write("{\"sid\": 1, \"c\"")
+    inc = (webtext_df(spark, n + m, parts=1)
+           .exceptAll(webtext_df(spark, n, parts=1)))
+    # the append's files sort FIRST in the head's file list, so a cursor
+    # sliced against it lands on files the bootstrap already delivered
+    tbl.new_data_path = lambda: os.path.join(tbl.data_dir, "0")
+    append_encode(spark, inc, tbl, run_id="r2")
+    err = _drain(spark, src, ckpt, batches, n + m, **caps)
+    if err is None:
+        got = spark.read.parquet(f"{ckpt}-sink")
+        assert got.count() == n + m
+        assert got.select("url").distinct().count() == n + m
+    else:
+        assert "eel stream" in str(err)
+
+
+def test_bounded_stream_needs_local_writable_warehouse(spark, tmp_path):
+    """Bounded mode persists its cursor under <warehouse>/_streams/, so
+    a warehouse that is not a writable local directory is refused when
+    the stream is constructed; unbounded streams are unaffected."""
+    from eel_sdk_spark.sources.eel_datasource import EelStreamReader
+
+    docs = webtext_df(spark, 200, parts=2)
+    tbl = ManifestTable(str(tmp_path / "wh"), "blocks")
+    encode_with_checkpoint(spark, docs, tbl, n_parts=2, run_id="r1")
+    schema = docs.schema
+    a_file = tmp_path / "plain.txt"
+    a_file.write_text("x")
+    caps = {"max_files_per_trigger": "1", "stream_id": "p"}
+    for path in (str(a_file), str(tmp_path / "missing"),
+                 "s3a://bucket/wh"):
+        with pytest.raises(ValueError, match="writable local directory"):
+            EelStreamReader({"path": path, **caps}, schema)
+        EelStreamReader({"path": path}, schema)  # unbounded: no state
+    r = EelStreamReader({"path": f"{tmp_path / 'wh'}:blocks", **caps},
+                        schema)
+    assert r._state_path() == str(tmp_path / "wh" / "_streams"
+                                  / "p.offset.json")
+
+
+def test_cursor_end_needs_a_start_minted_on_its_list(spark, tmp_path):
+    """A file cursor indexes one snapshot's file list: a window whose
+    start consumed a snapshot (plain sid > 0) or holds a cursor over
+    another snapshot's list raises instead of slicing the end's list,
+    in bounded and unbounded readers alike; windows within one list
+    still plan."""
+    docs = webtext_df(spark, 600, parts=4)
+    tbl = ManifestTable(str(tmp_path), "blocks")
+    encode_with_checkpoint(spark, docs, tbl, n_parts=4, run_id="r1")
+    b = tbl.current().snapshot_id
+    inc = (webtext_df(spark, 700, parts=1)
+           .exceptAll(webtext_df(spark, 600, parts=1)))
+    append_encode(spark, inc, tbl, run_id="r2")
+    h = tbl.current().snapshot_id
+    for opts in ({}, {"max_files_per_trigger": 1, "stream_id": "g"}):
+        r = _stream_reader(spark, tmp_path, **opts)
+        for start, end in (({"sid": b}, {"sid": h, "c": 1}),
+                           ({"sid": b, "c": 1}, {"sid": h, "c": 2}),
+                           ({"sid": b, "c": 1}, {"sid": h})):
+            with pytest.raises(ValueError, match="not minted"):
+                r.partitions(start, end)
+        r = _stream_reader(spark, tmp_path, **opts)
+        assert len(r.partitions({"sid": 0}, {"sid": h, "c": 1})) == 1
+        assert len(r.partitions({"sid": h, "c": 1}, {"sid": h, "c": 2})) == 1
+        assert r.partitions({"sid": b}, {"sid": h})  # the increment

@@ -521,3 +521,38 @@ def test_lookup_reads_each_file_once(spark, layouts, monkeypatch):
     files = tbl.current().files
     assert len(files) > 2
     assert sorted(opened) == sorted(files)
+
+
+@pytest.mark.parametrize("typ", ["timestamp", "date"])
+def test_lookup_timestamp_and_date_keys(spark, tmp_path, branch, typ,
+                                        monkeypatch):
+    """A datetime or date probe is compared in the stored unit (epoch
+    micros, days): the key-range tier prunes a time-ordered table to the
+    one file whose slice holds the value, and the rows are exact."""
+    ids = spark.range(0, 400, 1, 4)
+    k = (F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 3600)
+         if typ == "timestamp"
+         else F.date_add(F.lit("2020-01-01").cast("date"),
+                         F.col("id").cast("int")))
+    docs = ids.select(k.alias("k"), F.col("id").cast("string").alias("v"))
+    ddl = f"k {typ}, v string"
+    tbl = ManifestTable(str(tmp_path), typ)
+    encode_with_checkpoint(spark, docs, tbl, key="k", n_parts=8,
+                           run_id="t1")
+    assert len(tbl.current().files) == 4
+    kept = []
+    real = checkpoint.lookup_files
+
+    def spy(*a, **kw):
+        kept.append(real(*a, **kw))
+        return kept[-1]
+
+    monkeypatch.setattr(checkpoint, "lookup_files", spy)
+    for r in docs.collect()[::97]:
+        got = _assert_parity(spark, tbl, r.k, branch, monkeypatch,
+                             key="k", schema_ddl=ddl)
+        assert [g.v for g in got] == [r.v]
+        assert len(kept[-1]) == 1
+    miss = docs.agg(F.max("k")).first()[0].replace(year=2099)
+    assert _assert_parity(spark, tbl, miss, branch, monkeypatch, key="k",
+                          schema_ddl=ddl) == []
