@@ -55,57 +55,135 @@ def _check_key_type(schema, key: str, value,
 def lookup_files(spark: SparkSession, snap, key_value, key: str,
                  parts: set[int],
                  aliases: set[str] = frozenset()) -> list[str]:
-    """The file-pruning tiers of a point lookup, in increasing cost
-    order; returns the files whose payloads must be decoded. All of them
-    run in the driver (the Spark index consult for an index above the
-    planning budget is the one exception).
+    """The files a point lookup must decode: the part tier, then
+    :func:`plan_files` per key COMPONENT, intersected. ``key_value`` is
+    in the stored unit (``_stored_probe``); every tier runs in the
+    driver, so ``spark`` is unused.
 
-    1. Part coverage (manifest, zero I/O): exact per-file part sets.
-       Vacuous on banded tables — hash part ids make every file span
-       all parts.
-    2. Per-file KEY ranges (manifest, zero I/O): effective whenever the
-       INPUT arrived clustered by the key (time-ordered appends,
-       monotonic ids, range-partitioned upstreams — the no-exchange
-       layout preserves input clustering, so each file covers a narrow
-       disjoint slice). On hash-scattered input the ranges overlap and
-       prune nothing. Files without a recorded range are kept.
-    3. Per-file SUMMARY blooms (manifest, zero I/O) and the bloom INDEX
-       sidecar (a few narrow files), then per-block KEY BLOOMS (r6 — the
-       scattered-layout fix) for files the index does not cover: when
-       the manifest tiers left more than a couple of files, one narrow
-       pyarrow read of each candidate's key rows (footer + the bloom
-       words, ~1% of its bytes) answers "may this file hold the exact
-       key" at ~1% false positives, so the payload decode opens ~1 file
-       with NO layout migration. Blooms live IN the data files, not the
-       manifest: a per-file bloom scales with VALUE count (1M-row file
-       @10 bits/key = ~1.25 MB — untenable in a JSON manifest at 100k
-       files), and the narrow read is exactly how parquet/ORC consult
-       their own column blooms. Pre-bloom files are conservatively
-       kept. Reference analogue: eel-orc/.../OrcSink.scala:15-33
-       (bloomFilterColumns).
-    """
+    Part coverage comes from the manifest (zero I/O): exact per-file
+    part sets, vacuous on banded tables, where hash part ids make every
+    file span all parts. A file survives the components only if each
+    may hold its value; components may match in different rows, which
+    over-approximates the tuple (the residual filter stays exact)."""
     from .encode import key_cols, key_values
 
-    cols = key_cols(key)
-    vals = key_values(key, key_value)
     coverage: dict[str, list[int]] = {}
     for r in snap.properties.get("runs", []):
         coverage.update(r.get("file_parts", {}))
     # compaction rewrites files and re-records their coverage here
     coverage.update(snap.properties.get("file_parts_extra", {}))
     files = prune_files_by_part(snap.files, parts, coverage=coverage)
-    part_pruned = files
-    # tiers 2+3 run per key COMPONENT and intersect: a file survives
-    # only if every component's range admits it AND every component's
-    # bloom may contain its value (per-component blooms over-approximate
-    # the tuple — components may match in different rows — which is the
-    # standard conservative trade; the residual filter stays exact)
-    for c, v in zip(cols, vals):
-        al = (set(aliases) if isinstance(key, str)
-              else _key_aliases(snap, c))
-        files = _prune_files_one_component(spark, snap, files, c, v, al)
-    # empty parquet read is invalid; keep one file (filter drops all)
-    return files or part_pruned[:1] or list(snap.files)[:1]
+    for c, v in zip(key_cols(key), key_values(key, key_value)):
+        names = {c} | (set(aliases) if isinstance(key, str)
+                       else _key_aliases(snap, c))
+        files = plan_files(snap, files, names, tiers=4, values=[v])
+    return files
+
+
+def _family(v) -> str | None:
+    """The stats family a stored probe compares in: ``"s"`` for strings,
+    ``"i"`` for integers (timestamps and dates once stored), None for
+    values no key range, block stat or bloom covers."""
+    if isinstance(v, str):
+        return "s"
+    if isinstance(v, int) and not isinstance(v, bool):
+        return "i"
+    return None
+
+
+def plan_files(snap, files: list[str], names: set[str], *, tiers: int,
+               values: list | None = None,
+               interval: tuple | None = None) -> list[str]:
+    """The file planner every read shares: the ``files`` that may hold a
+    row whose key component — stored under any of ``names``, its current
+    and historical names — equals one of ``values`` or lies in the
+    closed ``interval`` ``(lo, hi)`` (None leaves a side open). Probes
+    are in the stored unit: ``_stored_probe`` converts a Python value,
+    ``deletes._stored_values`` an arrow column. Tiers 1 to ``tiers`` run
+    once each, cheapest first:
+
+    1. Manifest key ranges (zero I/O): each file's recorded ``[lo, hi]``
+       is bisected into the sorted values, or tested for overlap with
+       the interval. Effective when the input arrived clustered by the
+       key (time-ordered appends, monotonic ids).
+    2. Manifest summary blooms (zero I/O), values only.
+    3. The bloom-index sidecar, read with pyarrow in one pass for all
+       values, values only.
+    4. The per-block key blooms of the files the index does not cover,
+       one narrow read of each (``_read_block_rows``), values only.
+
+    An interval has tier 1 alone, so it needs ``tiers >= 1``. A file
+    survives when some value passes every tier: each tier tests only
+    the values the tiers before left in that file. A file that lacks a
+    tier's metadata passes it, and every file survives a probe that is
+    not a string or an integer. The result may be empty."""
+    from bisect import bisect_left, bisect_right
+
+    base = os.path.basename
+    ranges = _component_key_ranges(snap, names)
+    # a hash-empty output file records zero rows and no range: no key
+    empty = {b for r in snap.properties.get("runs", [])
+             for b, st in (r.get("file_stats") or {}).items() if not st[0]}
+    files = [f for f in files if base(f) not in empty]
+    if values is None:
+        lo, hi = interval
+        fams = {_family(v) for v in (lo, hi) if v is not None}
+        if len(fams) != 1 or None in fams or tiers < 1:
+            return list(files)
+        if lo is not None and hi is not None and lo > hi:
+            return []
+        fam = fams.pop()
+        return [f for f in files
+                if (r := ranges.get(base(f), {}).get(fam)) is None
+                or ((lo is None or lo <= r[1])
+                    and (hi is None or r[0] <= hi))]
+    vals = [v for v in values if v is not None]
+    fams = {_family(v) for v in vals}
+    if len(fams) > 1 or None in fams:
+        return list(files)
+    vals = sorted(set(vals))
+    fam = next(iter(fams), None)
+    alive: dict[str, set] = {}
+    for f in files:
+        r = ranges.get(base(f), {}).get(fam)
+        i, j = ((0, len(vals)) if r is None
+                else (bisect_left(vals, r[0]), bisect_right(vals, r[1])))
+        if i < j:  # tier 1 alone needs no per-file value sets
+            alive[f] = set(vals[i:j]) if tiers > 1 else set()
+    if tiers >= 2:
+        _narrow(alive, lambda fs, v: summary_bloom_survivors(
+            snap, fs, names, [v]))
+    covered: set[str] = set()
+    if tiers >= 3 and alive:
+        got = _bloom_index_hits(
+            snap, sorted(set().union(*alive.values())), names)
+        if got is not None:
+            covered, hits = got
+            _narrow(alive, lambda fs, v: [
+                f for f in fs
+                if base(f) not in covered or base(f) in hits[v]])
+    todo = {f: vs for f, vs in alive.items()
+            if tiers >= 4 and base(f) not in covered}
+    if todo:
+        kept = _bloom_scan_files(todo, names)
+        alive = {f: vs for f, vs in alive.items()
+                 if f not in todo or f in kept}
+    return [f for f in files if f in alive]
+
+
+def _narrow(alive: dict[str, set], keep) -> None:
+    """Run one value tier over ``alive`` (path -> the values it may still
+    hold): ``keep(files, v)`` returns the ``files`` that may hold ``v``.
+    A file left with no value is dropped."""
+    by_value: dict = {}
+    for f, vs in alive.items():
+        for v in vs:
+            by_value.setdefault(v, []).append(f)
+    for v, fs in by_value.items():
+        for f in set(fs).difference(keep(fs, v)):
+            alive[f].discard(v)
+    for f in [f for f, vs in alive.items() if not vs]:
+        del alive[f]
 
 
 def _component_key_ranges(snap, names: set[str]) -> dict[str, dict]:
@@ -133,65 +211,21 @@ def _component_key_ranges(snap, names: set[str]) -> dict[str, dict]:
 
 
 def prune_files_metadata(snap, files: list[str], key: str, key_value,
-                         aliases: set[str] = frozenset(),
-                         keep_floor: bool = True) -> list[str]:
-    """The ZERO-I/O, ZERO-Spark pruning tiers for one key component:
-    manifest per-file key ranges, then the manifest-resident per-file
-    SUMMARY blooms (tier 0). Runs entirely driver-side from snapshot
-    JSON — no SparkSession, no file opens — so it is also usable from
-    contexts without a session (the Python DataSource's pushFilters
-    planning hook). Conservative throughout: files without a recorded
-    range/summary are kept. ``keep_floor=True`` keeps one file when
-    everything pruned (the Spark decode path can't read an empty
-    parquet list); ``False`` allows an empty result — correct when all
-    files carried metadata and all excluded the value."""
-    names = {key} | set(aliases)
-    key_ranges = _component_key_ranges(snap, names)
-    fam = "s" if isinstance(key_value, str) else "i"
-    in_range = []
-    for f in files:
-        rng = key_ranges.get(os.path.basename(f), {}).get(fam)
-        if rng is None or rng[0] <= key_value <= rng[1]:
-            in_range.append(f)
-    # empty parquet read is invalid; keep one file (filter drops all)
-    files = in_range or (files[:1] if keep_floor else [])
-    # tier 0 (r8): manifest-resident per-file SUMMARY blooms — coarse
-    # fixed-size blooms the encoder stamped per file (sentinel rows ->
-    # _run_record -> snapshot JSON), probed DRIVER-SIDE before ANY file
-    # or index open. Files without a summary (pre-r8, saturated, or
-    # compaction-rewritten) are conservatively kept; the finer tiers
-    # below still run on what survives.
-    if len(files) > (2 if keep_floor else 0):
-        files = (summary_bloom_survivors(snap, files, names, [key_value])
-                 or (files[:1] if keep_floor else []))
-    # tier 0b (r9): the r7 bloom INDEX sidecar, consulted with pyarrow
-    # — sidecar files are narrow parquet, readable with NO SparkSession,
-    # so the session-less planning contexts (the DataSource's
-    # pushFilters worker) get the PRECISE per-block blooms once the
-    # coarse summaries saturate (~6k keys/file fills a 1 KB summary and
-    # tier 0 stops pruning). Size-gated: the index scales with value
-    # count, and a 100 TB table's index belongs on executors (the
-    # Spark-side consult in _prune_files_one_component), not in one
-    # driver read — above the budget this tier is skipped, never
-    # partial. Files absent from the index (appended after the build,
-    # compaction survivors) stay conservatively kept.
-    if len(files) > (2 if keep_floor else 0):
-        v = _bloom_index_verdicts_pyarrow(snap, key_value, names)
-        if v is not None:
-            covered, hits = v
-            files = [f for f in files
-                     if os.path.basename(f) not in covered
-                     or os.path.basename(f) in hits] \
-                or (files[:1] if keep_floor else [])
-    return files
+                         aliases: set[str] = frozenset()) -> list[str]:
+    """:func:`plan_files` for one value without its per-file tier: key
+    ranges, summary blooms and the bloom-index sidecar, read with
+    pyarrow. No SparkSession and no data-file opens, so it also runs in
+    contexts without a session. May return no file."""
+    return plan_files(snap, files, {key} | set(aliases), tiers=3,
+                      values=[key_value])
 
 
 def summary_bloom_survivors(snap, files: list[str], names: set[str],
                             values: list) -> list[str]:
-    """Tier 0: the files whose manifest SUMMARY bloom (under any of the
+    """Tier 2: the files whose manifest SUMMARY bloom (under any of the
     component's ``names``) may hold ANY of ``values``; files without a
-    summary are kept. The one summary probe for lookups and purge
-    planning. Decoded word arrays are cached ON the snapshot object:
+    summary (pre-summary, saturated or compaction-rewritten) are kept.
+    Decoded word arrays are cached ON the snapshot object:
     base64+frombuffer per file per probe was the consult's whole cost
     (~0.35 ms x files), so repeat probes of one snapshot test bits
     directly."""
@@ -211,132 +245,89 @@ def summary_bloom_survivors(snap, files: list[str], names: set[str],
                    for v in values)]
 
 
-#: driver-side pyarrow index-consult budget: a sidecar bigger than this
-#: is executor work (the Spark tier), not a planning-worker read
+#: a bloom-index sidecar up to this size is read whole and cached on the
+#: snapshot; a bigger one is streamed in record batches on every consult
 _BLOOM_INDEX_PLAN_BUDGET = 256 << 20
 
 
 def _bloom_index_verdicts_pyarrow(snap, key_value, names: set[str]):
-    """(covered basenames, hit basenames) from the bloom INDEX sidecar,
-    computed with pyarrow+numpy only — or None when the snapshot has no
-    matching index, the sidecar is unreadable (degrade, never fail), or
-    it exceeds the planning budget. Decoded word arrays are cached on
-    the snapshot object; per-value probes are vectorized over all block
-    rows at once."""
+    """Tier 3 for one value: (covered basenames, hit basenames), or
+    None — see :func:`_bloom_index_hits`."""
+    got = _bloom_index_hits(snap, [key_value], names)
+    return None if got is None else (got[0], got[1][key_value])
+
+
+def _bloom_index_hits(snap, values: list, names: set[str]):
+    """Tier 3: (covered basenames, value -> hit basenames) from the bloom
+    INDEX sidecar (``build_bloom_index``), computed with pyarrow+numpy
+    in ONE pass over the sidecar for all ``values`` — or None when the
+    snapshot has no index of the component or the sidecar is unreadable
+    (degrade, never fail). Files committed after the build are absent
+    from it. Each value's probe is vectorized over all block rows at
+    once; NULL or empty blooms are a hit."""
     idx = snap.properties.get("bloom_index")
-    if not idx or idx.get("key") not in names:
-        return None
-    idx_files = idx.get("files") or []
-    if not idx_files:
+    if not idx or idx.get("key") not in names or not idx.get("files"):
         return None
     import numpy as _np
+    import pyarrow.parquet as _pq
 
     from .encode import BLOOM_K, bloom_probe_seeds
 
+    idx_files = idx["files"]
     cache = getattr(snap, "_bix_cache", None)
-    ckey = tuple(idx_files)
-    if cache is None or cache[0] != ckey:
-        try:
-            if sum(os.path.getsize(f)
-                   for f in idx_files) > _BLOOM_INDEX_PLAN_BUDGET:
-                return None
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-
-            t = _pa.concat_tables(
-                _pq.read_table(f, columns=["file", "key_bloom"],
-                               use_threads=False)
-                for f in idx_files)
-        except Exception:
-            return None  # accelerator tier: degrade to coarser tiers
-        arr = t.column("key_bloom").combine_chunks()
-        offsets = arr.offsets.to_numpy().astype(_np.int64)
-        values = arr.values.to_numpy(zero_copy_only=False) \
-            .astype(_np.int64).view(_np.uint64)
-        nulls = _np.asarray(arr.is_null())
-        fl = _np.array(t.column("file").to_pylist(), dtype=object)
-        uniq, inv = _np.unique(fl, return_inverse=True)
-        cache = (ckey, offsets, values, nulls, uniq, inv)
-        snap._bix_cache = cache
-    _, offsets, values, nulls, uniq, inv = cache
-    sizes = offsets[1:] - offsets[:-1]
-    m = _np.maximum(sizes * 64, 1)
-    valid = (~nulls) & (sizes > 0)
-    h1, h2 = bloom_probe_seeds(key_value)
-    hit = _np.ones(len(sizes), dtype=bool)
-    for i in range(BLOOM_K if values.size else 0):
-        p = (h1 + i * h2) % m
-        widx = _np.clip(offsets[:-1] + (p >> 6), 0, len(values) - 1)
-        bits = ((values[widx] >> (p & 63).astype(_np.uint64))
-                & _np.uint64(1)).astype(bool)
-        # NULL / empty blooms are conservatively a hit (same semantics
-        # as encode.bloom_may_contain's isNull() branch)
-        hit &= _np.where(valid, bits, True)
-    agg = _np.zeros(len(uniq), dtype=bool)
-    _np.logical_or.at(agg, inv, hit)
-    return set(uniq.tolist()), set(uniq[agg].tolist())
-
-
-def _prune_files_one_component(spark: SparkSession, snap,
-                               files: list[str], key: str, key_value,
-                               aliases: set[str]) -> list[str]:
-    """Range tier + bloom tiers (index sidecar, per-file key-row read)
-    for one key component over an already part-pruned candidate list."""
-    names = {key} | set(aliases)
-    files = prune_files_metadata(snap, files, key, key_value,
-                                 aliases=aliases)
-    if len(files) <= 2:
-        return files
-    keep: set[str] = set()
-    uncovered = files
-    idx = snap.properties.get("bloom_index")
-    if idx and idx.get("key") in names:
-        # tier 3a (r7): manifest-registered BLOOM INDEX sidecar — the
-        # per-block key blooms copied into a handful of narrow index
-        # files at build_bloom_index time, so the consult opens O(1)
-        # index files instead of one footer per candidate (at 512 files
-        # the per-file footer opens were 1.9 s of a 3.0 s lookup,
-        # BENCH.md round-7). Files committed AFTER the index build are
-        # absent from it and fall through to the per-file read below —
-        # append-safe without invalidation. The driver-side verdicts are
-        # the ones prune_files_metadata already cached on the snapshot;
-        # an index above the planning budget is consulted on executors.
-        v = (_bloom_index_verdicts_pyarrow(snap, key_value, names)
-             or _bloom_index_verdicts_spark(spark, idx, key_value))
-        want = {os.path.basename(f) for f in files}
-        keep = v[1] & want
-        uncovered = [f for f in files if os.path.basename(f) not in v[0]]
-    if uncovered:
-        scanned = _bloom_scan_files(spark, uncovered, key, key_value,
-                                    aliases=aliases)
-        if scanned is None:  # pre-bloom table: keep them all
-            scanned = {os.path.basename(f) for f in uncovered}
-        keep |= scanned
-    return [f for f in files if os.path.basename(f) in keep] or files[:1]
-
-
-def _bloom_index_verdicts_spark(spark: SparkSession, idx: dict,
-                                key_value) -> tuple[set, set]:
-    """(covered, hit) basenames from a bloom index too big for the
-    driver-side consult, scanned on executors. Deleted or unreadable
-    index files degrade to (nothing covered) — the per-file read then
-    answers, never fails the lookup: the index is an accelerator, not a
-    correctness dependency."""
-    from .encode import bloom_may_contain
-
-    # no candidate-set filter pushed into the scan: an IN over 100k file
-    # literals is a bigger plan than the index itself — the per-file
-    # verdicts are tiny and the intersection happens driver-side
+    covered: set[str] = set()
+    hits: dict = {v: set() for v in values}
     try:
-        verdicts = (spark.read.parquet(*idx["files"])
-                    .groupBy("file")
-                    .agg(F.max(bloom_may_contain(key_value)
-                               .cast("int")).alias("hit"))
-                    .collect())
+        if cache is not None and cache[0] == tuple(idx_files):
+            chunks = [cache[1]]
+        elif sum(os.path.getsize(f)
+                 for f in idx_files) > _BLOOM_INDEX_PLAN_BUDGET:
+            chunks = (_index_arrays(pa.Table.from_batches([b]))
+                      for f in idx_files
+                      for b in _pq.ParquetFile(f).iter_batches(
+                          columns=["file", "key_bloom"]))
+        else:
+            chunks = [_index_arrays(pa.concat_tables(
+                _pq.read_table(f, columns=["file", "key_bloom"],
+                               use_threads=False) for f in idx_files))]
+            snap._bix_cache = (tuple(idx_files), chunks[0])
+        seeds = {v: bloom_probe_seeds(v) for v in values}
+        for offsets, words, nulls, uniq, inv in chunks:
+            sizes = offsets[1:] - offsets[:-1]
+            m = _np.maximum(sizes * 64, 1)
+            valid = (~nulls) & (sizes > 0)
+            covered.update(uniq.tolist())
+            for v, (h1, h2) in seeds.items():
+                hit = _np.ones(len(sizes), dtype=bool)
+                for i in range(BLOOM_K if words.size else 0):
+                    p = (h1 + i * h2) % m
+                    widx = _np.clip(offsets[:-1] + (p >> 6), 0,
+                                    len(words) - 1)
+                    bits = ((words[widx] >> (p & 63).astype(_np.uint64))
+                            & _np.uint64(1)).astype(bool)
+                    hit &= _np.where(valid, bits, True)
+                agg = _np.zeros(len(uniq), dtype=bool)
+                _np.logical_or.at(agg, inv, hit)
+                hits[v].update(uniq[agg].tolist())
     except Exception:
-        return set(), set()
-    return ({r["file"] for r in verdicts},
-            {r["file"] for r in verdicts if r["hit"]})
+        return None  # accelerator tier: degrade to the other tiers
+    return covered, hits
+
+
+def _index_arrays(t):
+    """A bloom-index table as the numpy arrays the probe tests: bloom
+    word offsets, words, null flags, distinct files and each row's
+    file."""
+    import numpy as _np
+
+    arr = t.column("key_bloom").combine_chunks()
+    offsets = arr.offsets.to_numpy().astype(_np.int64)
+    values = arr.values.to_numpy(zero_copy_only=False) \
+        .astype(_np.int64).view(_np.uint64)
+    nulls = _np.asarray(arr.is_null())
+    fl = _np.array(t.column("file").to_pylist(), dtype=object)
+    uniq, inv = _np.unique(fl, return_inverse=True)
+    return offsets, values, nulls, uniq, inv
 
 
 #: the narrow block-row columns a lookup plans from: group identity,
@@ -394,41 +385,42 @@ def _rows_of(table, names):
                                  value_set=pa.array(sorted(names))))
 
 
-def _bloom_scan_files(spark: SparkSession, files: list[str], key: str,
-                      key_value,
-                      aliases: set[str] = frozenset()) -> set[str] | None:
-    """Tier 3b: per-file key BLOOMS, read in the driver (footers + the
-    key blocks' bloom words; ``spark`` is unused). Returns the basenames
-    of files with a key block whose bloom may hold ``key_value`` — a
-    file whose generation predates blooms, or whose block carries none,
-    is kept — or None when no candidate carries blooms at all (caller
-    keeps everything)."""
+
+def _bloom_scan_files(alive: dict[str, set],
+                      names: set[str]) -> dict[str, set]:
+    """Tier 4: ``alive`` (path -> the values it may still hold) narrowed
+    by each file's per-block key BLOOMS, read in the driver (footer +
+    the key blocks' bloom words, ~1% of the file's bytes) — the
+    hash-scattered layout's tier, where ranges overlap. A block without
+    a bloom (a pre-bloom generation, ``key_bloom=False``) may hold any
+    value; a file with no block of the key holds none. Blooms live in
+    the data files, not the manifest: a bloom scales with value count
+    (1M-row file @10 bits/key = ~1.25 MB). Reference analogue:
+    eel-orc/.../OrcSink.scala:15-33 (bloomFilterColumns)."""
     from .encode import words_may_contain
 
-    if not isinstance(key_value, (str, int)):
-        return None  # blooms hash strings and ints only
-    out: set[str] = set()
-    any_bloom = False
-    for f, t in zip(files, _read_block_rows(files)):
-        t = _rows_of(t, {key} | set(aliases))
-        if "key_bloom" not in t.column_names:
-            if t.num_rows:
-                out.add(os.path.basename(f))
-            continue
-        any_bloom = True
-        if any(w is None or words_may_contain(w, key_value)
-               for w in t.column("key_bloom").to_pylist()):
-            out.add(os.path.basename(f))
-    return out if any_bloom else None
+    out: dict[str, set] = {}
+    for (f, vs), t in zip(alive.items(), _read_block_rows(list(alive))):
+        t = _rows_of(t, names)
+        words = (t.column("key_bloom").to_pylist()
+                 if "key_bloom" in t.column_names else [None] * t.num_rows)
+        kept = {v for v in vs
+                if any(not w or words_may_contain(w, v) for w in words)}
+        if kept:
+            out[f] = kept
+    return out
 
 
 def _plan_block_groups(table, names_by_col: dict[str, set[str]],
-                       values: list, parts: set[int]) -> tuple[set, int]:
-    """The block groups of one file a point lookup must decode, and
-    their encoded bytes over every column, from its block rows
-    (``_block_rows``): a group survives when, for EVERY key component,
-    its block of that column is a member of a wanted part, its min/max
-    stats admit the value, and its bloom may hold it — missing stats or
+                       bounds: list[tuple],
+                       parts: set[int] | None) -> tuple[set, int]:
+    """The block groups of one file a read must decode, and their encoded
+    bytes over every column, from its block rows (``_block_rows``): a
+    group survives when, for EVERY key component, its block of that
+    column is a member of a wanted part (``parts``; None wants all), its
+    min/max stats meet the component's closed ``(lo, hi)`` bounds (in
+    the stored unit; None leaves a side open, equality is ``lo == hi``)
+    and, for equality, its bloom may hold the value — missing stats or
     blooms are conservatively a pass. Groups are ``(part_id, block_seq,
     writer_uid)``, the 3-key identity that keeps banded writers'
     same-seq groups apart."""
@@ -442,23 +434,24 @@ def _plan_block_groups(table, names_by_col: dict[str, set[str]],
     passed: dict[tuple, set[int]] = {}
     for r in range(n):
         i = comp_of[cols["col"][r]]
-        v = values[i]
+        lo, hi = bounds[i]
         # pre-banding generations have no parts column: one part a block
-        if parts.isdisjoint(cols.get("parts", none)[r]
-                            or [cols["part_id"][r]]):
+        if parts is not None and parts.isdisjoint(
+                cols.get("parts", none)[r] or [cols["part_id"][r]]):
             continue
-        if isinstance(v, (str, int)):  # the values stats and blooms cover
-            fam = "s" if isinstance(v, str) else "i"
-            lo = cols.get(f"min_{fam}", none)[r]
-            hi = cols.get(f"max_{fam}", none)[r]
+        fam = _family(hi if lo is None else lo)
+        if fam is not None:  # the values stats and blooms cover
+            mn = cols.get(f"min_{fam}", none)[r]
+            mx = cols.get(f"max_{fam}", none)[r]
             w = cols.get("key_bloom", none)[r]
-            if ((lo is not None and v < lo) or (hi is not None and v > hi)
-                    or (w and not words_may_contain(w, v))):
+            if ((mn is not None and hi is not None and hi < mn)
+                    or (mx is not None and lo is not None and lo > mx)
+                    or (lo == hi and w and not words_may_contain(w, lo))):
                 continue
         g = (cols["part_id"][r], cols["block_seq"][r],
              cols["writer_uid"][r])
         passed.setdefault(g, set()).add(i)
-    groups = {g for g, ok in passed.items() if len(ok) == len(values)}
+    groups = {g for g, ok in passed.items() if len(ok) == len(bounds)}
     if not groups or "enc_bytes" not in table.column_names:
         return groups, 0
     ids = zip(*(table.column(c).to_pylist()
@@ -475,16 +468,6 @@ def _key_aliases(snap, key: str) -> set[str]:
 
     fold = fold_renames(snap.properties.get("column_renames", []))
     return {h for h, c in fold.items() if c == key}
-
-
-def _relabel_blocks(blocks, aliases: set[str], key: str):
-    """Rewrite historical key names to the current one on a blocks
-    DataFrame, so stats/bloom pruning and decode see ONE name."""
-    if not aliases:
-        return blocks
-    return blocks.withColumn(
-        "col", F.when(F.col("col").isin(*aliases), F.lit(key))
-        .otherwise(F.col("col")))
 
 
 def build_bloom_index(spark: SparkSession, tbl: ManifestTable,
@@ -909,28 +892,32 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
                  run_index: int = -1) -> DataFrame:
     """Key point-lookup against an encoded table, planned and decoded
     in the driver process — no Spark job for a lookup whose planned
-    block groups fit one task's input. Returns a local DataFrame of the matching
-    rows.
+    block groups fit one task's input. Returns a local DataFrame of the
+    matching rows.
 
-    1. Part ids come from ``encode.xxhash64``, the Python twin of the
+    1. The probe is converted once to the stored unit
+       (``_stored_probe``: epoch micros for a timestamp, days for a
+       date); every tier below compares in it.
+    2. Part ids come from ``encode.xxhash64``, the Python twin of the
        encoder's hash chain (``with_part_id``), for every historical
-       width of a widened key (strings, integers and doubles). A key
-       type the twin does not cover keeps every part.
-    2. ``lookup_files`` prunes FILES: part coverage, key ranges and
-       summary blooms from the manifest, then the bloom index sidecar or
-       each candidate's key-block blooms.
-    3. The narrow block rows of each kept file (read once per lookup,
-       shared with the per-file bloom tier) plan its BLOCK GROUPS: part membership, key min/max stats and key blooms per
-       group (``sort_by=[key]`` makes the stats disjoint, so a lookup
-       decodes ~one block instead of the whole part).
-    4. ``decode_file_batches`` decodes only the planned groups,
-       CRC-verified, and keeps the rows equal to the key.
-    5. Live tombstones are checked against those rows, with the
-       anti-join's semantics (a NULL key never matches).
+       width of a widened key (strings, integers, doubles, timestamps
+       and dates). A key type the twin does not cover keeps every part.
+    3. ``lookup_files`` prunes FILES: part coverage, then
+       :func:`plan_files` (key ranges, summary blooms, the bloom-index
+       sidecar, each remaining file's key-block blooms).
+    4. The narrow block rows of each kept file (read once per lookup,
+       shared with the per-file bloom tier) plan its BLOCK GROUPS: part
+       membership, key min/max stats and key blooms per group
+       (``sort_by=[key]`` makes the stats disjoint, so a lookup decodes
+       ~one block instead of the whole part).
+    5. ``decode_file_batches`` decodes only the planned groups,
+       CRC-verified, and keeps the rows equal to the key; live
+       tombstones are then dropped with the anti-join's semantics (a
+       NULL key never matches).
 
     When the planned groups span several files and their encoded bytes
     exceed ``spark.sql.files.maxPartitionBytes`` — more than Spark
-    would hand one task — steps 4-5 run as one ``decode_files_df`` job
+    would hand one task — step 5 runs as one ``decode_files_df`` job
     over the same plan, its tasks one file each, and the key-filtered
     rows are collected. A one-file plan stays in the driver: the job
     would decode it in one task after paying the job's fixed cost.
@@ -944,11 +931,7 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
     decoded (salt/n_parts of the table — still pruned)."""
     from pyspark.sql.types import StructType
 
-    from .deletes import (filter_tombstones, load_tombstone_keys,
-                          tombstone_specs)
-    from .encode import (decode_context, decode_file_batches,
-                         decode_files_df, key_cols, key_values)
-    from .table import fold_renames
+    from .encode import key_cols, key_values
 
     snap = tbl.current()
     if schema_ddl is None:
@@ -961,33 +944,57 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
     for c, v in zip(cols, vals):
         _check_key_type(schema, c, v, "point_lookup")
     aliases_by_col = {c: _key_aliases(snap, c) for c in cols}
-    run = snap.properties.get("runs", [])[run_index]
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
-    parts = _lookup_parts(snap, run, cols, vals, types, aliases_by_col,
-                          salt_by_value)
-    names_by_col = {c: {c} | aliases_by_col[c] for c in cols}
-    # the range, summary-bloom and block tiers compare in the stored unit
     probe = [_stored_probe(v, types.get(c)) for c, v in zip(cols, vals)]
+    run = snap.properties.get("runs", [])[run_index]
+    parts = _lookup_parts(snap, run, cols, probe, types, aliases_by_col,
+                          salt_by_value)
     memo = _BLOCK_ROWS_MEMO.set({})
     try:
         files = lookup_files(spark, snap,
                              probe[0] if isinstance(key, str) else probe,
                              key, parts, aliases=aliases_by_col[cols[0]])
-        planned = [_plan_block_groups(t, names_by_col, probe, parts)
-                   for t in _read_block_rows(files)]
+        return _serve_plan(spark, snap, schema, schema_ddl, files,
+                           {c: {c} | aliases_by_col[c] for c in cols},
+                           [(p, p) for p in probe], parts,
+                           {c: (v, v) for c, v in zip(cols, vals)},
+                           lazy=False)
     finally:
         _BLOCK_ROWS_MEMO.reset(memo)
+
+
+def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
+                files: list[str], names_by_col: dict[str, set[str]],
+                bounds: list[tuple], parts: set[int] | None,
+                match: dict, lazy: bool) -> DataFrame:
+    """Plan the block groups of ``files`` (``_plan_block_groups`` over
+    the stored-unit ``bounds``) and decode only them, keeping the rows
+    inside ``match`` (column -> ``(lo, hi)`` in the probe's own values)
+    and dropping live tombstones. The plan is decoded in the driver
+    unless its planned bytes exceed ``spark.sql.files.maxPartitionBytes``
+    and it spans several files or is ``lazy``; then it runs as one
+    ``decode_files_df`` job — collected, or with ``lazy`` returned
+    unrun with the tombstones anti-joined."""
+    from .deletes import (apply_deletes, filter_tombstones,
+                          load_tombstone_keys, tombstone_specs)
+    from .encode import decode_context, decode_file_batches, decode_files_df
+    from .table import fold_renames
+
+    planned = [_plan_block_groups(t, names_by_col, bounds, parts)
+               for t in _read_block_rows(files)]
     plan = {f: g for f, (g, _) in zip(files, planned) if g}
     renames = fold_renames(snap.properties.get("column_renames", []))
-    match = dict(zip(cols, vals))
     col_order, arrow_types, alias_of = decode_context(schema, renames)
     arrow_schema = pa.schema([(c, arrow_types[c]) for c in col_order])
     task_bytes = spark._jsparkSession.sessionState().conf() \
         .filesMaxPartitionBytes()
-    if len(plan) > 1 and sum(b for _, b in planned) > task_bytes:
-        rows = decode_files_df(spark, list(plan), schema_ddl,
-                               renames=renames, groups=plan,
-                               match=match).toArrow().cast(arrow_schema)
+    planned_bytes = sum(b for _, b in planned)
+    if (lazy or len(plan) > 1) and planned_bytes > task_bytes:
+        df = decode_files_df(spark, list(plan), schema_ddl,
+                             renames=renames, groups=plan, match=match)
+        if lazy:
+            return apply_deletes(spark, df, snap).select(*col_order)
+        rows = df.toArrow().cast(arrow_schema)
     else:
         rows = pa.Table.from_batches(
             [b for f, g in plan.items()
@@ -1021,7 +1028,8 @@ def _stored_probe(value, typ: str | None):
 def _lookup_parts(snap, run: dict, cols: list[str], vals: list,
                   types: dict[str, str], aliases_by_col: dict,
                   salt_by_value) -> set[int]:
-    """The parts a key value may live in, from the Python xxhash64 twin.
+    """The parts a key value (``vals``, in the stored unit) may live in,
+    from the Python xxhash64 twin.
     A WIDENED key column (ManifestTable.widen_column) is hashed at every
     historical width — old generations' parts were derived from the
     narrow type, and xxhash64 hashes int32 and int64 differently.
@@ -1043,8 +1051,9 @@ def _lookup_parts(snap, run: dict, cols: list[str], vals: list,
     shards: list = [None]
     try:
         if salt > 1 and salt_by_value is not None:
-            shards = [xxhash64([salt_by_value],
-                               [types.get(run.get("salt_by"))]) % salt]
+            t = types.get(run.get("salt_by"))
+            shards = [xxhash64([_stored_probe(salt_by_value, t)], [t])
+                      % salt]
         elif salt > 1:
             shards = list(range(salt))
         # a value outside a historical narrow type's range cannot exist
@@ -1069,51 +1078,40 @@ def range_lookup(spark: SparkSession, tbl: ManifestTable,
                  lower, upper, schema_ddl: str | None = None,
                  key: str = "url") -> DataFrame:
     """Key-RANGE query against an encoded table (``lower <= key <=
-    upper``), the scan sibling of :func:`point_lookup`: part pruning
-    does not apply (a key range spans arbitrary parts), but the
-    manifest's per-file key ranges prune FILES with zero I/O on
-    key-clustered tables, block min/max stats then skip whole block
-    groups, and the residual row filter runs after decode — the same
-    three-tier shape as parquet row-group skipping, one level up.
-    Files without recorded ranges are conservatively read."""
-    from .encode import decode_blocks_df, prune_block_groups
+    upper``), served by the point lookup's pipeline with the interval
+    in place of the value. :func:`plan_files` keeps the files whose
+    manifest key range overlaps it (zero I/O; part pruning does not
+    apply, a key range spans arbitrary parts), the block groups whose
+    min/max stats overlap it are planned from the kept files' narrow
+    block rows, and only those are decoded, with the residual filter
+    and live tombstones applied. ``key`` is ONE column: on a
+    composite-keyed table, any component (ranges are recorded per
+    component).
+
+    A plan whose encoded bytes fit ``spark.sql.files.maxPartitionBytes``
+    is decoded in the driver and returned as a local DataFrame, with no
+    Spark job. A bigger one, even within one file, returns the lazy
+    ``decode_files_df`` frame over the same plan, tombstones
+    anti-joined, for the caller's action to run: a range's decoded rows
+    can be many times its encoded bytes."""
+    from pyspark.sql.types import StructType
 
     snap = tbl.current()
     if schema_ddl is None:
         schema_ddl = tbl.row_schema(snap)
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromDDL(schema_ddl)
     _check_key_type(schema, key, lower, "range_lookup")
     _check_key_type(schema, key, upper, "range_lookup")
     if snap is None or not snap.files:
         raise FileNotFoundError(f"table {tbl.dir} has no committed snapshot")
-    # ``key`` is ONE column — on composite-keyed tables pass any
-    # component (ranges are recorded per component); _component_key_ranges
-    # resolves it across single-key runs, composite runs, and compaction
-    aliases = _key_aliases(snap, key)
-    names = {key} | aliases
-    key_ranges = _component_key_ranges(snap, names)
-    fam = "s" if isinstance(lower, str) else "i"
-    files = []
-    for f in snap.files:
-        rng = key_ranges.get(os.path.basename(f), {}).get(fam)
-        if rng is None or (rng[0] <= upper and lower <= rng[1]):
-            files.append(f)
-    files = files or snap.files[:1]  # empty parquet read is invalid
-    blocks = _relabel_blocks(
-        spark.read.option("mergeSchema", "true").parquet(*files),
-        aliases, key)
-    if fam == "s":
-        blocks = prune_block_groups(blocks, key, lower_s=lower,
-                                    upper_s=upper)
-    else:
-        blocks = prune_block_groups(blocks, key, lower=lower, upper=upper)
-    out = decode_blocks_df(blocks, schema_ddl).filter(
-        (F.col(key) >= lower) & (F.col(key) <= upper))
-    from .deletes import apply_deletes  # tombstoned keys stay suppressed
-
-    return apply_deletes(spark, out, snap)
+    typ = next((f.dataType.simpleString() for f in schema.fields
+                if f.name == key), None)
+    names = {key} | _key_aliases(snap, key)
+    bounds = (_stored_probe(lower, typ), _stored_probe(upper, typ))
+    files = plan_files(snap, snap.files, names, tiers=1, interval=bounds)
+    return _serve_plan(spark, snap, schema, schema_ddl, files,
+                       {key: names}, [bounds], None, {key: (lower, upper)},
+                       lazy=True)
 
 
 def compact_coverage(parts: list[int]) -> "list[int] | dict":
@@ -1166,7 +1164,6 @@ def prune_files_by_part(files: list[str], part_ids: set[int],
 
     import pyarrow.parquet as pq
 
-    all_files = files
     kept_manifest: list[str] = []
     need_footer: list[str] = []
     for f in files:
@@ -1177,8 +1174,7 @@ def prune_files_by_part(files: list[str], part_ids: set[int],
             kept_manifest.append(f)
     files = need_footer
     if not files:
-        # empty parquet read is invalid; keep one file (filter drops all)
-        return kept_manifest or all_files[:1]
+        return kept_manifest
 
     def keep(path: str) -> bool:
         meta = pq.ParquetFile(path).metadata
@@ -1203,10 +1199,8 @@ def prune_files_by_part(files: list[str], part_ids: set[int],
 
     with ThreadPoolExecutor(max_workers=min(max_workers,
                                             max(1, len(files)))) as ex:
-        kept = kept_manifest + [f for f, k in zip(files, ex.map(keep, files))
-                                if k]
-    # empty parquet read is invalid; fall back to one file (filter drops all)
-    return kept or files[:1]
+        return kept_manifest + [f for f, k in zip(files,
+                                                  ex.map(keep, files)) if k]
 
 
 def input_fingerprint(df: DataFrame, key) -> str:

@@ -6,14 +6,15 @@ The split here is Iceberg v2's equality-delete idea expressed
 Spark-first:
 
 - ``delete_rows`` is METADATA-ONLY: the keys go to a small parquet
-  tombstone sidecar and a properties-only snapshot commit. Reads
-  (``read_decoded``, ``point_lookup``, ``range_lookup``) anti-join the
-  tombstoned keys out. O(delete size), never O(table).
-- ``purge_deletes`` MATERIALIZES them: only the files that may contain
-  a tombstoned key (manifest key-range tier + ONE batched per-block
-  bloom scan — the same tiers point lookups use, turned to the write
-  side) are decoded, filtered, and re-encoded; every other file
-  survives untouched.
+  tombstone sidecar and a properties-only snapshot commit. Every read
+  drops the tombstoned keys: ``read_decoded`` with a broadcast
+  anti-join (``apply_deletes``), the DataSource in its tasks and the
+  point and range lookups in the driver (``filter_tombstones``).
+  O(delete size), never O(table).
+- ``purge_deletes`` MATERIALIZES them: the tombstoned keys are read in
+  the driver and ``checkpoint.plan_files`` — the planner the lookups
+  use — finds the files that may hold one; only those are decoded,
+  filtered and re-encoded, and every other file survives untouched.
 
 Suppression is GLOBAL-until-purged, by design: a tombstoned key stays
 suppressed even in rows that arrive in later appends or compaction
@@ -35,18 +36,20 @@ from __future__ import annotations
 
 import os
 import uuid
-from functools import reduce
-from operator import or_
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .table import ManifestTable
 
-# one OR-chained bloom probe expression covers up to this many keys in a
-# single narrow scan; larger delete sets skip the bloom tier (the
-# manifest range tier still applies, and correctness never depends on
-# pruning)
+# purge and upsert key sets up to this size prune their rewrite set with
+# every planner tier; larger ones with the key-range tier alone (the
+# bloom tiers cost a probe per key and file)
 PURGE_BLOOM_MAX_KEYS = 256
+# key sets up to this size are collected in the driver and bisected into
+# the manifest key ranges; beyond it every file is rewritten
+# (correctness never depends on pruning, and a write touching >100k
+# distinct keys is a bulk reload, not a point merge)
+UPSERT_RANGE_MAX_KEYS = 100_000
 # anti-join side gets a broadcast hint while the tombstone set is
 # comfortably executor-memory sized; beyond that it becomes a plain
 # (shuffled) anti-join
@@ -202,8 +205,8 @@ def apply_deletes(spark: SparkSession, df: DataFrame, snap) -> DataFrame:
 def tombstone_specs(snap) -> list[tuple[tuple[str, ...], list[str]]]:
     """Live tombstones as (current key columns, sidecar parquet paths)
     pairs — the Spark-free twin of :func:`tombstone_keys`, used by the
-    DataSource's executor-side reads and by the driver-side point
-    lookup."""
+    DataSource's executor-side reads, the driver-side point and range
+    lookups and purge planning."""
     from .table import fold_renames
 
     fold = fold_renames(snap.properties.get("column_renames", []))
@@ -219,7 +222,9 @@ def tombstone_specs(snap) -> list[tuple[tuple[str, ...], list[str]]]:
 def load_tombstone_keys(specs):
     """Materialize the sidecar parquets ONCE per task (decode yields
     many batches per file — re-reading per batch would multiply the
-    I/O): (cols, single-column Array | set of tuples) pairs."""
+    I/O): (cols, single-column Array | set of tuples) pairs. Composite
+    tuples hold the stored unit (``_stored_values``), so a timestamp
+    component compares as the instant it is, however it was read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -229,7 +234,7 @@ def load_tombstone_keys(specs):
             pq.read_table(f, use_threads=False) for f in sidecars)
         out.append((cols, keys.column(0).combine_chunks()
                     if len(cols) == 1
-                    else set(zip(*(keys.column(i).to_pylist()
+                    else set(zip(*(_stored_values(keys.column(i))
                                    for i in range(len(cols)))))))
     return out
 
@@ -256,86 +261,49 @@ def filter_tombstones(batch, loaded):
                 col = col.cast(keys.type)
             mask = pc.is_in(col, value_set=keys, skip_nulls=True)
         else:
-            rows = zip(*(batch.column(c).to_pylist() for c in cols))
+            rows = zip(*(_stored_values(batch.column(c)) for c in cols))
             mask = pa.array([None not in r and r in keys for r in rows],
                             pa.bool_())
         batch = batch.filter(pc.fill_null(pc.invert(mask), True))
     return batch
 
 
-def _purge_candidates(spark: SparkSession, snap, key: str,
-                      values: list, names: set | None = None) -> list[str]:
-    """Files that MAY hold any of ``values`` in ONE key component, via
-    the read-side pruning tiers turned to the write side: manifest
-    per-file key ranges (driver-side, zero I/O), then ONE batched bloom
-    scan with all probes OR-chained (instead of a job per key like a
-    point lookup). ``names`` widens the component's manifest/block name
-    matching (historical rename names; encode-time names). Falls back to
-    'all files' whenever a tier can't answer — pruning here is an
-    efficiency tier, never a correctness dependency. Composite-key
-    callers run this per component and intersect."""
-    from .checkpoint import _component_key_ranges, summary_bloom_survivors
-    from .encode import bloom_may_contain
+def _stored_values(arr) -> list:
+    """An arrow key column (a tombstone sidecar's, a decoded batch's or
+    collected incoming keys) as Python values in the unit block stats
+    and blooms hold: epoch micros for a timestamp (arrow holds UTC
+    instants, zoned or not), days for a date, other values as they
+    are. The arrow twin of ``checkpoint._stored_probe``, which converts
+    values PySpark handed to Python."""
+    import pyarrow as pa
 
-    names = set(names or ()) | {key}
+    if pa.types.is_timestamp(arr.type):
+        arr = arr.cast(pa.timestamp("us", tz=arr.type.tz)).cast(pa.int64())
+    elif pa.types.is_date32(arr.type):
+        arr = arr.cast(pa.int32())
+    return arr.to_pylist()
+
+
+def _rewrite_candidates(snap, cols: list[str], columns: list) -> set[str]:
+    """The files a purge or upsert must rewrite: those that may hold one
+    of the keys whose values ``columns`` hold, one list per key column
+    of ``cols`` (current names), in the stored unit
+    (``_stored_values``). :func:`checkpoint.plan_files` runs per
+    component over its current and historical names and the answers
+    intersect — per-component pruning over-approximates the tuple set,
+    which is safe: extra files decode and filter to themselves. Up to
+    ``PURGE_BLOOM_MAX_KEYS`` keys every tier applies; beyond that only
+    the key-range tier (bisected into the sorted keys). Callers pass no
+    more than ``UPSERT_RANGE_MAX_KEYS`` keys and rewrite every file
+    beyond it."""
+    from .checkpoint import _key_aliases, plan_files
+
+    tiers = 4 if len(columns[0]) <= PURGE_BLOOM_MAX_KEYS else 1
     files = list(snap.files)
-    # tier 1: manifest key ranges — keep a file if ANY value is inside
-    key_ranges = _component_key_ranges(snap, names)
-    fam = "s" if isinstance(values[0], str) else "i"
-    kept = []
-    for f in files:
-        rng = key_ranges.get(os.path.basename(f), {}).get(fam)
-        if rng is None or any(rng[0] <= v <= rng[1] for v in values):
-            kept.append(f)
-    # unlike a lookup's "empty parquet read" guard, an empty answer here
-    # is meaningful: no file can hold any value -> nothing to rewrite
-    files = kept
-    if not files or len(values) > PURGE_BLOOM_MAX_KEYS or len(files) <= 2:
-        return files
-    # tier 0 (r8): manifest-resident summary blooms, probed driver-side
-    # before the batched narrow scan opens any footer — a file survives
-    # if ANY value may be present; summary-less files are kept
-    files = summary_bloom_survivors(snap, files, names, values)
-    if len(files) <= 2:
-        return files
-    # tier 2: ONE narrow columnar scan, all probes OR-chained; per-file
-    # verdict = max over its bloomed key blocks. Files with no bloomed
-    # key blocks at all never appear in the aggregate and are kept
-    # conservatively.
-    nar = spark.read.option("mergeSchema", "true").parquet(*files)
-    if "key_bloom" not in nar.columns:
-        return files
-    probe = reduce(or_, [bloom_may_contain(v) for v in values])
-    verdicts = (nar.filter(F.col("col").isin(*names)
-                           & F.col("key_bloom").isNotNull())
-                .groupBy(F.input_file_name().alias("f"))
-                .agg(F.max(F.when(probe, 1).otherwise(0)).alias("may"))
-                .collect())
-    may = {os.path.basename(r["f"]) for r in verdicts if r["may"] == 1}
-    has_bloom = {os.path.basename(r["f"]) for r in verdicts}
-    return [f for f in files
-            if os.path.basename(f) in may
-            or os.path.basename(f) not in has_bloom]
-
-
-def _candidates_for_keyset(spark: SparkSession, snap, cols: list[str],
-                           rows: list, fold: dict[str, str]) -> set[str]:
-    """Rewrite-candidate files for a (possibly composite) key spec and a
-    bounded list of value rows (tuples aligned with ``cols``): run the
-    per-component pruner for every component and INTERSECT — a file must
-    be able to hold every component of some value to need rewriting.
-    Per-component pruning over-approximates the tuple set (components
-    may hit in different rows), which is safe: extra files decode and
-    anti-join to themselves."""
-    cand: set[str] | None = None
-    hist = {now: h for h, now in fold.items()}
-    for i, c in enumerate(cols):
-        vals_c = [r[i] for r in rows]
-        names = {c, fold.get(c, c)} | ({hist[c]} if c in hist else set())
-        got = set(_purge_candidates(spark, snap, fold.get(c, c), vals_c,
-                                    names=names))
-        cand = got if cand is None else (cand & got)
-    return cand or set()
+    for c, vals in zip(cols, columns):
+        files = plan_files(snap, files, {c} | _key_aliases(snap, c),
+                           tiers=tiers, values=vals)
+    return set(files)
 
 
 def purge_deletes(spark: SparkSession, tbl: ManifestTable,
@@ -390,16 +358,13 @@ def _purge_once(spark: SparkSession, tbl: ManifestTable,
                else [fold.get(c, c) for c in raw_key])
 
     candidates: set[str] = set()
-    for kk, kdf in tombstone_keys(spark, snap).items():
-        cols_k = [kk] if isinstance(kk, str) else list(kk)
-        rows = [tuple(r) for r in kdf.limit(PURGE_BLOOM_MAX_KEYS + 1)
-                .collect()]
-        if len(rows) > PURGE_BLOOM_MAX_KEYS:
-            candidates.update(snap.files)
+    for cols, keys in load_tombstone_keys(tombstone_specs(snap)):
+        if len(keys) > UPSERT_RANGE_MAX_KEYS:
+            candidates = set(snap.files)
             break
-        candidates.update(_candidates_for_keyset(spark, snap, cols_k,
-                                                 rows, fold))
-    candidates &= set(snap.files)
+        columns = (list(zip(*keys)) if len(cols) > 1
+                   else [_stored_values(keys)])
+        candidates |= _rewrite_candidates(snap, list(cols), columns)
     survivors = [f for f in snap.files if f not in candidates]
 
     new_files: list[str] = []
@@ -436,39 +401,6 @@ def _purge_once(spark: SparkSession, tbl: ManifestTable,
             "new_files": len(new_files),
             "rows_kept_in_rewrite": n_kept,
             "snapshot_id": healed.snapshot_id}
-
-
-# sorted incoming keys collected driver-side for the upsert range tier;
-# beyond this the pruner honestly degrades to "rewrite every file whose
-# range tier can't exclude it" = all files (correctness never depends
-# on pruning, and an upsert touching >100k distinct keys is a bulk
-# reload, not a point merge)
-UPSERT_RANGE_MAX_KEYS = 100_000
-
-
-def _range_candidates(snap, key: str, sorted_vals: list,
-                      names: set | None = None) -> list[str]:
-    """Manifest key-range tier for LARGE probe sets, ONE key component:
-    bisect each file's [lo, hi] into the sorted incoming keys —
-    O(files x log K) driver-side, zero I/O. Files without a recorded
-    range are kept (over-approximation safe, same contract as the lookup
-    tiers). Composite keys prune on their PRIMARY component here."""
-    from bisect import bisect_left
-
-    from .checkpoint import _component_key_ranges
-
-    key_ranges = _component_key_ranges(snap, set(names or ()) | {key})
-    fam = "s" if isinstance(sorted_vals[0], str) else "i"
-    kept = []
-    for f in snap.files:
-        rng = key_ranges.get(os.path.basename(f), {}).get(fam)
-        if rng is None:
-            kept.append(f)
-            continue
-        i = bisect_left(sorted_vals, rng[0])
-        if i < len(sorted_vals) and sorted_vals[i] <= rng[1]:
-            kept.append(f)
-    return kept
 
 
 def _entry_cols_now(e: dict, fold: dict[str, str]) -> list[str]:
@@ -518,12 +450,13 @@ def upsert_rows(spark: SparkSession, tbl: ManifestTable,
     — the re-crawl case (a page re-fetched with fresh content must
     supersede its old row, not coexist with it).
 
-    Spark-first split: only the files that MAY hold an incoming key are
-    rewritten — pruned by the same manifest-range + bloom tiers point
-    lookups use (<=PURGE_BLOOM_MAX_KEYS keys), by a bisect range tier at
-    <=UPSERT_RANGE_MAX_KEYS, and honestly unpruned beyond that. The
-    rewrite (decode -> anti-join -> re-encode) and the incoming encode
-    land in ONE overwrite commit: readers never see the table without
+    Only the files that MAY hold an incoming key are rewritten: the
+    incoming keys are collected in the driver and planned like a purge
+    (``_rewrite_candidates``: every planner tier up to
+    PURGE_BLOOM_MAX_KEYS keys, the key ranges alone up to
+    UPSERT_RANGE_MAX_KEYS, every file beyond). The rewrite (decode ->
+    anti-join -> re-encode) and the incoming encode land in ONE
+    overwrite commit: readers never see the table without
     either the old or the new rows. This is Iceberg v2's copy-on-write
     MERGE INTO shape (the tombstone path in ``delete_rows`` is the
     merge-on-read half); the reference has no update story at all
@@ -612,22 +545,12 @@ def _upsert_once(spark: SparkSession, tbl: ManifestTable,
             entries = _rewrite_tombstones(spark, tbl, entries, key, ikeys,
                                           fold=fold)
 
-    # prune the rewrite set with the lookup tiers turned to the write side
-    rows = [tuple(r) for r in ikeys.limit(PURGE_BLOOM_MAX_KEYS + 1)
-            .collect()]
-    if len(rows) <= PURGE_BLOOM_MAX_KEYS:
-        candidates = _candidates_for_keyset(spark, snap, cols, rows, fold)
-    elif n_keys <= UPSERT_RANGE_MAX_KEYS:
-        # large sets prune on the PRIMARY component's recorded ranges
-        hist = {now: h for h, now in fold.items()}
-        names = {cols[0]} | ({hist[cols[0]]} if cols[0] in hist
-                             else set())
-        candidates = set(_range_candidates(
-            snap, cols[0], sorted(r[0] for r in ikeys.collect()),
-            names=names))
-    else:
+    if n_keys > UPSERT_RANGE_MAX_KEYS:
         candidates = set(snap.files)
-    candidates &= set(snap.files)
+    else:
+        got = ikeys.toArrow()
+        candidates = _rewrite_candidates(
+            snap, cols, [_stored_values(got.column(c)) for c in cols])
     survivors = [f for f in snap.files if f not in candidates]
 
     new_files: list[str] = []

@@ -427,8 +427,12 @@ _XXP2 = 0xC2B2AE3D27D4EB4F
 _XXP3 = 0x165667B19E3779F9
 _XXP4 = 0x85EBCA77C2B2AE63
 _XXP5 = 0x27D4EB2F165667C5
+#: how Spark's xxhash64 packs each integer-valued type: the narrow
+#: ints and a date's days as a 4-byte int, a bigint and a timestamp's
+#: epoch micros as an 8-byte long
 _XX_INT_FORMATS = {"tinyint": "<i", "smallint": "<i", "int": "<i",
-                   "bigint": "<q"}
+                   "date": "<i", "bigint": "<q", "timestamp": "<q",
+                   "timestamp_ntz": "<q"}
 _XX_CANONICAL_NAN = (0x7FF8000000000000).to_bytes(8, "little")
 
 
@@ -478,7 +482,9 @@ def _xxh64(data: bytes, seed: int) -> int:
 def xxhash64(values: list, types: list[str], seed: int = 42) -> int:
     """Spark's ``xxhash64(v1, v2, ...)`` (signed, like the JVM long) for
     literal ``values`` of the Spark SQL ``types`` (``simpleString``
-    names). Raises TypeError for a type the twin does not cover."""
+    names); a timestamp or date value is its stored integer (epoch
+    micros, days — ``checkpoint._stored_probe``). Raises TypeError for
+    a type the twin does not cover."""
     import struct
 
     h = seed & _M64
@@ -1202,24 +1208,36 @@ def decode_context(schema, renames: dict[str, str] | None = None,
 
 
 def _match_mask(rb: pa.RecordBatch, match: dict) -> pa.Array:
-    """Rows of ``rb`` whose columns equal every ``match`` value, compared
-    in their common type like Spark's ``==`` (an int probe against an
-    int32 column, or 1.5 against a bigint one, simply matches nothing);
-    NULL never matches, and NaN matches NaN as in Spark."""
+    """Rows of ``rb`` whose every ``match`` column lies in its closed
+    ``(lo, hi)`` bounds (None leaves a side open; a point is ``(v,
+    v)``), compared in the common type like Spark's comparisons (an int
+    probe against an int32 column, or 1.5 against a bigint one, simply
+    matches nothing). NULL never matches, and NaN sorts above every
+    number as in Spark, so ``(nan, nan)`` matches the NaN rows."""
     import datetime
 
     import pyarrow.compute as pc
 
     mask = None
-    for c, v in match.items():
+    for c, bounds in match.items():
         col = rb.column(c)
-        if isinstance(v, datetime.datetime) and v.tzinfo is None \
-                and getattr(col.type, "tz", None):
-            v = v.astimezone()  # naive means local time, as in PySpark
-        if v != v and pa.types.is_floating(col.type):
-            m = pc.is_nan(col)
-        else:
-            m = pc.equal(col, v)
+        nan = pc.is_nan(col) if pa.types.is_floating(col.type) else None
+        m = pc.is_valid(col)
+        for v, cmp in zip(bounds, (pc.greater_equal, pc.less_equal)):
+            if v is None:
+                continue
+            if isinstance(v, datetime.datetime) and v.tzinfo is None \
+                    and getattr(col.type, "tz", None):
+                v = v.astimezone()  # naive means local time, as in PySpark
+            if nan is not None and v != v:
+                # x >= NaN holds for NaN only, x <= NaN for every x
+                if cmp is pc.greater_equal:
+                    m = pc.and_(m, nan)
+                continue
+            t = cmp(col, v)
+            if nan is not None and cmp is pc.greater_equal:
+                t = pc.or_(t, nan)
+            m = pc.and_(m, t)
         mask = m if mask is None else pc.and_(mask, m)
     return pc.fill_null(mask, False)
 
@@ -1242,8 +1260,9 @@ def decode_file_batches(path: str, col_order: list[str],
     ``groups`` (a set of ``(part_id, block_seq, writer_uid)``) decodes
     only those block groups — a lookup's plan; the parquet read is
     filtered to them, so no other group is CRC-checked or decoded.
-    ``match`` ({column: value}) keeps only the decoded rows equal to
-    every value (the lookup's exact residual filter)."""
+    ``match`` ({column: (lo, hi)}) keeps only the decoded rows inside
+    every column's closed bounds (``_match_mask``: the exact residual
+    filter of a point or range read)."""
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 

@@ -23,15 +23,16 @@ Batch read
     ``ManifestTable.read_decoded`` does.
 
 Filter pushdown (``pushFilters``)
-    Planning runs in a driverside Python worker with NO SparkSession,
-    so only the ZERO-Spark pruning tiers apply: manifest per-file key
-    ranges + tier-0 summary blooms (``checkpoint.prune_files_metadata``)
-    shrink the partition list for ``col = lit`` / ``col IN (...)``
-    predicates on any component with recorded metadata. All filters are
-    returned to Spark (pruning here is an efficiency tier, never a
-    correctness dependency), so Spark re-applies them exactly — same
-    contract as the lookup tiers. At 100 TB this is the difference
-    between planning 100k file partitions and planning ~1.
+    Planning runs in a driver-side Python worker with NO SparkSession,
+    so the file planner the lookups use (``checkpoint.plan_files``) runs
+    without its per-file tier: manifest key ranges, summary blooms and
+    the bloom-index sidecar shrink the partition list for ``=``/``IN``
+    predicates, and key ranges for ``<``/``<=``/``>``/``>=`` ones, on
+    any component with recorded metadata. All filters are returned to
+    Spark (pruning here is an efficiency tier, never a correctness
+    dependency), so Spark re-applies them exactly. At 100 TB this is
+    the difference between planning 100k file partitions and planning
+    ~1.
 
 Streaming read
     ``DataSourceStreamReader`` (partition-parallel, NOT the
@@ -183,6 +184,8 @@ class EelBatchReader(DataSourceReader):
         self._files = list(self._snap.files)
         self._verify = str(options.get("verify", "true")).lower() != "false"
         self._ctx = _decode_context(self._snap, schema)
+        self._types = {f.name: f.dataType.simpleString()
+                       for f in schema.fields}
         self._tombstones = (
             tombstone_specs(self._snap)
             if str(options.get("with_deletes",
@@ -270,15 +273,15 @@ class EelPushdownReader(EelBatchReader):
     ``.option("pushdown", "true")`` AND the session conf."""
 
     def pushFilters(self, filters):
-        """Prune the file list with the metadata-only lookup tiers:
-        equality/IN predicates go through key ranges + summary blooms;
-        </>/<=/>= predicates intersect the manifest key ranges directly
-        (range scans on clustered tables prune to the overlapping
-        slice). Every filter is handed back to Spark — it re-applies
-        them exactly, so a bloom false positive costs one extra file,
+        """Prune the file list with the planner's metadata tiers
+        (``checkpoint.plan_files`` without its per-file tier): ``=`` and
+        ``IN`` pass their values (key ranges, summary blooms, the bloom
+        index); ``<``, ``<=``, ``>`` and ``>=`` pass a closed one-sided
+        interval (key ranges). Every filter is handed back to Spark — it
+        re-applies them exactly, so a bloom false positive or a file
+        whose range only touches a strict bound costs one extra file,
         never a wrong row."""
-        from ..checkpoint import (_component_key_ranges, _key_aliases,
-                                  prune_files_metadata)
+        from ..checkpoint import _key_aliases, _stored_probe, plan_files
 
         col_order, _, _ = self._ctx
         for f in filters:
@@ -287,42 +290,19 @@ class EelPushdownReader(EelBatchReader):
             col = f.attribute[0]
             if col not in col_order:
                 continue
-            aliases = _key_aliases(self._snap, col)
+            typ = self._types[col]
             if isinstance(f, (EqualTo, In)):
-                vals = list(f.value) if isinstance(f, In) else [f.value]
-                if not vals or not all(
-                        isinstance(v, (str, int))
-                        and not isinstance(v, bool) for v in vals):
-                    continue
-                survivors: set[str] = set()
-                for v in vals:  # survives if it may hold ANY value
-                    survivors.update(prune_files_metadata(
-                        self._snap, self._files, col, v,
-                        aliases=aliases, keep_floor=False))
-                self._files = [f2 for f2 in self._files
-                               if f2 in survivors]
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual,
-                                LessThan, LessThanOrEqual)):
-                v = f.value
-                if not isinstance(v, (str, int)) or isinstance(v, bool):
-                    continue
-                ranges = _component_key_ranges(
-                    self._snap, {col} | set(aliases))
-                fam = "s" if isinstance(v, str) else "i"
-                lower = isinstance(f, (GreaterThan, GreaterThanOrEqual))
-                strict = isinstance(f, (GreaterThan, LessThan))
-                kept = []
-                for f2 in self._files:
-                    rng = ranges.get(os.path.basename(f2), {}).get(fam)
-                    if rng is None:  # no recorded range: keep
-                        kept.append(f2)
-                    elif lower and (rng[1] > v or
-                                    (not strict and rng[1] == v)):
-                        kept.append(f2)  # file's hi reaches the bound
-                    elif not lower and (rng[0] < v or
-                                        (not strict and rng[0] == v)):
-                        kept.append(f2)  # file's lo reaches the bound
-                self._files = kept
+                probe = {"values": [_stored_probe(v, typ) for v in (
+                    f.value if isinstance(f, In) else [f.value])]}
+            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+                probe = {"interval": (_stored_probe(f.value, typ), None)}
+            elif isinstance(f, (LessThan, LessThanOrEqual)):
+                probe = {"interval": (None, _stored_probe(f.value, typ))}
+            else:
+                continue
+            self._files = plan_files(
+                self._snap, self._files,
+                {col} | _key_aliases(self._snap, col), tiers=3, **probe)
         return filters
 
 

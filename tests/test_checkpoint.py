@@ -1020,9 +1020,9 @@ def test_bloom_index_append_falls_back_only_for_new_files(spark, tmp_path,
     seen: list[set] = []
     real = checkpoint._bloom_scan_files
 
-    def spy(sp, files, key, kv, **kw):
-        seen.append({f.split("/")[-1] for f in files})
-        return real(sp, files, key, kv, **kw)
+    def spy(alive, names):
+        seen.append({f.split("/")[-1] for f in alive})
+        return real(alive, names)
 
     monkeypatch.setattr(checkpoint, "_bloom_scan_files", spy)
     target = new.subtract(old.select(*new.columns)) \

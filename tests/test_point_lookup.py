@@ -116,6 +116,38 @@ def test_xxhash64_twin_doubles(spark):
     assert xxhash64([3], ["double"]) == xxhash64([3.0], ["double"])
 
 
+def test_xxhash64_twin_timestamps_and_dates(spark):
+    """Timestamps hash as a long of epoch micros and dates as an int of
+    days, taken from the stored probe, pre-epoch included; a NULL inside
+    a composite chain leaves the hash unchanged."""
+    from datetime import date, datetime
+
+    from eel_sdk_spark.checkpoint import _stored_probe
+
+    rows = [(datetime(1969, 7, 20, 20, 17, 40, 123456),
+             datetime(1969, 7, 20, 20, 17, 40, 123456), date(1969, 12, 31),
+             "a"),
+            (datetime(1970, 1, 1), datetime(1970, 1, 1), date(1970, 1, 1),
+             None),
+            (datetime(1900, 3, 1, 0, 0, 0, 1), datetime(1900, 3, 1),
+             date(1900, 3, 1), "é"),
+            (None, None, date(2262, 4, 11), "x"),
+            (datetime(2024, 2, 29, 23, 59, 59, 999999), None, None, "y")]
+    df = spark.createDataFrame(rows, "t timestamp, n timestamp_ntz, "
+                                     "d date, s string")
+    types = ["timestamp", "timestamp_ntz", "date", "string"]
+    got = df.select("*", F.xxhash64("t").alias("ht"),
+                    F.xxhash64("n").alias("hn"), F.xxhash64("d").alias("hd"),
+                    F.xxhash64("t", "n", "d", "s").alias("hc")).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        vals = [_stored_probe(v, t) for v, t in zip(r[:4], types)]
+        assert r.ht == xxhash64(vals[:1], types[:1])
+        assert r.hn == xxhash64(vals[1:2], types[1:2])
+        assert r.hd == xxhash64(vals[2:3], types[2:3])
+        assert r.hc == xxhash64(vals, types)
+
+
 def test_xxhash64_twin_refuses_uncovered_types():
     for v, t in ((1.5, "float"), (True, "boolean"), (2**40, "int"),
                  ("7", "bigint"), (7, None), (True, "double"),
@@ -540,10 +572,11 @@ def test_lookup_timestamp_and_date_keys(spark, tmp_path, branch, typ,
     encode_with_checkpoint(spark, docs, tbl, key="k", n_parts=8,
                            run_id="t1")
     assert len(tbl.current().files) == 4
-    kept = []
+    kept, parts = [], []
     real = checkpoint.lookup_files
 
     def spy(*a, **kw):
+        parts.append(a[4])
         kept.append(real(*a, **kw))
         return kept[-1]
 
@@ -553,6 +586,150 @@ def test_lookup_timestamp_and_date_keys(spark, tmp_path, branch, typ,
                              key="k", schema_ddl=ddl)
         assert [g.v for g in got] == [r.v]
         assert len(kept[-1]) == 1
+        assert len(parts[-1]) == 1  # the xxhash64 twin covers the type
     miss = docs.agg(F.max("k")).first()[0].replace(year=2099)
     assert _assert_parity(spark, tbl, miss, branch, monkeypatch, key="k",
                           schema_ddl=ddl) == []
+
+
+# -- range parity -----------------------------------------------------------
+
+def _range(spark, tbl, lo, hi, branch, monkeypatch, key, ddl=None):
+    """range_lookup rows in the chosen branch, counted like ``_lookup``:
+    ``driver`` must run no Spark job; ``executors`` lowers
+    maxPartitionBytes below any plan's bytes, so a non-empty plan, even
+    a one-file one, must come back as one lazy ``decode_files_df``
+    frame."""
+    calls, plans = [], []
+    real, real_plan = encode.decode_files_df, checkpoint._plan_block_groups
+
+    def spy(*a, **k):
+        calls.append(k.get("groups"))
+        return real(*a, **k)
+
+    def plan_spy(*a, **k):
+        plans.append(real_plan(*a, **k))
+        return plans[-1]
+
+    monkeypatch.setattr(encode, "decode_files_df", spy)
+    monkeypatch.setattr(checkpoint, "_plan_block_groups", plan_spy)
+    sc = spark.sparkContext
+    group = f"range-{uuid.uuid4().hex}"
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    sc.setJobGroup(group, "range lookup")
+    if branch == "executors":
+        spark.conf.set(conf, "1")
+    try:
+        df = checkpoint.range_lookup(spark, tbl, lo, hi, ddl, key=key)
+        rows = df.collect() if branch == "driver" else None
+    finally:
+        spark.conf.set(conf, old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.setattr(encode, "decode_files_df", real)
+        monkeypatch.setattr(checkpoint, "_plan_block_groups", real_plan)
+    planned_files = sum(1 for g, _ in plans if g)
+    if branch == "driver" or planned_files == 0:
+        assert not calls
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    else:
+        assert len(calls) == 1 and len(calls[0]) == planned_files
+    return df.collect() if rows is None else rows
+
+
+@pytest.fixture(scope="module")
+def ranged(spark, corpus, tmp_path_factory):
+    """One table per key kind, each with a live tombstone inside its hit
+    range and a NULL tombstone: (table, key, ddl, ranges), ``ranges``
+    mapping a case to its (lo, hi, rows of read_decoded().filter(lo <=
+    key <= hi))."""
+    from datetime import timedelta
+
+    out = {}
+
+    def table(name, df, key, **kw):
+        tbl = ManifestTable(str(tmp_path_factory.mktemp(name)), name)
+        encode_with_checkpoint(spark, df, tbl, key=key, run_id=name, **kw)
+        return tbl
+
+    def tombstone(tbl, key, typ, victim):
+        delete_rows(spark, tbl, spark.createDataFrame(
+            [(None,), (victim,)], f"{key} {typ}"), key=key)
+
+    # string: key-sorted url table
+    urls = sorted(r.url for r in corpus.select("url").collect())
+    tbl = table("rstr", corpus, "url", n_parts=8, sort_by=["url"])
+    tombstone(tbl, "url", "string", urls[100])
+    out["string"] = (tbl, "url", None, {
+        "hit": (urls[90], urls[140]),
+        "empty": (urls[10] + "\0", urls[10] + "\1"),
+        "inverted": (urls[140], urls[90]),
+        "past_max": (urls[-1] + "0", urls[-1] + "1")})
+
+    # int: clustered ids, step 10
+    ids = spark.range(0, 4000, 10, 4).select(
+        F.col("id").cast("int").alias("doc_id"),
+        F.col("id").cast("string").alias("v"))
+    tbl = table("rint", ids, "doc_id", n_parts=8)
+    tombstone(tbl, "doc_id", "int", 1500)
+    out["int"] = (tbl, "doc_id", "doc_id int, v string", {
+        "hit": (995, 2005), "empty": (11, 19), "inverted": (2005, 995),
+        "past_max": (4000, 5000)})
+
+    # timestamp: time-ordered hourly keys
+    docs = spark.range(0, 400, 1, 4).select(
+        F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 3600)
+        .alias("k"), F.col("id").cast("string").alias("v"))
+    ks = [r.k for r in docs.orderBy("k").collect()]
+    tbl = table("rts", docs, "k", n_parts=8)
+    tombstone(tbl, "k", "timestamp", ks[150])
+    sec = timedelta(seconds=1)
+    out["timestamp"] = (tbl, "k", "k timestamp, v string", {
+        "hit": (ks[110], ks[260]), "empty": (ks[10] + sec, ks[11] - sec),
+        "inverted": (ks[260], ks[110]),
+        "past_max": (ks[-1] + sec, ks[-1] + 3600 * sec)})
+
+    # renamed: url -> page_url on a banded table
+    tbl = table("rren", corpus, "url", n_parts=8)
+    tbl.rename_column("url", "page_url")
+    tombstone(tbl, "page_url", "string", urls[120])
+    out["renamed"] = (tbl, "page_url", None, {
+        "hit": (urls[90], urls[140]),
+        "empty": (urls[10] + "\0", urls[10] + "\1"),
+        "inverted": (urls[140], urls[90]),
+        "past_max": (urls[-1] + "0", urls[-1] + "1")})
+
+    # widened: int doc_id widened to bigint, then wide ids appended
+    tbl = table("rwide", spark.range(0, 400, 1, 2).select(
+        F.col("id").cast("int").alias("doc_id"),
+        F.col("id").cast("string").alias("v")), "doc_id", n_parts=8)
+    tbl.widen_column("doc_id", "bigint")
+    append_encode(spark, spark.createDataFrame(
+        [(2**40 + i, f"wide {i}") for i in range(50)],
+        "doc_id bigint, v string"), tbl, run_id="g2")
+    tombstone(tbl, "doc_id", "bigint", 2**40 + 3)
+    out["widened"] = (tbl, "doc_id", None, {
+        "hit": (300, 2**40 + 10), "empty": (2**35, 2**36),
+        "inverted": (2**40 + 10, 300), "past_max": (2**41, 2**42)})
+
+    # the full-scan answer of every case, shared by both branches
+    for tbl, key, ddl, ranges in out.values():
+        scan = tbl.read_decoded(spark, ddl)
+        for case, (lo, hi) in ranges.items():
+            ranges[case] = (lo, hi, sorted(map(_norm, scan.filter(
+                (F.col(key) >= lo) & (F.col(key) <= hi)).collect()),
+                key=repr))
+    return out
+
+
+@pytest.mark.parametrize("kind", ["string", "int", "timestamp", "renamed",
+                                  "widened"])
+def test_range_parity(spark, ranged, kind, branch, monkeypatch):
+    """range_lookup(lo, hi) == read_decoded().filter(lo <= key <= hi),
+    tombstones (a NULL one too) applied, in both branches; an empty
+    range, lo > hi and a range past the max key return nothing."""
+    tbl, key, ddl, ranges = ranged[kind]
+    for case, (lo, hi, want) in ranges.items():
+        got = _range(spark, tbl, lo, hi, branch, monkeypatch, key, ddl)
+        assert sorted(map(_norm, got), key=repr) == want, case
+        assert bool(got) == (case == "hit"), case

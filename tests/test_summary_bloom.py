@@ -73,9 +73,9 @@ def test_tier0_consults_before_narrow_scan(spark, tmp_path, monkeypatch):
     seen: list[int] = []
     real = CP._bloom_scan_files
 
-    def spy(spark_, files, key, key_value, **kw):
-        seen.append(len(files))
-        return real(spark_, files, key, key_value, **kw)
+    def spy(alive, names):
+        seen.append(len(alive))
+        return real(alive, names)
 
     monkeypatch.setattr(CP, "_bloom_scan_files", spy)
     target = df.first()["url"]
@@ -175,10 +175,10 @@ def test_bloom_index_pyarrow_consult_past_saturation(spark, tmp_path):
         assert kept, "pruned to nothing"
     assert sum(kept_sizes) / len(kept_sizes) <= 3  # ~1-2 typical
 
-    # absent key: prunes to the keep_floor single file
+    # absent key: prunes to nothing
     kept = prune_files_metadata(snap, files, "url",
                                 "https://nosuch.example/zzz")
-    assert len(kept) == 1
+    assert kept == []
 
     # direct verdicts: pyarrow consult covers every indexed file and
     # repeated probes reuse the snapshot-cached arrays

@@ -260,16 +260,16 @@ def test_delete_landing_mid_upsert_survives_cas(spark, tmp_path,
     df, tbl = _mk(spark, tmp_path, "raceups", n=1500, parts=4)
     victim, updated = _urls(df, 2)
 
-    real = D._purge_candidates
+    real = D._rewrite_candidates
     fired = {"n": 0}
 
-    def spy(spark_, snap, key, values, **kw):
+    def spy(snap, cols, columns):
         if fired["n"] == 0:
             fired["n"] += 1
-            delete_rows(spark_, tbl, [victim])
-        return real(spark_, snap, key, values, **kw)
+            delete_rows(spark, tbl, [victim])
+        return real(snap, cols, columns)
 
-    monkeypatch.setattr(D, "_purge_candidates", spy)
+    monkeypatch.setattr(D, "_rewrite_candidates", spy)
     incoming = (df.filter(F.col("url") == updated)
                 .withColumn("text", F.lit("v2")))
     out = upsert_rows(spark, tbl, incoming, SCHEMA_DDL)
