@@ -1380,7 +1380,7 @@ def q_range_lookup(spark, sf):
     pruning itself is plan-asserted in tests/test_checkpoint.py.
     r7 delete leg: three doc_ids inside the range are tombstoned
     (deletes.delete_rows — metadata-only suppression) before the scan,
-    so the oracle's NOT IN replays the anti-join value-exact through
+    so the oracle's NOT IN replays the suppression value-exact through
     the same decoded-bytes hash compare.
     r7 upsert + cdc legs (deletes.upsert_rows / table.read_appended):
     doc_ids 120/150/151 are re-crawled with 'UPD:'-prefixed text —

@@ -523,8 +523,7 @@ FSCK_SCHEMA_DDL = ("file string, part_id int, block_seq int, "
 
 def fsck(spark: SparkSession, tbl: ManifestTable | None = None,
          files: list[str] | None = None,
-         snapshot_id: int | None = None,
-         n_tasks: int | None = None) -> DataFrame:
+         snapshot_id: int | None = None) -> DataFrame:
     """Distributed integrity scan of an encoded table: recompute every
     block's ``payload_crc`` against its stored value WITHOUT decoding
     values, and cross-check the manifest's file list against storage.
@@ -546,13 +545,15 @@ def fsck(spark: SparkSession, tbl: ManifestTable | None = None,
       no longer serves (manifest/storage drift: a too-eager GC, a
       partial restore).
 
-    The unit of work is the file (zero shuffle, like the decode path);
-    cost is a narrow columnar read of header+payload bytes + crc32 at
-    memory speed — ~the cheapest full-table read possible, suitable as
+    The unit of work is the file, binned into tasks like the decode
+    path (``encode.bin_files``; no Exchange); cost is a narrow columnar
+    read of header+payload bytes + crc32 at memory speed — ~the
+    cheapest full-table read possible, suitable as
     a scheduled audit on a 100 TB table. This is the integrity half the
     reference delegates to ORC's file checksums (eel-orc
     OrcSink.scala); here it spans any snapshot including time travel
     (``snapshot_id=``)."""
+    snap = None
     if files is None:
         if tbl is None:
             raise ValueError("fsck: pass a ManifestTable or a files list")
@@ -563,93 +564,91 @@ def fsck(spark: SparkSession, tbl: ManifestTable | None = None,
                 f"fsck: table {tbl.dir} has no committed snapshot")
         files = snap.files
 
-    def _scan(batches):
+    def _scan(paths):
         import zlib
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for b in batches:
-            for path in b.column("path").to_pylist():
-                base = os.path.basename(path)
-                out = {"file": [], "part_id": [], "block_seq": [],
-                       "writer_uid": [], "col": [], "status": [],
-                       "n_blocks": []}
+        for path in paths:
+            base = os.path.basename(path)
+            out = {"file": [], "part_id": [], "block_seq": [],
+                   "writer_uid": [], "col": [], "status": [],
+                   "n_blocks": []}
 
-                def emit(status, n, part=None, seq=None, uid=None,
-                         col=None):
-                    out["file"].append(base)
-                    out["part_id"].append(part)
-                    out["block_seq"].append(seq)
-                    out["writer_uid"].append(uid)
-                    out["col"].append(col)
-                    out["status"].append(status)
-                    out["n_blocks"].append(n)
+            def emit(status, n, part=None, seq=None, uid=None,
+                     col=None):
+                out["file"].append(base)
+                out["part_id"].append(part)
+                out["block_seq"].append(seq)
+                out["writer_uid"].append(uid)
+                out["col"].append(col)
+                out["status"].append(status)
+                out["n_blocks"].append(n)
 
-                def typed_batch():
-                    # explicit types: an all-null column (missing_file
-                    # rows) must still match the declared int32/int64
-                    # fields, inference would make it null-typed
-                    return pa.record_batch(
-                        [pa.array(out["file"], type=pa.string()),
-                         pa.array(out["part_id"], type=pa.int32()),
-                         pa.array(out["block_seq"], type=pa.int32()),
-                         pa.array(out["writer_uid"], type=pa.int64()),
-                         pa.array(out["col"], type=pa.string()),
-                         pa.array(out["status"], type=pa.string()),
-                         pa.array(out["n_blocks"], type=pa.int64())],
-                        names=list(out.keys()))
+            def typed_batch():
+                # explicit types: an all-null column (missing_file
+                # rows) must still match the declared int32/int64
+                # fields, inference would make it null-typed
+                return pa.record_batch(
+                    [pa.array(out["file"], type=pa.string()),
+                     pa.array(out["part_id"], type=pa.int32()),
+                     pa.array(out["block_seq"], type=pa.int32()),
+                     pa.array(out["writer_uid"], type=pa.int64()),
+                     pa.array(out["col"], type=pa.string()),
+                     pa.array(out["status"], type=pa.string()),
+                     pa.array(out["n_blocks"], type=pa.int64())],
+                    names=list(out.keys()))
 
-                try:
-                    names = pq.read_schema(path).names
-                    has_crc = "payload_crc" in names
-                    want = ["part_id", "block_seq", "writer_uid", "col",
-                            "header", "payload"]
-                    if has_crc:
-                        want.append("payload_crc")
-                    t = pq.read_table(path, columns=want,
-                                      use_threads=False)
-                except (FileNotFoundError, OSError):
-                    emit("missing_file", 0)
-                    yield typed_batch()
-                    continue
-                except pa.ArrowInvalid:
-                    # file exists but is not readable parquet (truncated
-                    # upload, bad magic): container-level corruption,
-                    # reported distinctly from block-level bad_crc
-                    emit("unreadable_file", 0)
-                    yield typed_batch()
-                    continue
-                n_ok = n_uncov = 0
-                for tb in t.to_batches():
-                    headers = tb.column("header")
-                    payloads = tb.column("payload")
-                    crcs = tb.column("payload_crc") if has_crc else None
-                    for i in range(tb.num_rows):
-                        if crcs is None or not crcs[i].is_valid:
-                            n_uncov += 1
-                            continue
-                        got = zlib.crc32(payloads[i].as_buffer(),
-                                         zlib.crc32(headers[i].as_py()))
-                        if got == crcs[i].as_py():
-                            n_ok += 1
-                        else:
-                            emit("bad_crc", 1,
-                                 part=tb.column("part_id")[i].as_py(),
-                                 seq=tb.column("block_seq")[i].as_py(),
-                                 uid=tb.column("writer_uid")[i].as_py(),
-                                 col=tb.column("col")[i].as_py())
-                if n_ok:
-                    emit("ok", n_ok)
-                if n_uncov:
-                    emit("no_crc", n_uncov)
+            try:
+                names = pq.read_schema(path).names
+                has_crc = "payload_crc" in names
+                want = ["part_id", "block_seq", "writer_uid", "col",
+                        "header", "payload"]
+                if has_crc:
+                    want.append("payload_crc")
+                t = pq.read_table(path, columns=want,
+                                  use_threads=False)
+            except (FileNotFoundError, OSError):
+                emit("missing_file", 0)
                 yield typed_batch()
+                continue
+            except pa.ArrowInvalid:
+                # file exists but is not readable parquet (truncated
+                # upload, bad magic): container-level corruption,
+                # reported distinctly from block-level bad_crc
+                emit("unreadable_file", 0)
+                yield typed_batch()
+                continue
+            n_ok = n_uncov = 0
+            for tb in t.to_batches():
+                headers = tb.column("header")
+                payloads = tb.column("payload")
+                crcs = tb.column("payload_crc") if has_crc else None
+                for i in range(tb.num_rows):
+                    if crcs is None or not crcs[i].is_valid:
+                        n_uncov += 1
+                        continue
+                    got = zlib.crc32(payloads[i].as_buffer(),
+                                     zlib.crc32(headers[i].as_py()))
+                    if got == crcs[i].as_py():
+                        n_ok += 1
+                    else:
+                        emit("bad_crc", 1,
+                             part=tb.column("part_id")[i].as_py(),
+                             seq=tb.column("block_seq")[i].as_py(),
+                             uid=tb.column("writer_uid")[i].as_py(),
+                             col=tb.column("col")[i].as_py())
+            if n_ok:
+                emit("ok", n_ok)
+            if n_uncov:
+                emit("no_crc", n_uncov)
+            yield typed_batch()
 
-    n_tasks = n_tasks or min(
-        len(files), spark.sparkContext.defaultParallelism * 2) or 1
-    fdf = spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(n_tasks)
-    return fdf.mapInArrow(_scan, FSCK_SCHEMA_DDL)
+    from .encode import bin_files, map_bins
+
+    bins = bin_files(snap, files, spark.sparkContext.defaultParallelism)
+    return map_bins(spark, bins, _scan, FSCK_SCHEMA_DDL)
 
 
 def fsck_summary(report: DataFrame) -> dict:
@@ -911,16 +910,17 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
        (``sort_by=[key]`` makes the stats disjoint, so a lookup decodes
        ~one block instead of the whole part).
     5. ``decode_file_batches`` decodes only the planned groups,
-       CRC-verified, and keeps the rows equal to the key; live
-       tombstones are then dropped with the anti-join's semantics (a
-       NULL key never matches).
+       CRC-verified, and keeps the rows equal to the key; the kernel
+       drops the live tombstones too (``deletes.apply_deletes``: a NULL
+       key never matches).
 
     When the planned groups span several files and their encoded bytes
     exceed ``spark.sql.files.maxPartitionBytes`` — more than Spark
     would hand one task — step 5 runs as one ``decode_files_df`` job
-    over the same plan, its tasks one file each, and the key-filtered
-    rows are collected. A one-file plan stays in the driver: the job
-    would decode it in one task after paying the job's fixed cost.
+    over the same plan, its files binned into tasks like a scan, and
+    the key-filtered rows are collected. A one-file plan stays in the
+    driver: the job would decode it in one task after paying the job's
+    fixed cost.
     (Measured on 4 cores, full-table plans: the branches tie at ~50 MB
     over 8 files; at 136 MB over 16 files the job takes 2.0 s against
     3.9 s in the driver.)
@@ -969,14 +969,13 @@ def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
                 match: dict, lazy: bool) -> DataFrame:
     """Plan the block groups of ``files`` (``_plan_block_groups`` over
     the stored-unit ``bounds``) and decode only them, keeping the rows
-    inside ``match`` (column -> ``(lo, hi)`` in the probe's own values)
-    and dropping live tombstones. The plan is decoded in the driver
-    unless its planned bytes exceed ``spark.sql.files.maxPartitionBytes``
-    and it spans several files or is ``lazy``; then it runs as one
-    ``decode_files_df`` job — collected, or with ``lazy`` returned
-    unrun with the tombstones anti-joined."""
-    from .deletes import (apply_deletes, filter_tombstones,
-                          load_tombstone_keys, tombstone_specs)
+    inside ``match`` (column -> ``(lo, hi)`` in the probe's own values);
+    the decode kernel drops live tombstones on either branch. The plan
+    is decoded in the driver unless its planned bytes exceed
+    ``spark.sql.files.maxPartitionBytes`` and it spans several files or
+    is ``lazy``; then it runs as one ``decode_files_df`` job —
+    collected, or with ``lazy`` returned unrun."""
+    from .deletes import load_tombstone_keys, tombstone_specs
     from .encode import decode_context, decode_file_batches, decode_files_df
     from .table import fold_renames
 
@@ -990,21 +989,19 @@ def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
         .filesMaxPartitionBytes()
     planned_bytes = sum(b for _, b in planned)
     if (lazy or len(plan) > 1) and planned_bytes > task_bytes:
-        df = decode_files_df(spark, list(plan), schema_ddl,
-                             renames=renames, groups=plan, match=match)
+        df = decode_files_df(spark, list(plan), schema_ddl, snap=snap,
+                             groups=plan, match=match)
         if lazy:
-            return apply_deletes(spark, df, snap).select(*col_order)
+            return df
         rows = df.toArrow().cast(arrow_schema)
     else:
+        loaded = load_tombstone_keys(tombstone_specs(snap))
         rows = pa.Table.from_batches(
             [b for f, g in plan.items()
              for b in decode_file_batches(f, col_order, arrow_types,
                                           alias_of, True, groups=g,
-                                          match=match)],
+                                          match=match, tombstones=loaded)],
             schema=arrow_schema)
-    tombstones = tombstone_specs(snap)
-    if tombstones:
-        rows = filter_tombstones(rows, load_tombstone_keys(tombstones))
     return spark.createDataFrame(rows, schema=schema)
 
 
@@ -1091,9 +1088,9 @@ def range_lookup(spark: SparkSession, tbl: ManifestTable,
     A plan whose encoded bytes fit ``spark.sql.files.maxPartitionBytes``
     is decoded in the driver and returned as a local DataFrame, with no
     Spark job. A bigger one, even within one file, returns the lazy
-    ``decode_files_df`` frame over the same plan, tombstones
-    anti-joined, for the caller's action to run: a range's decoded rows
-    can be many times its encoded bytes."""
+    ``decode_files_df`` frame over the same plan for the caller's action
+    to run: a range's decoded rows can be many times its encoded bytes.
+    Both branches drop live tombstones in the decode kernel."""
     from pyspark.sql.types import StructType
 
     snap = tbl.current()

@@ -7,9 +7,11 @@ Spark-first:
 
 - ``delete_rows`` is METADATA-ONLY: the keys go to a small parquet
   tombstone sidecar and a properties-only snapshot commit. Every read
-  drops the tombstoned keys: ``read_decoded`` with a broadcast
-  anti-join (``apply_deletes``), the DataSource in its tasks and the
-  point and range lookups in the driver (``filter_tombstones``).
+  from storage drops the tombstoned keys in the decode kernel
+  (``encode.decode_file_batches`` calls ``apply_deletes`` on each
+  decoded group, also when the read projected the key columns away):
+  ``read_decoded``, ``read_appended``, the point and range lookups, the
+  DataSource's batch and stream reads and purge's own decode.
   O(delete size), never O(table).
 - ``purge_deletes`` MATERIALIZES them: the tombstoned keys are read in
   the driver and ``checkpoint.plan_files`` — the planner the lookups
@@ -50,9 +52,9 @@ PURGE_BLOOM_MAX_KEYS = 256
 # (correctness never depends on pruning, and a write touching >100k
 # distinct keys is a bulk reload, not a point merge)
 UPSERT_RANGE_MAX_KEYS = 100_000
-# anti-join side gets a broadcast hint while the tombstone set is
-# comfortably executor-memory sized; beyond that it becomes a plain
-# (shuffled) anti-join
+# upsert's anti-join against the incoming keys gets a broadcast hint
+# while the key set is comfortably executor-memory sized; beyond that it
+# becomes a plain (shuffled) anti-join
 BROADCAST_MAX_KEYS = 1_000_000
 
 
@@ -164,49 +166,10 @@ def _entry_key(e: dict):
     return k if isinstance(k, str) else tuple(k)
 
 
-def tombstone_keys(spark: SparkSession, snap) -> dict:
-    """Live tombstones of a snapshot, one distinct-values DataFrame per
-    key spec — str for single columns, tuple of str for composite keys
-    (deletes may target different columns across commits)."""
-    by_key: dict = {}
-    for e in _tombstone_entries(snap):
-        by_key.setdefault(_entry_key(e), []).extend(e["files"])
-    return {k: (spark.read.parquet(*files)
-                .toDF(*([k] if isinstance(k, str) else list(k)))
-                .distinct())
-            for k, files in by_key.items()}
-
-
-def apply_deletes(spark: SparkSession, df: DataFrame, snap) -> DataFrame:
-    """Anti-join a decoded DataFrame against the snapshot's live
-    tombstones. Key columns absent from ``df`` are skipped (a projection
-    that dropped the key can't be filtered — callers that need deletes
-    applied must keep the key column(s) in the read)."""
-    entries = _tombstone_entries(snap)
-    if not entries:
-        return df
-    total = sum(e["n"] for e in entries)
-    # tombstones recorded before a rename_column carry the HISTORICAL
-    # key name — translate, or a takedown would silently resurface
-    # under the new column name
-    from .table import fold_renames
-
-    fold = fold_renames(snap.properties.get("column_renames", []))
-    for k, kdf in tombstone_keys(spark, snap).items():
-        cols = [k] if isinstance(k, str) else list(k)
-        now = [fold.get(c, c) for c in cols]
-        if any(c not in df.columns for c in now):
-            continue
-        right = F.broadcast(kdf) if total <= BROADCAST_MAX_KEYS else kdf
-        df = df.join(right.toDF(*now), on=now, how="left_anti")
-    return df
-
-
 def tombstone_specs(snap) -> list[tuple[tuple[str, ...], list[str]]]:
     """Live tombstones as (current key columns, sidecar parquet paths)
-    pairs — the Spark-free twin of :func:`tombstone_keys`, used by the
-    DataSource's executor-side reads, the driver-side point and range
-    lookups and purge planning."""
+    pairs: what every read hands the decode kernel
+    (``encode.decode_file_batches``), and what purge plans from."""
     from .table import fold_renames
 
     fold = fold_renames(snap.properties.get("column_renames", []))
@@ -239,9 +202,11 @@ def load_tombstone_keys(specs):
     return out
 
 
-def filter_tombstones(batch, loaded):
-    """Drop tombstoned rows from a decoded RecordBatch or Table with the
-    anti-join's semantics: a row whose key holds a NULL never matches.
+def apply_deletes(batch, loaded):
+    """Drop tombstoned rows from a decoded RecordBatch or Table: a row
+    whose key holds a NULL never matches, and a spec whose key columns
+    the batch lacks is skipped. Only the decode kernel calls this, with
+    the key columns decoded even when the read projected them away.
     Single-column keys take the vectorized ``is_in`` path; composite
     keys fall back to a per-row tuple test (tombstone lists are bounded
     takedown sets, and the loop runs only on tables that HAVE them)."""
@@ -309,8 +274,9 @@ def _rewrite_candidates(snap, cols: list[str], columns: list) -> set[str]:
 def purge_deletes(spark: SparkSession, tbl: ManifestTable,
                   schema_ddl: str, stage: str | None = None) -> dict:
     """Materialize every live tombstone: rewrite ONLY the files that may
-    contain a tombstoned key (decode -> anti-join -> re-encode under the
-    committed run's partitioning params), keep every other file
+    contain a tombstoned key (a decode that drops the tombstoned rows,
+    then a re-encode under the committed run's partitioning params),
+    keep every other file
     untouched, clear the tombstone list, and commit atomically. After
     this the rows are physically gone from the current snapshot; run
     ``expire_snapshots`` to also age out the historical copies.
@@ -373,9 +339,8 @@ def _purge_once(spark: SparkSession, tbl: ManifestTable,
     if candidates:
         from .encode import decode_files_df
 
-        decoded = decode_files_df(spark, sorted(candidates), schema_ddl,
-                                  renames=fold)
-        kept = apply_deletes(spark, decoded, snap)
+        kept = decode_files_df(spark, sorted(candidates), schema_ddl,
+                               snap=snap)
         n_kept = kept.count()
         if n_kept:
             blocks = encode_df(kept, key=run_key,
@@ -558,7 +523,7 @@ def _upsert_once(spark: SparkSession, tbl: ManifestTable,
     n_replaced = 0
     if candidates:
         decoded = decode_files_df(spark, sorted(candidates), schema_ddl,
-                                  renames=fold)
+                                  snap=snap, with_deletes=False)
         right = F.broadcast(ikeys) if n_keys <= BROADCAST_MAX_KEYS else ikeys
         kept = decoded.join(right, on=cols, how="left_anti")
         n_before = decoded.count()

@@ -1192,19 +1192,17 @@ def decode_context(schema, renames: dict[str, str] | None = None,
                    columns: list[str] | None = None):
     """(col_order, arrow_types, alias_of) for ``decode_file_batches``:
     the output columns of a Spark ``schema`` (``columns`` projects),
-    their CURRENT arrow types, and the historical names
-    (``rename_column``) whose blocks relabel to a requested column —
-    block files key columns by name, so the manifest-recorded mapping
-    plays the part of Iceberg's field ids."""
+    the CURRENT arrow type of every schema column (a projected read
+    still decodes a tombstone's key columns) and the rename history,
+    historical -> current name (``rename_column``) — block files key
+    columns by name, so the manifest-recorded mapping plays the part of
+    Iceberg's field ids."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     col_order = [f.name for f in schema.fields
                  if columns is None or f.name in columns]
-    arrow_types = {f.name: to_arrow_type(f.dataType)
-                   for f in schema.fields if f.name in col_order}
-    alias_of = {h: c for h, c in (renames or {}).items()
-                if c in col_order and h not in col_order}
-    return col_order, arrow_types, alias_of
+    arrow_types = {f.name: to_arrow_type(f.dataType) for f in schema.fields}
+    return col_order, arrow_types, dict(renames or {})
 
 
 def _match_mask(rb: pa.RecordBatch, match: dict) -> pa.Array:
@@ -1245,31 +1243,45 @@ def _match_mask(rb: pa.RecordBatch, match: dict) -> pa.Array:
 def decode_file_batches(path: str, col_order: list[str],
                         arrow_types: dict, alias_of: dict[str, str],
                         verify: bool, groups: set | None = None,
-                        match: dict | None = None
+                        match: dict | None = None,
+                        tombstones: list = ()
                         ) -> Iterator[pa.RecordBatch]:
     """Decode ONE encoded block file into output RecordBatches — pure
     pyarrow/numpy, no SparkSession. This is the executor-side unit of
     ``decode_files_df`` (whole files per task — block groups are
-    file-adjacent by construction), of the Python DataSource read path
-    (sources/eel_datasource.py) and of the driver-side point lookup, so
-    every read surface shares one kernel. ``alias_of`` maps historical
-    column names (rename_column) to current ones; ``arrow_types``
-    carries the CURRENT (possibly widened) target type per column —
-    narrow pre-widen blocks are safe-cast up.
+    file-adjacent by construction), of the Python DataSource's batch
+    and stream reads (sources/eel_datasource.py) and of the driver-side
+    point and range lookups, so every read from storage shares one
+    kernel. ``alias_of`` maps historical column names (rename_column)
+    to current ones; ``arrow_types`` carries the CURRENT (possibly
+    widened) target type per column — narrow pre-widen blocks are
+    safe-cast up; a None type keeps the stored one.
 
     ``groups`` (a set of ``(part_id, block_seq, writer_uid)``) decodes
     only those block groups — a lookup's plan; the parquet read is
     filtered to them, so no other group is CRC-checked or decoded.
     ``match`` ({column: (lo, hi)}) keeps only the decoded rows inside
     every column's closed bounds (``_match_mask``: the exact residual
-    filter of a point or range read)."""
+    filter of a point or range read). ``tombstones``
+    (``deletes.load_tombstone_keys``) drops the tombstoned rows: key
+    columns of ``arrow_types`` that ``col_order`` leaves out are
+    decoded for the test and projected away after it. Batches left
+    empty are not yielded."""
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
     if groups is not None and not groups:
         return
-    n_cols = len(col_order)
-    scan_names = list(col_order) + sorted(alias_of)
+    if tombstones:
+        # imported here, never captured in a driver-built closure
+        from .deletes import apply_deletes
+    need = list(dict.fromkeys(
+        [*col_order, *(c for cols, _ in tombstones for c in cols
+                       if c in arrow_types)]))
+    alias_of = {h: c for h, c in alias_of.items()
+                if c in need and h not in need}
+    n_cols = len(need)
+    scan_names = need + sorted(alias_of)
     want = ["part_id", "block_seq", "writer_uid", "col",
             "header", "payload"]
     if verify and "payload_crc" in pq.read_schema(path).names:
@@ -1309,25 +1321,89 @@ def decode_file_batches(path: str, col_order: list[str],
             if len(group) == n_cols:
                 rb = pa.record_batch(
                     [_widened(group[c], arrow_types.get(c))
-                     for c in col_order],
-                    names=col_order)
+                     for c in need],
+                    names=need)
                 del pending[key]
                 if match:
                     rb = rb.filter(_match_mask(rb, match))
-                    if not rb.num_rows:
-                        continue
-                yield from _sliced(rb)
+                if tombstones and rb.num_rows:
+                    rb = apply_deletes(rb, tombstones)
+                if rb.num_rows:
+                    yield from _sliced(rb.select(col_order))
     if pending:
         raise ValueError(
             f"{len(pending)} incomplete block groups in {path} "
             f"(block files must hold whole groups)")
 
 
+#: never shatter a scan into bins smaller than this (raw bytes): a
+#: Python task has a fixed worker-roundtrip cost
+SCAN_OPEN_COST_BYTES = 16 << 20
+
+
+def effective_scan_target(total_bytes: int, target_bytes: int,
+                          min_parts: int) -> int:
+    """Effective bin size: ``min(target, max(open-cost, ceil(total /
+    min_parts)))`` — the same floor derivation Spark applies to
+    maxSplitBytes so a small table still fans out across the cluster
+    while a huge one keeps ``target_bytes`` bins."""
+    per_core = -(-total_bytes // max(min_parts, 1))
+    return min(target_bytes, max(SCAN_OPEN_COST_BYTES, per_core))
+
+
+def bin_files(snap, files: list[str], floor: int,
+              target_bytes: int = 512 << 20) -> list[list[str]]:
+    """The read tasks of a scan from storage: ``files``, in order,
+    packed into bins of about ``effective_scan_target`` RAW (decoded)
+    bytes, from the manifest's per-file stats (``snap.file_stats()``)
+    — zero I/O. Decode work is proportional to what comes OUT of the
+    codecs, so raw bytes size the bins (at ~10x ratios a 128 MB-encoded
+    bin was ~1.3 GB of decode in one task), and ``floor`` (the
+    cluster's parallelism) keeps a small table fanned out across the
+    cores (without it the 200k-row bench table decoded in one task:
+    1.61 s against 0.27 s at 32 cores). A file without recorded stats
+    (or any file when ``snap`` is None) gets a bin of its own."""
+    stats = snap.file_stats() if snap is not None else {}
+    sizes = [st[1] or st[2] if (st := stats.get(os.path.basename(f)))
+             else None for f in files]
+    target = effective_scan_target(sum(s or 0 for s in sizes),
+                                   target_bytes, floor)
+    out: list[list[str]] = []
+    cur: list[str] = []
+    acc = 0
+    for f, sz in zip(files, sizes):
+        if sz is None:
+            out.append([f])
+            continue
+        if cur and acc + sz > target:
+            out.append(cur)
+            cur, acc = [], 0
+        cur.append(f)
+        acc += sz
+    if cur:
+        out.append(cur)
+    return out
+
+
+def map_bins(spark, bins: list[list[str]], read,
+             schema_ddl: str) -> DataFrame:
+    """``read(paths)`` (RecordBatches) over each bin, one task per bin:
+    a ``mapInArrow`` over ``spark.range``, row ``i`` standing for
+    ``bins[i]`` — no Exchange, no Python-side input rows, and a one-bin
+    read is one partition, so a count over it is one job."""
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                yield from read(bins[i])
+
+    return spark.range(0, len(bins), 1, max(len(bins), 1)) \
+        .mapInArrow(_run, schema_ddl)
+
+
 def decode_files_df(spark, files: list[str], schema_ddl: str,
                     columns: list[str] | None = None,
-                    n_tasks: int | None = None,
-                    verify: bool = True,
-                    renames: dict[str, str] | None = None,
+                    verify: bool = True, snap=None,
+                    with_deletes: bool = True,
                     groups: dict[str, set] | None = None,
                     match: dict | None = None) -> DataFrame:
     """Zero-shuffle decode FROM STORAGE: the unit of work is the FILE.
@@ -1335,10 +1411,19 @@ def decode_files_df(spark, files: list[str], schema_ddl: str,
     ``decode_blocks_df`` over a re-read table must either shuffle to
     regroup or trust Spark's input splits not to cut a block group in
     half (they can: parquet splits by byte ranges). Here each task takes
-    whole file paths and reads them with pyarrow directly, so block
-    groups are complete by construction — groups are written adjacently
-    within each encode output file. No Exchange anywhere; parallelism is
-    the file count (the encode layout already sizes files to parts).
+    whole files and reads them with pyarrow directly, so block groups
+    are complete by construction — groups are written adjacently within
+    each encode output file. ``bin_files`` packs the files into tasks
+    (floored at the session's ``defaultParallelism``; the DataSource
+    bins the same way) and ``map_bins`` runs them: no Exchange and no
+    join anywhere in the plan.
+
+    ``snap`` supplies the rename history (blocks written under a
+    historical column name decode under the current one) and, with
+    ``with_deletes``, the live tombstones: each task loads the sidecar
+    keys once and the kernel drops those rows, also when ``columns``
+    projects the key columns away. Without ``snap`` every file is its
+    own task and nothing is renamed or suppressed.
 
     ``verify=True`` (the default — THIS is the path where bytes have
     been through storage) recomputes each block's ``payload_crc`` before
@@ -1351,33 +1436,36 @@ def decode_files_df(spark, files: list[str], schema_ddl: str,
     min-of-6 at 200k rows/64 files: 0.911 s verified vs 0.930 s not;
     serial crc over the full 30 MB encoded payload is ~30 ms).
 
-    This is the manifest-driven read path a 100 TB table actually wants:
-    ``ManifestTable.read_decoded`` feeds it the snapshot's (optionally
-    partition-pruned) file list. Projection pushdown: only the requested
-    columns' block rows are materialized from parquet (the ``col``
+    Projection pushdown: only the requested columns' block rows (and
+    the tombstone keys') are materialized from parquet (the ``col``
     filter reaches the parquet reader). ``groups`` (path -> block-group
     plan) and ``match`` pass straight to ``decode_file_batches`` — the
-    executor form of a point lookup too big for one driver read."""
+    executor form of a point or range lookup too big for one driver
+    read."""
     from pyspark.sql.types import StructType
 
+    from .deletes import load_tombstone_keys, tombstone_specs
+    from .table import fold_renames
+
     out_schema = StructType.fromDDL(schema_ddl)
+    renames = (fold_renames(snap.properties.get("column_renames", []))
+               if snap is not None else None)
     col_order, arrow_types, alias_of = decode_context(out_schema, renames,
                                                       columns)
+    specs = (tombstone_specs(snap)
+             if snap is not None and with_deletes else [])
     if columns is not None:
         schema_ddl = ", ".join(
             f"{f.name} {f.dataType.simpleString()}"
             for f in out_schema.fields if f.name in col_order)
 
-    def _read_decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            for path in b.column("path").to_pylist():
-                yield from decode_file_batches(
-                    path, col_order, arrow_types, alias_of, verify,
-                    groups=None if groups is None else groups[path],
-                    match=match)
+    def _read_decode(paths: list[str]) -> Iterator[pa.RecordBatch]:
+        loaded = load_tombstone_keys(specs)
+        for path in paths:
+            yield from decode_file_batches(
+                path, col_order, arrow_types, alias_of, verify,
+                groups=None if groups is None else groups[path],
+                match=match, tombstones=loaded)
 
-    n_tasks = n_tasks or min(
-        len(files), spark.sparkContext.defaultParallelism * 2) or 1
-    fdf = spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(n_tasks)
-    return fdf.mapInArrow(_read_decode, schema_ddl)
+    bins = bin_files(snap, files, spark.sparkContext.defaultParallelism)
+    return map_bins(spark, bins, _read_decode, schema_ddl)

@@ -30,6 +30,11 @@ def get_spark(app: str = "eel_sdk_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    # half the machine's physical memory unless EEL_DRIVER_MEM says
+    # otherwise: a heap sized for a bigger host lets the local-mode JVM
+    # grow until the kernel kills it
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    driver_mem = os.environ.get("EEL_DRIVER_MEM") or f"{max(1, phys >> 31)}g"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
@@ -41,7 +46,7 @@ def get_spark(app: str = "eel_sdk_spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("EEL_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Scan-parallelism floor (r9, guide §6 "Input split size"): Spark

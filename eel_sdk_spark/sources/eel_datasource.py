@@ -11,16 +11,15 @@ STREAMS) an eel warehouse exactly like parquet:
           .option("starting_snapshot", "earliest").load("/wh"))
 
 Batch read
-    Whole files per task (the same zero-shuffle unit as
-    ``decode_files_df``), binned into raw-byte-sized input partitions (target / core-floor) from the
-    manifest's per-file stats so task count tracks bytes, not file
-    count; the executor-side kernel IS ``encode.decode_file_batches``
-    (one shared implementation), yielding Arrow RecordBatches straight
-    into Spark's Arrow ingest path. Snapshot selection via
-    ``option("snapshot_id", N)`` / ``option("ref", name)``; tombstones
-    (deletes.delete_rows) are applied executor-side from the sidecar
-    parquets; renames and type widenings resolve exactly as
-    ``ManifestTable.read_decoded`` does.
+    The same scan from storage as ``ManifestTable.read_decoded``: the
+    snapshot's files packed by ``encode.bin_files`` (raw bytes from the
+    manifest's per-file stats, so task count tracks bytes, not file
+    count), one input partition per bin, each file decoded by
+    ``encode.decode_file_batches`` straight into Spark's Arrow ingest
+    path. The kernel drops tombstoned rows (deletes.delete_rows), also
+    under ``option("columns", ...)``, and resolves renames and type
+    widenings. Snapshot selection via ``option("snapshot_id", N)`` /
+    ``option("ref", name)`` / ``option("as_of_timestamp", t)``.
 
 Filter pushdown (``pushFilters``)
     Planning runs in a driver-side Python worker with NO SparkSession,
@@ -78,7 +77,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from ..deletes import filter_tombstones, load_tombstone_keys, tombstone_specs
+from ..deletes import load_tombstone_keys, tombstone_specs
 
 __all__ = ["EelDataSource", "register"]
 
@@ -133,48 +132,39 @@ def _resolve_snapshot(tbl, options):
 
 def _decode_context(snap, schema):
     """(col_order, arrow_types, alias_of) for ``decode_file_batches``,
-    from the resolved Spark schema + the snapshot's rename history."""
+    from the resolved Spark schema + the snapshot's rename history. The
+    stored row schema's other columns join ``arrow_types`` untyped (the
+    kernel keeps their stored type), so a projected read still decodes
+    a tombstone's key columns. Planning runs with no SparkSession, so
+    the stored DDL is split by name, not parsed."""
     from ..encode import decode_context
     from ..table import fold_renames
 
-    return decode_context(
+    ctx = decode_context(
         schema, fold_renames(snap.properties.get("column_renames", [])))
+    stored = snap.properties.get("row_schema_ddl") or ""
+    for f in filter(None, stored.split(", ")):
+        ctx[1].setdefault(f.partition(" ")[0], None)
+    return ctx
 
 
 def _file_sizes(snap, files: list[str]) -> list[int]:
     """Per-file encoded byte sizes for admission control, from the
-    manifest's recorded file stats ([rows, raw, enc] per basename in
-    run records / file_stats_extra) — zero plan-time I/O; local stat
-    fallback for files encoded before stats were recorded."""
-    stats: dict = dict(snap.properties.get("file_stats_extra", {}))
-    for r in snap.properties.get("runs", []):
-        stats.update(r.get("file_stats") or {})
+    manifest's recorded file stats (``Snapshot.file_stats``) — zero
+    plan-time I/O; local stat fallback for files encoded before stats
+    were recorded."""
+    stats = snap.file_stats()
     out = []
     for f in files:
-        v = stats.get(os.path.basename(f))
-        if v and len(v) >= 3 and v[2]:
-            out.append(int(v[2]))
+        st = stats.get(os.path.basename(f))
+        if st and st[2]:
+            out.append(int(st[2]))
         else:
             try:
                 out.append(os.path.getsize(f))
             except OSError:
                 out.append(0)
     return out
-
-
-#: never shatter a scan into bins smaller than this (raw bytes): a
-#: Python DataSource task has a fixed worker-roundtrip cost
-SCAN_OPEN_COST_BYTES = 16 << 20
-
-
-def effective_scan_target(total_bytes: int, target_bytes: int,
-                          min_parts: int) -> int:
-    """Effective bin size: ``min(target, max(open-cost, ceil(total /
-    min_parts)))`` — the same floor derivation Spark applies to
-    maxSplitBytes so a small table still fans out across the cluster
-    while a huge one keeps ``target_bytes`` bins."""
-    per_core = -(-total_bytes // max(min_parts, 1))
-    return min(target_bytes, max(SCAN_OPEN_COST_BYTES, per_core))
 
 
 class EelBatchReader(DataSourceReader):
@@ -192,61 +182,21 @@ class EelBatchReader(DataSourceReader):
                                "true")).lower() != "false" else [])
         self._target_bytes = int(options.get("scan_partition_bytes",
                                              512 << 20))
-        self._min_parts = int(options.get("scan_min_partitions", 0))
 
     def partitions(self):
-        """Files binned into ~``scan_partition_bytes`` (default 512 MB
-        RAW) input partitions, sized from the MANIFEST's per-file stats
-        — zero I/O at plan time. One-file-per-task is right for healthy
-        layouts but plans 100k tasks on a 100k-small-file table (the
-        pre-binpack shape); binning keeps task count proportional to
-        bytes, like Spark's own maxPartitionBytes file packing.
+        """One input partition per ``encode.bin_files`` bin of
+        ~``scan_partition_bytes`` (default 512 MB) RAW bytes, sized from
+        the manifest — zero I/O at plan time, and the same bins
+        ``read_decoded`` feeds its tasks. Planning runs in a Python
+        worker with no SparkSession, so the parallelism floor comes
+        from $SPARK_GRAFT_CPUS (else the machine's core count) instead
+        of ``defaultParallelism``."""
+        from ..encode import bin_files
 
-        r9, two sizing fixes measured on the 200k-row bench table:
-
-        - bins are sized by RAW (decoded) bytes, not encoded bytes —
-          decode work is proportional to what comes OUT of the codecs,
-          and at this engine's ~10x ratios a 128 MB-encoded bin was
-          ~1.3 GB of decode in one task;
-        - the effective target is floored the way Spark's own scan
-          sizing floors maxSplitBytes (min(target, max(open-cost,
-          total/minPartitionNum))): without it the whole bench table
-          binned into ONE partition and the entire SPI decode ran on a
-          single core (measured 1.61 s -> 0.27 s at 32 cores). The
-          parallelism floor comes from ``scan_min_partitions`` when
-          set; otherwise $SPARK_GRAFT_CPUS / os.cpu_count() (the
-          planning worker has no SparkSession to ask).
-
-        Files without recorded stats get their own partition."""
-        sizes: dict[str, int] = {}
-        for r in self._snap.properties.get("runs", []):
-            for b, st in (r.get("file_stats") or {}).items():
-                sizes[b] = st[1] or st[2]
-        sizes.update({b: st[1] or st[2]
-                      for b, st in self._snap.properties.get(
-                          "file_stats_extra", {}).items()})
-        total = sum(sizes.get(os.path.basename(f), 0)
-                    for f in self._files)
-        floor_parts = self._min_parts or int(
-            os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 8
-        target = effective_scan_target(total, self._target_bytes,
-                                       floor_parts)
-        out: list[list[str]] = []
-        cur: list[str] = []
-        acc = 0
-        for f in self._files:
-            sz = sizes.get(os.path.basename(f))
-            if sz is None:
-                out.append([f])
-                continue
-            if cur and acc + sz > target:
-                out.append(cur)
-                cur, acc = [], 0
-            cur.append(f)
-            acc += sz
-        if cur:
-            out.append(cur)
-        return [InputPartition(group) for group in out]
+        floor = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) \
+            or os.cpu_count() or 8
+        return [InputPartition(b) for b in bin_files(
+            self._snap, self._files, floor, self._target_bytes)]
 
     def read(self, partition) -> Iterator:
         if partition is None:  # empty partitions() -> one read(None)
@@ -256,13 +206,9 @@ class EelBatchReader(DataSourceReader):
         col_order, arrow_types, alias_of = self._ctx
         loaded = load_tombstone_keys(self._tombstones)
         for path in partition.value:
-            for batch in decode_file_batches(path, col_order,
-                                             arrow_types, alias_of,
-                                             self._verify):
-                out = (filter_tombstones(batch, loaded)
-                       if loaded else batch)
-                if out.num_rows:
-                    yield out
+            yield from decode_file_batches(path, col_order, arrow_types,
+                                           alias_of, self._verify,
+                                           tombstones=loaded)
 
 
 class EelPushdownReader(EelBatchReader):
@@ -568,12 +514,9 @@ class EelStreamReader(DataSourceStreamReader):
         from ..encode import decode_file_batches
 
         path, (col_order, arrow_types, alias_of), specs = partition.value
-        loaded = load_tombstone_keys(specs)
-        for batch in decode_file_batches(path, col_order, arrow_types,
-                                         alias_of, self._verify):
-            out = filter_tombstones(batch, loaded) if loaded else batch
-            if out.num_rows:
-                yield out
+        yield from decode_file_batches(path, col_order, arrow_types,
+                                       alias_of, self._verify,
+                                       tombstones=load_tombstone_keys(specs))
 
 
 

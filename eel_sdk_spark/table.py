@@ -38,6 +38,18 @@ class Snapshot:
     # "metastore" that pruning and partition-only queries read
     partitions: list[dict] = field(default_factory=list)
 
+    def file_stats(self) -> dict[str, list[int]]:
+        """``[rows, raw_bytes, enc_bytes]`` per data-file basename, as
+        the manifest records them: the run records' ``file_stats`` and
+        the compaction rewrites' ``file_stats_extra``. Files written
+        before per-file stats existed are absent."""
+        props = self.properties or {}
+        out: dict[str, list[int]] = {}
+        for r in props.get("runs", []):
+            out.update(r.get("file_stats") or {})
+        out.update(props.get("file_stats_extra", {}))
+        return out
+
 
 class CommitConflict(Exception):
     """An ``expect_properties`` commit guard failed: another committer
@@ -567,8 +579,11 @@ class ManifestTable:
                      ref: str | None = None,
                      as_of=None):
         """Decode an encoded-blocks table straight from its snapshot file
-        list with ZERO shuffle: whole files per task (encode.py's
-        decode_files_df — block groups are file-adjacent by construction).
+        list with no Exchange and no join: whole files per task, binned
+        by the manifest's raw bytes (``encode.decode_files_df`` — block
+        groups are file-adjacent by construction). With ``with_deletes``
+        the decode kernel drops the snapshot's tombstoned rows, also
+        when ``columns`` leaves the key columns out.
         ``constraints`` prune files manifest-side first; ``snapshot_id``
         time-travels to an older snapshot (within the expiry horizon).
         ``schema_ddl=None`` uses the schema the encode run persisted in
@@ -597,19 +612,9 @@ class ManifestTable:
             parts = snap.partitions or [{} for _ in files]
             files = [f for f, pv in zip(files, parts)
                      if all(c.eval(pv) for c in constraints)]
-        df = decode_files_df(spark, files, schema_ddl, columns=columns,
-                             verify=verify,
-                             renames=fold_renames(
-                                 snap.properties.get("column_renames", [])))
-        if with_deletes:
-            # suppress tombstoned keys (deletes.delete_rows); a key
-            # column pruned out by `columns` can't be filtered — the
-            # anti-join silently skips it, so takedown-sensitive reads
-            # must keep the key column
-            from .deletes import apply_deletes
-
-            df = apply_deletes(spark, df, snap)
-        return df
+        return decode_files_df(spark, files, schema_ddl, columns=columns,
+                               verify=verify, snap=snap,
+                               with_deletes=with_deletes)
 
     def changes_between(self, from_snapshot_id: int,
                         to_snapshot_id: int | None = None) -> dict:
@@ -725,7 +730,8 @@ class ManifestTable:
         outright on a replace. Adds are attributed at the snapshot where
         they landed, so even files a LATER in-window compaction absorbed
         are read from their original (time-travel-retained) location.
-        Current tombstones still apply, so a row appended then deleted
+        Current tombstones still apply (dropped in the decode kernel,
+        like ``read_decoded``), so a row appended then deleted
         inside the window is not emitted — EXCEPT when the delete was
         also purged in-window (the keys left with the tombstones;
         ``purged_in_window`` flags it — snapshot the cursor before
@@ -746,16 +752,9 @@ class ManifestTable:
         if not files:
             df = spark.createDataFrame([], schema_ddl)
             return df.select(*columns) if columns else df
-        df = decode_files_df(spark, files, schema_ddl, columns=columns,
-                             verify=verify,
-                             renames=fold_renames(
-                                 self.current().properties
-                                 .get("column_renames", [])))
-        if with_deletes:
-            from .deletes import apply_deletes
-
-            df = apply_deletes(spark, df, self.current())
-        return df
+        return decode_files_df(spark, files, schema_ddl, columns=columns,
+                               verify=verify, snap=self.current(),
+                               with_deletes=with_deletes)
 
     def partition_values(self, keys: list[str] | None = None,
                          constraints: list | None = None) -> list[dict]:

@@ -88,10 +88,7 @@ def cmd_analyze_table(args) -> None:
     # Tables written before file_stats fall back to lineage totals
     # (scope says which). codec_mix/col_ratio stay lineage-level
     # diagnostics either way.
-    fstats: dict[str, list] = {}
-    for r in runs:
-        fstats.update(r.get("file_stats", {}))
-    fstats.update(snap.properties.get("file_stats_extra", {}))
+    fstats = snap.file_stats()
     live = {os.path.basename(f) for f in snap.files}
     scope = "lineage"
     if live and live <= set(fstats):
@@ -460,7 +457,7 @@ def cmd_repair(args) -> None:
 def cmd_delete(args) -> None:
     """Metadata-only row deletes (deletes.delete_rows): suppress keys via
     a tombstone sidecar + properties-only commit. O(|keys|), never
-    O(table); reads anti-join the suppressed keys out until `purge`
+    O(table); reads drop the suppressed keys until `purge`
     physically rewrites the (bloom-pruned) affected files."""
     from eel_sdk_spark.deletes import delete_rows
     from eel_sdk_spark.session import get_spark

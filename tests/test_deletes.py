@@ -1,9 +1,9 @@
 """Row-level deletes: tombstone suppression + bloom-pruned purge.
 
 Takedown/GDPR semantics on immutable encoded tables (deletes.py):
-delete_rows is metadata-only (O(|keys|)); every read path anti-joins
-the suppressed keys; purge_deletes physically rewrites ONLY the files
-that may contain a deleted key. Suppression is global-until-purged so
+delete_rows is metadata-only (O(|keys|)); every read path drops the
+suppressed keys in the decode kernel; purge_deletes physically rewrites
+ONLY the files that may contain a deleted key. Suppression is global-until-purged so
 a taken-down key can't resurface from later appends or compaction.
 """
 
@@ -265,18 +265,18 @@ def test_delete_landing_mid_purge_survives_cas(spark, tmp_path,
     first, second = _some_urls(df, 2)
     delete_rows(spark, tbl, [first])
 
-    real = D.tombstone_keys
+    real = D.tombstone_specs
     fired = {"n": 0}
 
-    def spy(spark_, snap):
-        out = real(spark_, snap)
+    def spy(snap):
+        out = real(snap)
         if fired["n"] == 0:
             fired["n"] += 1
             # a rival takedown lands AFTER the purge read its snapshot
-            delete_rows(spark_, tbl, [second])
+            delete_rows(spark, tbl, [second])
         return out
 
-    monkeypatch.setattr(D, "tombstone_keys", spy)
+    monkeypatch.setattr(D, "tombstone_specs", spy)
     out = purge_deletes(spark, tbl, SCHEMA_DDL)
     # the retry re-read the head and materialized BOTH takedowns
     assert out["purged_keys"] == 2
@@ -400,4 +400,56 @@ def test_threaded_deletes_and_appends_all_land(spark, tmp_path):
     assert read.count() == 600 + 100 - 4
     assert read.filter(F.col("url").isin(victims)).count() == 0
     inc.unpersist()
+    df.unpersist()
+
+
+def test_projected_reads_keep_takedowns(spark, tmp_path):
+    """A read that projects the key column away still drops tombstoned
+    rows: the decode kernel decodes the key for the test and projects it
+    away after — on read_decoded, read_appended and the DataSource."""
+    from eel_sdk_spark.checkpoint import append_encode
+    from eel_sdk_spark.sources.eel_datasource import register
+
+    df = webtext_df(spark, 1500, parts=4).cache()
+    inc = df.filter(F.hash("url") % 3 == 0)
+    tbl = ManifestTable(str(tmp_path), "blocks")
+    encode_with_checkpoint(spark, df.filter(F.hash("url") % 3 != 0), tbl,
+                           n_parts=4, run_id="r1")
+    since = tbl.current().snapshot_id
+    append_encode(spark, inc, tbl, n_parts=4, run_id="r2")
+    n, n_inc = df.count(), inc.count()
+    delete_rows(spark, tbl, [inc.select("url").first()["url"]])
+
+    assert tbl.read_decoded(spark, columns=["lang"]).count() == n - 1
+    appended = tbl.read_appended(spark, None, since, columns=["lang"])
+    assert appended.count() == n_inc - 1
+    register(spark)
+    ds = (spark.read.format("eel").option("columns", "lang")
+          .load(str(tmp_path)))
+    assert ds.columns == ["lang"] and ds.count() == n - 1
+    df.unpersist()
+
+
+def test_tombstoned_read_plan_is_one_kernel_stage(spark, tmp_path):
+    """A tombstoned table's read_decoded is the binned file rows fed
+    straight into the decode kernel: no round-robin Exchange, no
+    broadcast join and no Spark scan of the tombstone sidecars, so its
+    count() is one Spark job (the test table fits one bin)."""
+    import uuid
+
+    df, tbl = _mk(spark, tmp_path, "plan", n=1500, parts=4)
+    delete_rows(spark, tbl, _some_urls(df, 2))
+    read = tbl.read_decoded(spark)
+    plan = read._jdf.queryExecution().executedPlan().toString()
+    for op in ("RoundRobinPartitioning", "BroadcastHashJoin",
+               "FileScan parquet"):
+        assert op not in plan, plan
+    sc = spark.sparkContext
+    group = f"scan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "tombstoned scan")
+    try:
+        assert read.count() == 1500 - 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     df.unpersist()

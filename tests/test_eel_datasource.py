@@ -315,8 +315,8 @@ def test_scan_target_parallelism_floor():
     Spark's maxSplitBytes derivation) so a table smaller than one
     target bin still fans out across the cluster instead of planning
     ONE partition — but never below the open-cost floor."""
-    from eel_sdk_spark.sources.eel_datasource import (
-        SCAN_OPEN_COST_BYTES, effective_scan_target)
+    from eel_sdk_spark.encode import (SCAN_OPEN_COST_BYTES,
+                                      effective_scan_target)
 
     gb, target = 1 << 30, 512 << 20
     # big table: target wins
@@ -683,3 +683,34 @@ def test_cursor_end_needs_a_start_minted_on_its_list(spark, tmp_path):
         assert len(r.partitions({"sid": 0}, {"sid": h, "c": 1})) == 1
         assert len(r.partitions({"sid": h, "c": 1}, {"sid": h, "c": 2})) == 1
         assert r.partitions({"sid": b}, {"sid": h})  # the increment
+
+
+def test_read_decoded_and_datasource_share_bins(spark, tmp_path,
+                                                monkeypatch):
+    """read_decoded (``decode_files_df``) and the DataSource reader plan
+    the same tasks for the same snapshot: both bin with
+    ``encode.bin_files``, floored at the cluster's parallelism."""
+    from pyspark.sql.types import StructType
+
+    from eel_sdk_spark import encode
+    from eel_sdk_spark.sources.eel_datasource import EelBatchReader
+
+    _, tbl = _mk(spark, tmp_path, n=1200, n_parts=6)
+    # bins at the parallelism floor rather than the open-cost one, so
+    # the KB-scale test table splits into several
+    monkeypatch.setattr(encode, "SCAN_OPEN_COST_BYTES", 1)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS",
+                       str(spark.sparkContext.defaultParallelism))
+    real, planned = encode.bin_files, []
+
+    def spy(*a, **k):
+        planned.append(real(*a, **k))
+        return planned[-1]
+
+    monkeypatch.setattr(encode, "bin_files", spy)
+    tbl.read_decoded(spark)
+    reader = EelBatchReader({"path": str(tmp_path)},
+                            StructType.fromDDL(tbl.row_schema()))
+    bins = [p.value for p in reader.partitions()]
+    assert len(planned) == 2 and planned[0] == planned[1] == bins
+    assert len(bins) > 1
