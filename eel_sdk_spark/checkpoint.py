@@ -794,20 +794,11 @@ def _repair_once(spark: SparkSession, tbl: ManifestTable,
         # are unknowable -> the only safe repair is everything
         full_rebuild = True
     elif uncovered:
-        # exact parts for coverage-less files, ONE narrow scan (same
-        # aggregate compact() re-records); parts is exact membership,
-        # pre-banding rows normalize to [part_id]
-        rows = (spark.read.option("mergeSchema", "true")
-                .parquet(*[by_name[n] for n in uncovered])
-                .select(F.input_file_name().alias("f"),
-                        F.explode(F.coalesce(
-                            F.col("parts"),
-                            F.array(F.col("part_id")))).alias("p"))
-                .distinct().collect())
-        for n in uncovered:
-            file_parts[n] = set()
-        for r in rows:
-            file_parts[os.path.basename(r["f"])].add(int(r["p"]))
+        # exact parts for coverage-less files, folded in the driver from
+        # their narrow block rows like a run record's coverage
+        paths = [by_name[n] for n in uncovered]
+        cov = _file_entries(paths, _file_block_stats(paths)[0], set())[0]
+        file_parts.update((n, _expand_coverage(c)) for n, c in cov.items())
 
     if full_rebuild:
         drop = set(by_name)
@@ -1444,16 +1435,19 @@ def _fold_summaries(rows) -> dict:
 #: the block-row columns a run record folds: part membership, codec,
 #: value and byte counts, key stats, and the summary sentinels' words
 #: (never ``header`` or ``payload``)
-_RUN_RECORD_COLS = ("parts", "col", "codec", "n_values", "raw_bytes",
-                    "enc_bytes", "min_s", "max_s", "min_i", "max_i",
-                    "key_bloom")
+_RUN_RECORD_COLS = ("part_id", "parts", "col", "codec", "n_values",
+                    "raw_bytes", "enc_bytes", "min_s", "max_s", "min_i",
+                    "max_i", "key_bloom")
 
 
 def _file_block_stats(files: list[str]) -> tuple[list, list]:
     """(stats, summary_rows) of written block files, from one narrow
     pyarrow read of each: one ``_merge_stats`` row per (file, parts,
     col, codec) group, and the tier-0 sentinel rows apart (their
-    synthetic col names must stay out of the stats)."""
+    synthetic col names must stay out of the stats). A pre-banding
+    block (no ``parts``, or NULL under a merged schema) is a member of
+    ``[part_id]`` alone; a generation without ``key_bloom`` has no
+    sentinels."""
     import pyarrow.compute as pc
 
     from .encode import SUMMARY_COL_PREFIX
@@ -1462,14 +1456,17 @@ def _file_block_stats(files: list[str]) -> tuple[list, list]:
     summary_rows: list[dict] = []
     for f, t in zip(files, _read_block_rows(files, _RUN_RECORD_COLS)):
         sentinel = pc.starts_with(t.column("col"), SUMMARY_COL_PREFIX)
-        summary_rows += [
-            {"file": f, **r} for r in t.filter(sentinel).select(
-                ["col", "key_bloom", "n_values"]).to_pylist()]
+        if "key_bloom" in t.column_names:
+            summary_rows += [
+                {"file": f, **r} for r in t.filter(sentinel).select(
+                    ["col", "key_bloom", "n_values"]).to_pylist()]
         t = t.filter(pc.invert(sentinel))
         cols = t.select([c for c in t.column_names
                          if c != "key_bloom"]).to_pydict()
-        for parts, col, codec, nv, raw, enc, mns, mxs, mni, mxi in zip(
-                *(cols[c] for c in _RUN_RECORD_COLS[:-1])):
+        none = [None] * t.num_rows
+        for pid, parts, col, codec, nv, raw, enc, mns, mxs, mni, mxi in zip(
+                *(cols.get(c, none) for c in _RUN_RECORD_COLS[:-1])):
+            parts = [pid] if parts is None else parts
             _merge_stats(groups.setdefault(
                 (f, tuple(parts), col, codec),
                 {"file": f, "parts": parts, "col": col, "codec": codec,
@@ -1496,6 +1493,52 @@ def _merge_stats(acc: dict, r) -> None:
             acc[k] = r[k] if acc[k] is None else pick(acc[k], r[k])
 
 
+def _file_entries(files: list[str], stats: list,
+                  key_names: set[str]) -> tuple[dict, dict, dict]:
+    """The per-file manifest entries of ``files``, folded from their
+    ``_file_block_stats`` groups — what a run record and a rewrite
+    record for the files they wrote, and what repair reads for files
+    the manifest does not cover:
+
+    - part coverage per basename (``compact_coverage``); a file with no
+      block row (a hash-empty write) covers ``[]``, so pruning skips it
+      without a footer read
+    - ``[n_rows, raw_bytes, enc_bytes]`` per basename, rows counted on
+      the first column (every column of a block group has its rows)
+    - ``{col: {basename: {"s"|"i": [lo, hi]}}}`` for each column of
+      ``key_names``: the file's key range, recorded only when every key
+      block of the file carries stats (strings past STATS_STR_LEN carry
+      none, and a range from the other blocks would exclude their keys);
+      a missing entry means keep."""
+    first_col = min((r["col"] for r in stats), default=None)
+    part_sets: dict[str, set[int]] = {}
+    file_stats: dict[str, list[int]] = {}
+    key_acc: dict[tuple, dict] = {}
+    for r in stats:
+        base = os.path.basename(r["file"])
+        fs = file_stats.setdefault(base, [0, 0, 0])
+        if r["col"] == first_col:
+            fs[0] += int(r["nv"])
+        fs[1] += int(r["raw"])
+        fs[2] += int(r["enc"])
+        part_sets.setdefault(base, set()).update(int(p) for p in r["parts"])
+        if r["col"] in key_names:
+            _merge_stats(key_acc.setdefault((r["col"], base),
+                                            dict(_NO_STATS)), r)
+    ranges: dict[str, dict[str, dict]] = {}
+    for (col, base), a in key_acc.items():
+        if a["cnt"] and a["cns"] == a["cnt"] and a["mns"] is not None:
+            ranges.setdefault(col, {})[base] = {"s": [a["mns"], a["mxs"]]}
+        elif a["cnt"] and a["cni"] == a["cnt"] and a["mni"] is not None:
+            ranges.setdefault(col, {})[base] = {
+                "i": [int(a["mni"]), int(a["mxi"])]}
+    bases = [os.path.basename(f) for f in files]
+    return ({b: compact_coverage(sorted(part_sets.get(b, ())))
+             for b in bases},
+            {b: file_stats.get(b, [0, 0, 0]) for b in bases},
+            ranges)
+
+
 def _run_record(files: list[str], run_id: str,
                 fingerprint: str | None, n_parts: int, salt: int,
                 salt_by: str | None, key,
@@ -1504,70 +1547,38 @@ def _run_record(files: list[str], run_id: str,
     (file, parts, col, codec) groups of the files it wrote
     (``_file_block_stats``, no Spark job; n_files x n_cols x codecs
     rows): part ids, rows, byte totals and codec mix, plus the per-file
-    part coverage, key ranges, summary blooms and stats that let lookups
-    prune files with ZERO I/O. Grouping on the EXACT parts array keeps
-    part ids and coverage exact in every layout. None for an empty
-    write."""
+    entries (``_file_entries``: part coverage, key ranges, stats) and
+    summary blooms that let lookups prune files with ZERO I/O. Grouping
+    on the EXACT parts array keeps part ids and coverage exact in every
+    layout. None for an empty write."""
     from .encode import effective_bloom_bits, key_cols as _kc
 
     stats, summary_rows = _file_block_stats(files)
     if not stats:
         return None
     kset = set(_kc(key))
-    first_col = min(r["col"] for r in stats)
     codec_mix: dict[str, int] = {}
     col_bytes: dict[str, list[int]] = {}
-    fp_sets: dict[str, set[int]] = {}
-    key_acc: dict[str, dict] = {}
-    file_stats: dict[str, list[int]] = {}
     for r in stats:
         k = f"{r['col']}:{r['codec']}"
         codec_mix[k] = codec_mix.get(k, 0) + int(r["cnt"])
         cb = col_bytes.setdefault(r["col"], [0, 0])
         cb[0] += int(r["raw"])
         cb[1] += int(r["enc"])
-        base = os.path.basename(r["file"])
-        fs = file_stats.setdefault(base, [0, 0, 0])
-        if r["col"] == first_col:
-            fs[0] += int(r["nv"])
-        fs[1] += int(r["raw"])
-        fs[2] += int(r["enc"])
-        fp_sets.setdefault(base, set()).update(int(p) for p in r["parts"])
-        if r["col"] in kset:
-            _merge_stats(key_acc.setdefault((r["col"], base),
-                                            dict(_NO_STATS)), r)
     # Per-file KEY RANGE (min..max of the key column over the file's
     # blocks): the manifest-side lookup pruner for banded tables whose
     # input arrives CLUSTERED by the key — the no-exchange layout keeps
-    # that clustering, so files cover disjoint key slices. Recorded ONLY
-    # when every key block in the file carries stats (strings past
-    # STATS_STR_LEN carry none, and a range from the other blocks would
-    # exclude their keys); a missing entry means keep. Composite keys
-    # record a range per COMPONENT (file_key_ranges_cols); the single
-    # map carries the PRIMARY component for every existing consumer.
-    ranges_by_col: dict[str, dict[str, dict]] = {}
-    for (col, base), a in key_acc.items():
-        if a["cnt"] and a["cns"] == a["cnt"] and a["mns"] is not None:
-            ranges_by_col.setdefault(col, {})[base] = {
-                "s": [a["mns"], a["mxs"]]}
-        elif a["cnt"] and a["cni"] == a["cnt"] and a["mni"] is not None:
-            ranges_by_col.setdefault(col, {})[base] = {
-                "i": [int(a["mni"]), int(a["mxi"])]}
-    primary = _kc(key)[0]
-    file_key_ranges = ranges_by_col.get(primary, {})
-    # Part membership per file. Part-ALIGNED files hold few scattered
-    # parts -> exact sorted lists (a min/max range would match almost
-    # every lookup once AQE coalesces parts into a file). BANDED files
-    # hold long contiguous part runs -> the exact list is O(n_parts) PER
-    # FILE, which at 800k files x 10k parts is a multi-GB manifest; those
-    # collapse to {"ranges": [[lo, hi], ...]} (coverage is used for
-    # PRUNING only, so a range over-approximation is safe — it can only
-    # keep extra files, never skip a real one; run part_ids above stays
-    # the exact union regardless). Empty output files (hash-empty
-    # partitions) are recorded as [] so pruning skips them without
-    # falling back to a footer read.
-    file_parts = {os.path.basename(f): compact_coverage(sorted(
-        fp_sets.get(os.path.basename(f), set()))) for f in files}
+    # that clustering, so files cover disjoint key slices. Composite
+    # keys record a range per COMPONENT (file_key_ranges_cols); the
+    # single map carries the PRIMARY component for every existing
+    # consumer. Part membership per file: part-ALIGNED files hold few
+    # scattered parts -> exact sorted lists (a min/max range would match
+    # almost every lookup once AQE coalesces parts into a file). BANDED
+    # files hold long contiguous part runs -> the exact list is
+    # O(n_parts) PER FILE, which at 800k files x 10k parts is a multi-GB
+    # manifest; those collapse to the exact range form (run part_ids
+    # below stays the exact union regardless).
+    file_parts, file_stats, ranges_by_col = _file_entries(files, stats, kset)
 
     return {
         "run_id": run_id,
@@ -1585,7 +1596,7 @@ def _run_record(files: list[str], run_id: str,
         # pruning for banded tables (absent entries = keep). For a
         # composite key this is the PRIMARY component; the other
         # components' ranges ride file_key_ranges_cols below.
-        "file_key_ranges": file_key_ranges,
+        "file_key_ranges": ranges_by_col.get(_kc(key)[0], {}),
         **({"file_key_ranges_cols": ranges_by_col}
            if len(kset) > 1 else {}),
         # col -> basename -> {"b64": words, "n": values}: the tier-0
@@ -1596,8 +1607,7 @@ def _run_record(files: list[str], run_id: str,
         # basename -> [n_rows, raw_bytes, enc_bytes]: lets table stats be
         # summed over the LIVE file set after rewrites (purge/compact)
         # instead of over lineage totals that still count replaced files
-        "file_stats": {os.path.basename(f): file_stats.get(
-            os.path.basename(f), [0, 0, 0]) for f in files},
+        "file_stats": file_stats,
         "fingerprint": fingerprint,
         "n_parts": n_parts,
         "salt": salt,

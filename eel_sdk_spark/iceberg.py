@@ -116,8 +116,7 @@ class IcebergBlocksTable:
                 f"('{_prop_str(k)}' = '{_prop_str(v)}')")
         return self.current()
 
-    def compact(self, spark: SparkSession, n_files: int,
-                by: list[str] | None = None):
+    def compact(self, spark: SparkSession, n_files: int):
         spark.sql(
             f"CALL {self.identifier.split('.')[0]}.system.rewrite_data_files"
             f"(table => '{self.identifier}')")

@@ -148,25 +148,6 @@ def _decode_context(snap, schema):
     return ctx
 
 
-def _file_sizes(snap, files: list[str]) -> list[int]:
-    """Per-file encoded byte sizes for admission control, from the
-    manifest's recorded file stats (``Snapshot.file_stats``) — zero
-    plan-time I/O; local stat fallback for files encoded before stats
-    were recorded."""
-    stats = snap.file_stats()
-    out = []
-    for f in files:
-        st = stats.get(os.path.basename(f))
-        if st and st[2]:
-            out.append(int(st[2]))
-        else:
-            try:
-                out.append(os.path.getsize(f))
-            except OSError:
-                out.append(0)
-    return out
-
-
 class EelBatchReader(DataSourceReader):
     def __init__(self, options, schema):
         tbl = _open_table(options)
@@ -270,9 +251,9 @@ class EelStreamReader(DataSourceStreamReader):
     after the cursor exhausts the list the offset collapses to the
     plain ``{"sid": B}`` and incremental windows (already bounded by
     the poll interval) proceed as before. Bytes come from the
-    manifest's per-file stats (zero plan-time I/O; ``os.path.getsize``
-    fallback); at least one file always admits so progress is
-    guaranteed.
+    manifest's per-file stats (``Snapshot.file_sizes``: zero plan-time
+    I/O, ``os.path.getsize`` fallback); at least one file always admits
+    so progress is guaranteed.
 
     Bounded mode requires ``option("stream_id", "...")``: Spark never
     tells ``latestOffset`` the committed offset, and on BOTH a first
@@ -387,7 +368,7 @@ class EelStreamReader(DataSourceStreamReader):
         if self._max_files is not None:
             k1 = min(k1, k0 + max(1, self._max_files))
         if self._max_bytes is not None:
-            sizes = _file_sizes(tbl.snapshot(sid), files)
+            sizes = tbl.snapshot(sid).file_sizes(files)
             budget, k = self._max_bytes, k0
             while k < len(files) and (k == k0 or budget > 0):
                 budget -= sizes[k]

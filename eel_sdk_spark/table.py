@@ -50,6 +50,24 @@ class Snapshot:
         out.update(props.get("file_stats_extra", {}))
         return out
 
+    def file_sizes(self, files: list[str]) -> list[int]:
+        """Encoded bytes of each of ``files``: the manifest's
+        ``enc_bytes`` (:meth:`file_stats`), else the file's size on the
+        local filesystem for files written before per-file stats, else
+        0 for a file that is gone."""
+        stats = self.file_stats()
+        out = []
+        for f in files:
+            st = stats.get(os.path.basename(f))
+            if st and st[2]:
+                out.append(int(st[2]))
+            else:
+                try:
+                    out.append(os.path.getsize(f))
+                except OSError:
+                    out.append(0)
+        return out
+
 
 class CommitConflict(Exception):
     """An ``expect_properties`` commit guard failed: another committer
@@ -406,6 +424,10 @@ class ManifestTable:
 
                 return spark.createDataFrame(
                     [], StructType.fromDDL(snap.schema_ddl))
+        return self._read_files(spark, files)
+
+    def _read_files(self, spark, files: list[str]):
+        """The raw rows of ``files`` as one DataFrame."""
         # basePath keeps hive-style partition columns discoverable when
         # reading explicit leaf files (partition values live in the path,
         # not the files — the re-injection HiveFilePublisher.scala:23-61
@@ -803,333 +825,167 @@ class ManifestTable:
                            properties, mode)
 
     def compact(self, spark, n_files: int,
-                by: list[str] | None = None,
-                refresh_bloom_index: bool | None = None,
                 stage: str | None = None) -> Snapshot:
-        """Small-file compaction: rewrite the current snapshot to exactly
-        ``n_files`` files in one new snapshot (reference: Compactor.compactTo,
+        """Small-file compaction: rewrite every file of the head of
+        ``stage`` (main by default) into ``n_files`` files in one new
+        snapshot, fewer when a hash partition gets no block group
+        (reference: Compactor.compactTo,
         eel-hive/src/main/scala/io/eels/component/hive/Compactor.scala:16-21;
         Iceberg's rewrite_data_files). Old files stay on disk for time
-        travel; the new snapshot references only the rewritten set.
+        travel. One rewrite routine serves this and :meth:`binpack`
+        (:meth:`_rewrite`: layout, manifest entries, CAS retries).
 
-        ``by`` keeps co-location through the rewrite (hash repartition on
-        those columns instead of round-robin). For encoded-blocks tables
-        this is REQUIRED to preserve the groups-whole-per-file invariant
-        that the zero-shuffle ``read_decoded`` path relies on — the
-        auto-detect below applies ``part_id`` when the schema is a blocks
-        schema and the caller did not choose.
-
-        ``stage`` lands the compacted snapshot on a named ref (audit,
-        then ``publish`` — same WAP flow as staged encodes/upserts); a
-        staged compact defers the bloom-index refresh to post-publish
-        maintenance, since the index registration is a main-line commit.
-
-        Like purge/upsert (r8), the overwrite commit is CAS-guarded on
-        the tombstone list: a ``delete_rows`` landing mid-compaction
-        must not be erased by the property overwrite — on conflict the
-        compaction re-reads and retries.
-        """
-        last_err = None
-        for _ in range(3):
-            try:
-                return self._compact_once(spark, n_files, by,
-                                          refresh_bloom_index, stage)
-            except CommitConflict as e:
-                last_err = e  # rival delete mid-rewrite: recompute
-        raise last_err
-
-    def _compact_once(self, spark, n_files: int,
-                      by: list[str] | None,
-                      refresh_bloom_index: bool | None,
-                      stage: str | None) -> Snapshot:
-        snap = self.head(stage)
-        df = self.read(spark, snapshot_id=snap.snapshot_id if snap
-                       else None)
-        if {"part_id", "block_seq", "col"} <= set(df.columns):
-            # tier-0 summary sentinels describe the ORIGINAL files — a
-            # compacted file mixes many sources, so carrying them over
-            # would stamp wrong summaries onto new basenames. Drop them;
-            # rewritten files simply have no summary (conservatively
-            # kept by lookups) until the next fresh encode.
-            from pyspark.sql import functions as F
-
-            from .encode import SUMMARY_COL_PREFIX
-
-            df = df.filter(~F.col("col").startswith(SUMMARY_COL_PREFIX))
-        if by is None and {"part_id", "block_seq", "col"} <= set(df.columns):
-            by = ["part_id"]
-            if "part_hi" in df.columns and (
-                    df.filter("part_hi != part_id").limit(1).count() > 0):
-                # BANDED blocks (no-exchange 'local' layout): every task's
-                # anchor is its smallest part — typically part 0 for ALL
-                # of them, so hashing on part_id alone would funnel the
-                # whole table through one writer. The full group key
-                # spreads blocks while still keeping each decode group
-                # (all columns of one block) whole in one file.
-                by = ["part_id", "block_seq", "writer_uid"]
-        df = (df.repartition(n_files, *by).sortWithinPartitions(*by)
-              if by else df.repartition(n_files))
-        job_dir = self.new_data_path()
-        df.write.mode("overwrite").parquet(job_dir)
-        props = dict(snap.properties)
-        if by and "part_id" in (by or []):
-            # re-record per-file part coverage for the REWRITTEN files so
-            # point lookups stay manifest-only after compaction (the runs'
-            # coverage keys reference the replaced basenames and simply
-            # stop matching); same one-scan aggregate the encoder uses
-            import os as _os
-
-            from pyspark.sql import functions as F
-
-            rewritten = spark.read.parquet(job_dir)
-            if "parts" in rewritten.columns:
-                # exact coverage incl. banded blocks (parts is the block's
-                # full membership; part_id alone is just the anchor).
-                # Rows from pre-banding files carry NULL parts after the
-                # allowMissingColumns union — normalize to [part_id] or
-                # explode drops them and their file gets EMPTY coverage
-                # (pruned out of every future lookup)
-                rows = (rewritten
-                        .select(F.input_file_name().alias("f"),
-                                F.explode(F.coalesce(
-                                    F.col("parts"),
-                                    F.array(F.col("part_id")))).alias("p"))
-                        .distinct().collect())
-            else:  # pre-banding blocks table
-                rows = (rewritten
-                        .groupBy(F.input_file_name().alias("f"),
-                                 F.col("part_id").alias("p"))
-                        .count().collect())
-            cov: dict[str, list[int]] = {}
-            for r in rows:
-                cov.setdefault(_os.path.basename(r["f"]), []).append(
-                    int(r["p"]))
-            files = self.list_written_files(job_dir)
-            # empty output files (hash-empty partitions) hold NO parts:
-            # record them as [] so pruning skips them without a footer
-            # read; long contiguous sets (banded blocks) collapse to the
-            # range form (see checkpoint.compact_coverage)
-            from .checkpoint import compact_coverage
-
-            props["file_parts_extra"] = {
-                _os.path.basename(f): compact_coverage(sorted(cov.get(
-                    _os.path.basename(f), []))) for f in files}
-            # re-record per-file row/byte stats for the rewritten files
-            # (same contract as the run records' file_stats) so
-            # analyze-table keeps summing the LIVE file set after the
-            # old basenames stop matching
-            fs_rows = (rewritten
-                       .groupBy(F.input_file_name().alias("f"), "col")
-                       .agg(F.sum("n_values").alias("nv"),
-                            F.sum("raw_bytes").alias("raw"),
-                            F.sum("enc_bytes").alias("enc"))
-                       .collect())
-            fstats: dict[str, list[int]] = {}
-            fs_first = min((r["col"] for r in fs_rows), default=None)
-            for r in fs_rows:
-                fs = fstats.setdefault(_os.path.basename(r["f"]),
-                                       [0, 0, 0])
-                if r["col"] == fs_first:
-                    fs[0] += int(r["nv"])
-                fs[1] += int(r["raw"])
-                fs[2] += int(r["enc"])
-            props["file_stats_extra"] = {
-                _os.path.basename(f): fstats.get(_os.path.basename(f),
-                                                 [0, 0, 0])
-                for f in files}
-            # re-record per-file KEY ranges too (same contract as the
-            # encode-time file_key_ranges). Ranges stay CORRECT after a
-            # rewrite by construction; their pruning POWER depends on
-            # the rewrite layout — the banded 3-key hash scatters key
-            # clustering, so rewritten ranges typically widen (they can
-            # only over-keep, never wrongly drop a file). Keyed by the
-            # lineage's key column; skipped for tables without runs.
-            runs = snap.properties.get("runs") or []
-            key = runs[-1].get("key") if runs else None
-            if key is not None and not isinstance(key, str):
-                # composite lineage key: the extra ranges cover its
-                # PRIMARY component (same rule as the large-probe-set
-                # upsert tier); per-component history stays in the runs
-                key = key[0]
-            if key is not None:
-                kr_rows = (rewritten.filter(F.col("col") == key)
-                           .groupBy(F.input_file_name().alias("f"))
-                           .agg(F.count("*").alias("cnt"),
-                                F.min("min_s").alias("mns"),
-                                F.max("max_s").alias("mxs"),
-                                F.min("min_i").alias("mni"),
-                                F.max("max_i").alias("mxi"),
-                                F.count("min_s").alias("cns"),
-                                F.count("min_i").alias("cni"))
-                           .collect())
-                ranges: dict[str, dict] = {}
-                for r in kr_rows:
-                    base = _os.path.basename(r["f"])
-                    if r["cnt"] and r["cns"] == r["cnt"] \
-                            and r["mns"] is not None:
-                        ranges[base] = {"s": [r["mns"], r["mxs"]]}
-                    elif r["cnt"] and r["cni"] == r["cnt"] \
-                            and r["mni"] is not None:
-                        ranges[base] = {"i": [int(r["mni"]),
-                                              int(r["mxi"])]}
-                props["file_key_ranges_extra"] = {"key": key,
-                                                  "files": ranges}
-            out = self.commit(files, snap.schema_ddl, props,
-                              mode="overwrite", stage=stage,
-                              expect_properties={
-                                  "committed_at":
-                                  snap.properties.get("committed_at")})
-        else:
-            out = self.commit(self.list_written_files(job_dir),
-                              snap.schema_ddl, props, mode="overwrite",
-                              stage=stage,
-                              expect_properties={
-                                  "committed_at":
-                                  snap.properties.get("committed_at")})
-        # a registered bloom INDEX references the replaced basenames, so
-        # every rewritten file would fall back to the per-file scan —
-        # refresh it by default so compaction keeps the O(1)-file lookup
-        # property (opt out with refresh_bloom_index=False to defer the
-        # ~1/4-encode-pass rebuild to a later maintenance window)
-        if props.get("bloom_index") and refresh_bloom_index is not False \
-                and stage is None:
-            from .checkpoint import build_bloom_index
-
-            build_bloom_index(spark, self,
-                              key=props["bloom_index"]["key"])
-            out = self.current()
-        return out
+        As every file is replaced, a registered bloom index is rebuilt
+        after the commit, so lookups keep consulting it instead of
+        scanning each rewritten file — except on a ``stage`` (write,
+        audit, then ``publish``), since the index registration is a
+        main-line commit."""
+        return self._rewrite(spark, stage,
+                             lambda snap: (snap.files, n_files))[0]
 
     def binpack(self, spark, target_bytes: int = 128 << 20,
-                min_input_files: int = 2,
                 stage: str | None = None) -> dict:
         """INCREMENTAL small-file compaction (Iceberg's binpack
         rewrite_data_files strategy): rewrite ONLY the files under
-        ``target_bytes`` into ~target-sized outputs; every larger file
-        — and its manifest coverage, stats, key ranges, and summary
+        ``target_bytes`` of encoded bytes (``Snapshot.file_sizes``) into
+        ``ceil(small bytes / target_bytes)`` outputs; every larger file
+        — and its manifest coverage, stats, key ranges and summary
         blooms — survives byte-identical. Cost is O(small-file bytes),
-        never O(table): on a 100k-file table where a follower lands one
-        file per poll, the nightly binpack touches the day's small tail
-        while ``compact()`` would rewrite 100 TB. The group-preserving
-        repartition (part_id, block_seq, writer_uid) keeps every decode
-        block group whole in one output file, so the zero-shuffle
-        ``read_decoded`` path survives the rewrite.
+        never O(table): the nightly binpack of a follower sink touches
+        the day's small tail while ``compact()`` would rewrite it all.
 
-        Sizes come from the local filesystem (an object-store port
-        would read them from its listing or the manifest's per-file
-        stats). Coverage/stats/key-range EXTRA maps are MERGED — new
-        entries for the packed outputs, survivors keep theirs — unlike
-        ``compact()``'s wholesale replacement. A registered bloom index
-        keeps answering for survivors; packed files fall back to the
-        per-file scan until the next index build (append-safe
-        contract). Returns a summary dict; no-op (no commit) when
-        fewer than ``min_input_files`` qualify."""
-        import math as _math
-        import os as _os
+        Same rewrite routine as :meth:`compact` (:meth:`_rewrite`); the
+        manifest's extra maps are merged, so survivors keep their
+        entries and the packed outputs get theirs. A registered bloom
+        index is rebuilt only when every file was small; otherwise it
+        keeps answering for survivors and packed files fall back to the
+        per-file scan until the next index build. Returns a summary
+        dict; a no-op (no commit) when fewer than 2 files qualify."""
+        import math
 
+        def pick(snap):
+            sizes = dict(zip(snap.files, snap.file_sizes(snap.files)))
+            small = [f for f in snap.files if sizes[f] < target_bytes]
+            if len(small) < 2:
+                return [], 0
+            return small, max(1, math.ceil(sum(sizes[f] for f in small)
+                                           / target_bytes))
+
+        out, replaced, new_files = self._rewrite(spark, stage, pick)
+        return {"rewritten_files": len(replaced),
+                "new_files": len(new_files),
+                "surviving_files": len(out.files) - len(new_files),
+                "snapshot_id": out.snapshot_id}
+
+    def _rewrite(self, spark, stage: str | None, select):
+        """Replace some files of the head of ``stage`` by a fresh write
+        of their rows, in one overwrite commit: ``select(snap)`` returns
+        the files to replace and the number of output files (no files
+        is a no-op). Returns ``(snapshot, replaced, new_files)``.
+
+        Encoded-blocks tables keep every decode block group whole in
+        one output file, which the zero-shuffle ``read_decoded`` path
+        relies on: part-aligned tables hash on ``part_id``, banded ones
+        on the full group key. Other tables are round-robin. The new
+        files' part coverage, stats and key ranges are folded in the
+        driver from their narrow block rows (``checkpoint._file_entries``,
+        as a run record's are) and merged into the ``*_extra`` maps:
+        entries of files that did not survive are dropped. Key ranges
+        cover the lineage key's primary component. Their pruning power
+        depends on the layout: the banded 3-key hash scatters key
+        clustering, so rewritten ranges typically widen (they can only
+        over-keep, never wrongly drop a file).
+
+        The commit is CAS-guarded on ``committed_at``: a rival commit
+        landing mid-rewrite (a ``delete_rows``, whose tombstones the
+        property overwrite would erase) makes the rewrite re-read the
+        head, re-select and retry, up to 3 times."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
-        snap = self.head(stage)
-        if snap is None or not snap.files:
-            raise FileNotFoundError(f"table {self.dir} has no snapshot")
-        sizes = {f: _os.path.getsize(f) for f in snap.files
-                 if _os.path.exists(f)}
-        small = [f for f in snap.files if sizes.get(f, 0) < target_bytes]
-        if len(small) < min_input_files:
-            return {"rewritten_files": 0, "new_files": 0,
-                    "surviving_files": len(snap.files),
-                    "snapshot_id": snap.snapshot_id}
-        survivors = [f for f in snap.files if f not in set(small)]
-        n_out = max(1, _math.ceil(sum(sizes[f] for f in small)
-                                  / target_bytes))
+        from .checkpoint import (_file_block_stats, _file_entries,
+                                 _read_block_rows, build_bloom_index)
+        from .encode import SUMMARY_COL_PREFIX
 
-        df = spark.read.option("mergeSchema", "true").parquet(*small)
-        blocksy = {"part_id", "block_seq", "col"} <= set(df.columns)
-        if blocksy:
-            from .encode import SUMMARY_COL_PREFIX
+        last_err = None
+        for _ in range(3):
+            snap = self.head(stage)
+            if snap is None or not snap.files:
+                raise FileNotFoundError(f"table {self.dir} has no snapshot")
+            files, n_out = select(snap)
+            if not files:
+                return snap, [], []
+            blocks = {"part_id", "block_seq", "col"} <= set(
+                pq.read_schema(files[0]).names)
+            if blocks:
+                # one read under the merged schema (block files live in
+                # unpartitioned staging dirs); tier-0 summary sentinels
+                # describe the REPLACED files: a rewritten file mixes
+                # many sources, so it has no summary (lookups keep it)
+                # until the next fresh encode
+                df = (spark.read.option("mergeSchema", "true")
+                      .parquet(*files)
+                      .filter(~F.col("col").startswith(SUMMARY_COL_PREFIX)))
+                # BANDED blocks (no-exchange 'local' layout): every
+                # task's anchor is its smallest part — typically part 0
+                # for ALL of them, so hashing on part_id alone would
+                # funnel the whole table through one writer
+                banded = any(
+                    t.filter(pc.not_equal(t["part_id"],
+                                          t["part_hi"])).num_rows
+                    for t in _read_block_rows(files, ("part_id", "part_hi"))
+                    if "part_hi" in t.column_names)
+                by = (["part_id", "block_seq", "writer_uid"] if banded
+                      else ["part_id"])
+                df = df.repartition(n_out, *by).sortWithinPartitions(*by)
+            else:
+                df = self._read_files(spark, files).repartition(n_out)
+            job_dir = self.new_data_path()
+            df.write.mode("overwrite").parquet(job_dir)
+            new_files = self.list_written_files(job_dir)
+            replaced = set(files)
+            survivors = [f for f in snap.files if f not in replaced]
+            props = dict(snap.properties)
+            if blocks:
+                runs = props.get("runs") or []
+                key = runs[-1].get("key") if runs else None
+                if key is not None and not isinstance(key, str):
+                    key = key[0]  # composite key: its primary component
+                parts, stats, ranges = _file_entries(
+                    new_files, _file_block_stats(new_files)[0], {key})
+                live = {os.path.basename(f) for f in survivors}
 
-            # summary sentinels describe the ORIGINAL files — drop them
-            # (packed outputs have no summary until the next encode)
-            df = df.filter(~F.col("col").startswith(SUMMARY_COL_PREFIX))
-            by = ["part_id", "block_seq", "writer_uid"]
-            df = (df.repartition(n_out, *by).sortWithinPartitions(*by))
-        else:
-            df = df.repartition(n_out)
-        job_dir = self.new_data_path()
-        df.write.mode("overwrite").parquet(job_dir)
-        new_files = self.list_written_files(job_dir)
+                def merged(old: dict, new: dict) -> dict:
+                    return {**{b: v for b, v in old.items() if b in live},
+                            **new}
 
-        props = dict(snap.properties)
-        replaced = {_os.path.basename(f) for f in small}
-        if blocksy:
-            rewritten = spark.read.parquet(job_dir)
-            # exact part coverage for the packed outputs (same one-scan
-            # aggregate compact uses; banded parts normalize via the
-            # parts column, pre-banding rows via part_id)
-            rows = (rewritten
-                    .select(F.input_file_name().alias("f"),
-                            F.explode(F.coalesce(
-                                F.col("parts"),
-                                F.array(F.col("part_id")))).alias("p"))
-                    .distinct().collect()) if "parts" in \
-                rewritten.columns else \
-                (rewritten.groupBy(F.input_file_name().alias("f"),
-                                   F.col("part_id").alias("p"))
-                 .count().collect())
-            cov: dict[str, list[int]] = {}
-            for r in rows:
-                cov.setdefault(_os.path.basename(r["f"]), []).append(
-                    int(r["p"]))
-            from .checkpoint import compact_coverage
-
-            extra = {b: v for b, v in
-                     props.get("file_parts_extra", {}).items()
-                     if b not in replaced}
-            extra.update({_os.path.basename(f): compact_coverage(
-                sorted(cov.get(_os.path.basename(f), [])))
-                for f in new_files})
-            props["file_parts_extra"] = extra
-            # per-file stats for the packed outputs (live-scope
-            # analyze-table); survivors keep run/extra entries
-            fs_rows = (rewritten
-                       .filter(~F.col("col").startswith("__fs__:"))
-                       .groupBy(F.input_file_name().alias("f"), "col")
-                       .agg(F.sum("n_values").alias("nv"),
-                            F.sum("raw_bytes").alias("raw"),
-                            F.sum("enc_bytes").alias("enc"))
-                       .collect())
-            fstats: dict[str, list[int]] = {}
-            fs_first = min((r["col"] for r in fs_rows), default=None)
-            for r in fs_rows:
-                fs = fstats.setdefault(_os.path.basename(r["f"]),
-                                       [0, 0, 0])
-                if r["col"] == fs_first:
-                    fs[0] += int(r["nv"])
-                fs[1] += int(r["raw"])
-                fs[2] += int(r["enc"])
-            fse = {b: v for b, v in
-                   props.get("file_stats_extra", {}).items()
-                   if b not in replaced}
-            fse.update({_os.path.basename(f): fstats.get(
-                _os.path.basename(f), [0, 0, 0]) for f in new_files})
-            props["file_stats_extra"] = fse
-            # key-range hygiene: replaced basenames out of the extra
-            # map; packed outputs carry NO ranges (conservatively kept
-            # by the range tier until the next encode/compact)
-            kr = props.get("file_key_ranges_extra")
-            if kr:
-                props["file_key_ranges_extra"] = {
-                    "key": kr.get("key"),
-                    "files": {b: v for b, v in kr.get("files", {}).items()
-                              if b not in replaced}}
-        healed = self.commit(survivors + new_files, snap.schema_ddl,
-                             props, mode="overwrite", stage=stage,
-                             expect_properties={
-                                 "committed_at":
-                                 snap.properties.get("committed_at")})
-        return {"rewritten_files": len(small), "new_files": len(new_files),
-                "surviving_files": len(survivors),
-                "snapshot_id": healed.snapshot_id}
+                props["file_parts_extra"] = merged(
+                    props.get("file_parts_extra", {}), parts)
+                props["file_stats_extra"] = merged(
+                    props.get("file_stats_extra", {}), stats)
+                if key is not None:
+                    kr = props.get("file_key_ranges_extra") or {}
+                    props["file_key_ranges_extra"] = {
+                        "key": key,
+                        "files": merged(kr.get("files", {})
+                                        if kr.get("key") == key else {},
+                                        ranges.get(key, {}))}
+            try:
+                out = self.commit(survivors + new_files, snap.schema_ddl,
+                                  props, mode="overwrite", stage=stage,
+                                  expect_properties={
+                                      "committed_at":
+                                      snap.properties.get("committed_at")})
+            except CommitConflict as e:
+                last_err = e
+                continue
+            if not survivors and stage is None and props.get("bloom_index"):
+                build_bloom_index(spark, self,
+                                  key=props["bloom_index"]["key"])
+                out = self.current()
+            return out, files, new_files
+        raise last_err
 
     # -- maintenance (Iceberg expireSnapshots / deleteOrphanFiles parity) --
     def expire_snapshots(self, keep_last: int = 1,

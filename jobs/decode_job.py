@@ -14,19 +14,28 @@ import re
 import sys
 
 
-def _parse_where(expr: str):
+def _parse_where(expr: str, schema_ddl: str):
     """'col OP value' -> Predicate (the IR compiles to both the row filter
-    and the block-stat pruning ranges)."""
+    and the block-stat pruning ranges). The value is typed from the
+    decode schema: an integer for an integral column, else the string,
+    which the row filter casts to the column's type."""
+    from pyspark.sql.types import IntegralType, StructType
+
     from eel_sdk_spark import predicate as P
 
     m = re.fullmatch(r"\s*(\w+)\s*(=|!=|<=|>=|<|>)\s*(.+?)\s*", expr)
     if not m:
         raise SystemExit(f"cannot parse --where {expr!r}: expected 'col OP value'")
     col, op, raw = m.groups()
-    try:
-        value: object = int(raw)
-    except ValueError:
-        value = raw.strip("'\"")
+    typ = next((f.dataType for f in StructType.fromDDL(schema_ddl).fields
+                if f.name == col), None)
+    value: object = raw.strip("'\"")
+    if isinstance(typ, IntegralType):
+        try:
+            value = int(raw)
+        except ValueError:
+            raise SystemExit(f"--where {expr!r}: {col!r} is integral but "
+                             f"{raw!r} is not an integer")
     cls = {"=": P.Equals, "!=": P.NotEquals, "<": P.Lt, "<=": P.Lte,
            ">": P.Gt, ">=": P.Gte}[op]
     return cls(col, value)
@@ -43,8 +52,10 @@ def main(argv=None) -> None:
     p.add_argument("--columns", default=None)
     p.add_argument("--where", default=None,
                    help="simple predicate 'col OP value' (OP in = != < <= > >=);"
-                        " integer values additionally skip whole block groups"
-                        " via header min/max stats before any payload is read")
+                        " a bound on a string or integer column skips files"
+                        " by manifest key ranges and block groups by their"
+                        " min/max stats before any payload is read; live"
+                        " tombstones are dropped")
     p.add_argument("--verify-against", default=None,
                    help="original parquet; reports per-column match counts")
     p.add_argument("--key", default="url")
@@ -172,32 +183,44 @@ def main(argv=None) -> None:
             if cols:
                 decoded = decoded.select(*cols)
         elif args.where:
-            from eel_sdk_spark.predicate import decode_with_predicate
+            # the range lookup's pipeline, one interval per bounded
+            # column: manifest key ranges prune files, block stats prune
+            # groups, the kernel drops tombstones and resolves renames
+            # and widenings, the predicate filters the rows
+            from pyspark.sql.types import StructType
 
-            pred = _parse_where(args.where)
-            # relabel historical block column names (rename_column) so
-            # the predicate decode sees the schema's current names
-            from eel_sdk_spark.table import fold_renames
+            from eel_sdk_spark.checkpoint import (_key_aliases, _serve_plan,
+                                                  _stored_probe, plan_files)
 
-            snap = (tbl.snapshot(args.snapshot_id)
-                    if args.snapshot_id is not None else tbl.current())
-            fold = fold_renames(
-                (snap.properties if snap else {}).get("column_renames", []))
-            blocks = tbl.read(spark, snapshot_id=args.snapshot_id)
-            for old, new in fold.items():
-                from pyspark.sql import functions as _F
-
-                blocks = blocks.withColumn(
-                    "col", _F.when(_F.col("col") == old, new)
-                    .otherwise(_F.col("col")))
-            decoded = decode_with_predicate(blocks, args.schema, pred)
+            pred = _parse_where(args.where, args.schema)
+            bounded = pred.to_block_ranges()
+            if bounded:
+                snap = (tbl.snapshot(args.snapshot_id)
+                        if args.snapshot_id is not None else tbl.current())
+                schema = StructType.fromDDL(args.schema)
+                types = {f.name: f.dataType.simpleString()
+                         for f in schema.fields}
+                names = {c: {c} | _key_aliases(snap, c) for c in bounded}
+                bounds = [tuple(_stored_probe(v, types.get(c)) for v in b)
+                          for c, b in bounded.items()]
+                files = snap.files
+                for c, b in zip(bounded, bounds):
+                    files = plan_files(snap, files, names[c], tiers=1,
+                                       interval=b)
+                decoded = _serve_plan(spark, snap, schema, args.schema,
+                                      files, names, bounds, None, {},
+                                      lazy=True)
+            else:  # no column bounds (!=): every block group qualifies
+                decoded = tbl.read_decoded(spark, args.schema,
+                                           snapshot_id=args.snapshot_id,
+                                           verify=not args.no_verify_crc)
+            decoded = decoded.filter(pred.to_column())
             if cols:
                 decoded = decoded.select(*cols)
         else:
             # zero-shuffle storage decode: whole block files per task
             # (groups are file-adjacent by construction), no regroup
-            # exchange — decode_blocks_df remains the path for predicate
-            # pushdown with block-stat pruning above
+            # exchange
             decoded = tbl.read_decoded(spark, args.schema, columns=cols,
                                        snapshot_id=args.snapshot_id,
                                        verify=not args.no_verify_crc)

@@ -474,7 +474,7 @@ def test_local_encode_then_compact_then_manifest_lookup(spark, tmp_path,
     tbl = ManifestTable(str(tmp_path), "lc")
     encode_with_checkpoint(spark, df, tbl, n_parts=8, run_id="lc1",
                            shuffle="local")
-    tbl.compact(spark, 4)  # blocks schema -> auto by=["part_id"]
+    tbl.compact(spark, 4)  # banded blocks: 3-key group hash
     cov = tbl.current().properties["file_parts_extra"]
     assert set(cov) == {__import__("os").path.basename(f)
                         for f in tbl.current().files}

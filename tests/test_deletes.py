@@ -453,3 +453,32 @@ def test_tombstoned_read_plan_is_one_kernel_stage(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     df.unpersist()
+
+
+def test_decode_job_where_drops_tombstones(spark, tmp_path, monkeypatch):
+    """``decode_job --where`` serves the predicate through the read
+    planner: a tombstoned row stays deleted, and a renamed column
+    filters under its new name."""
+    from eel_sdk_spark import session
+    from jobs import decode_job
+
+    df, tbl = _mk(spark, tmp_path, "where", n=2000, parts=4)
+    tbl.rename_column("lang", "language")
+    victim = df.filter("lang = 'en'").first()["url"]
+    delete_rows(spark, tbl, [victim])
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+
+    def where(expr):
+        out = str(tmp_path / f"out{abs(hash(expr))}")
+        decode_job.main(["--warehouse", str(tmp_path), "--table", "where",
+                         "--where", expr, "--output", out])
+        return spark.read.parquet(out)
+
+    got = where("language=en")
+    want = tbl.read_decoded(spark).filter("language = 'en'")
+    assert got.count() == want.count() > 0
+    assert got.filter(F.col("url") == victim).count() == 0
+    assert sorted(got.columns) == sorted(want.columns)
+    assert where(f"url={victim}").count() == 0
+    df.unpersist()

@@ -301,3 +301,43 @@ def test_repair_refuses_multi_run_table_by_default(spark, tmp_path):
     assert _rows_equal(tbl.read_decoded(spark, SCHEMA_DDL), union)
     df.unpersist()
     extra.unpersist()
+
+
+def test_repair_reads_uncovered_parts_in_driver(spark, tmp_path):
+    """A file committed without a run record has no manifest coverage:
+    repair reads its exact parts from its block rows in the driver. A
+    damaged covered file sharing a part with it drops both, and the
+    parts to re-encode are exactly the parts the two files hold."""
+    from eel_sdk_spark.checkpoint import repair_table
+    from eel_sdk_spark.encode import PART_COL, with_part_id
+
+    def parts_of(path):
+        return set(pq.read_table(path, columns=["parts"]).column("parts")
+                   .combine_chunks().flatten().to_pylist())
+
+    df = webtext_df(spark, 4000, parts=8).cache()
+    df.count()
+    tbl = ManifestTable(str(tmp_path), "bare")
+    encode_with_checkpoint(spark, df, tbl, n_parts=8, run_id="r1",
+                           shuffle=True)
+    victim = _first_nonempty(tbl.current().files)
+    fresh = webtext_df(spark, 400, parts=2).withColumn(
+        "url", F.concat(F.lit("https://bare."), F.col("url")))
+    one_part = (with_part_id(fresh, "url", 8)
+                .filter(F.col(PART_COL) == min(parts_of(victim)))
+                .drop(PART_COL))
+    job_dir = tbl.new_data_path()
+    encode_df(one_part, key="url", n_parts=8, shuffle=True) \
+        .write.mode("overwrite").parquet(job_dir)
+    bare = [f for f in ManifestTable.list_written_files(job_dir)
+            if parts_of(f)]
+    tbl.commit(bare, "", mode="append")  # no run record: uncovered
+    _tamper_payload(victim)
+
+    plan = repair_table(spark, tbl, df, dry_run=True)
+    assert not plan["full_rebuild"] and plan["surviving_files"] > 0
+    assert set(plan["dropped_files"]) == {os.path.basename(f)
+                                          for f in [victim] + bare}
+    assert plan["repaired_parts"] == sorted(
+        set().union(*map(parts_of, [victim] + bare)))
+    df.unpersist()
