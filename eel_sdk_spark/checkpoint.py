@@ -1064,12 +1064,14 @@ def _fits(v, t: str) -> bool:
 
 def range_lookup(spark: SparkSession, tbl: ManifestTable,
                  lower, upper, schema_ddl: str | None = None,
-                 key: str = "url") -> DataFrame:
+                 key: str = "url",
+                 snapshot_id: int | None = None) -> DataFrame:
     """Key-RANGE query against an encoded table (``lower <= key <=
-    upper``), served by the point lookup's pipeline with the interval
-    in place of the value. :func:`plan_files` keeps the files whose
-    manifest key range overlaps it (zero I/O; part pruning does not
-    apply, a key range spans arbitrary parts), the block groups whose
+    upper``; None leaves a side open) AS OF ``snapshot_id`` (default
+    the current snapshot), served by the point lookup's pipeline with
+    the interval in place of the value. :func:`plan_files` keeps the
+    files whose manifest key range overlaps it (zero I/O; part pruning
+    does not apply, a key range spans arbitrary parts), the block groups whose
     min/max stats overlap it are planned from the kept files' narrow
     block rows, and only those are decoded, with the residual filter
     and live tombstones applied. ``key`` is ONE column: on a
@@ -1084,12 +1086,14 @@ def range_lookup(spark: SparkSession, tbl: ManifestTable,
     Both branches drop live tombstones in the decode kernel."""
     from pyspark.sql.types import StructType
 
-    snap = tbl.current()
+    snap = (tbl.current() if snapshot_id is None
+            else tbl.snapshot(snapshot_id))
     if schema_ddl is None:
         schema_ddl = tbl.row_schema(snap)
     schema = StructType.fromDDL(schema_ddl)
-    _check_key_type(schema, key, lower, "range_lookup")
-    _check_key_type(schema, key, upper, "range_lookup")
+    for bound in (lower, upper):
+        if bound is not None:
+            _check_key_type(schema, key, bound, "range_lookup")
     if snap is None or not snap.files:
         raise FileNotFoundError(f"table {tbl.dir} has no committed snapshot")
     typ = next((f.dataType.simpleString() for f in schema.fields

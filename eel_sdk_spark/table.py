@@ -930,11 +930,15 @@ class ManifestTable:
                 # BANDED blocks (no-exchange 'local' layout): every
                 # task's anchor is its smallest part — typically part 0
                 # for ALL of them, so hashing on part_id alone would
-                # funnel the whole table through one writer
+                # funnel the whole table through one writer. Files are
+                # read 16 at a time and the test stops at the first
+                # banded one
                 banded = any(
                     t.filter(pc.not_equal(t["part_id"],
                                           t["part_hi"])).num_rows
-                    for t in _read_block_rows(files, ("part_id", "part_hi"))
+                    for i in range(0, len(files), 16)
+                    for t in _read_block_rows(files[i:i + 16],
+                                              ("part_id", "part_hi"))
                     if "part_hi" in t.column_names)
                 by = (["part_id", "block_seq", "writer_uid"] if banded
                       else ["part_id"])

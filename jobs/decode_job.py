@@ -14,12 +14,21 @@ import re
 import sys
 
 
-def _parse_where(expr: str, schema_ddl: str):
-    """'col OP value' -> Predicate (the IR compiles to both the row filter
-    and the block-stat pruning ranges). The value is typed from the
-    decode schema: an integer for an integral column, else the string,
-    which the row filter casts to the column's type."""
-    from pyspark.sql.types import IntegralType, StructType
+def _parse_where(expr: str, schema_ddl: str, tz: str):
+    """'col OP value' -> ``(Predicate, typed)``. The IR compiles to the
+    row filter and the range bounds. The value is typed from the decode
+    schema: an int for an integral column, a date for a date, a datetime
+    for a timestamp (a naive literal in the session time zone ``tz``,
+    as Spark casts a string). Otherwise it stays the string, which the
+    row filter casts to the column's type. ``typed`` says the value is
+    in the column's own type (string, integer, date, timestamp): only
+    such a probe may be compared with the stored key ranges, block
+    stats and blooms."""
+    from datetime import date, datetime
+    from zoneinfo import ZoneInfo
+
+    from pyspark.sql.types import (DateType, IntegralType, StringType,
+                                   StructType, TimestampType)
 
     from eel_sdk_spark import predicate as P
 
@@ -30,15 +39,28 @@ def _parse_where(expr: str, schema_ddl: str):
     typ = next((f.dataType for f in StructType.fromDDL(schema_ddl).fields
                 if f.name == col), None)
     value: object = raw.strip("'\"")
+    typed = isinstance(typ, StringType)
     if isinstance(typ, IntegralType):
         try:
             value = int(raw)
         except ValueError:
             raise SystemExit(f"--where {expr!r}: {col!r} is integral but "
                              f"{raw!r} is not an integer")
+        typed = True
+    elif isinstance(typ, (DateType, TimestampType)):
+        try:
+            if isinstance(typ, DateType):
+                value = date.fromisoformat(value)
+            else:
+                value = datetime.fromisoformat(value)
+                if value.tzinfo is None:
+                    value = value.replace(tzinfo=ZoneInfo(tz))
+            typed = True
+        except (ValueError, KeyError):  # the row filter casts the string
+            pass
     cls = {"=": P.Equals, "!=": P.NotEquals, "<": P.Lt, "<=": P.Lte,
            ">": P.Gt, ">=": P.Gte}[op]
-    return cls(col, value)
+    return cls(col, value), typed
 
 
 def main(argv=None) -> None:
@@ -52,10 +74,11 @@ def main(argv=None) -> None:
     p.add_argument("--columns", default=None)
     p.add_argument("--where", default=None,
                    help="simple predicate 'col OP value' (OP in = != < <= > >=);"
-                        " a bound on a string or integer column skips files"
-                        " by manifest key ranges and block groups by their"
-                        " min/max stats before any payload is read; live"
-                        " tombstones are dropped")
+                        " a bound on a string, integer, date or timestamp"
+                        " column is served as a range lookup (manifest key"
+                        " ranges, block min/max stats and blooms prune"
+                        " before any payload is read); live tombstones are"
+                        " dropped")
     p.add_argument("--verify-against", default=None,
                    help="original parquet; reports per-column match counts")
     p.add_argument("--key", default="url")
@@ -183,34 +206,22 @@ def main(argv=None) -> None:
             if cols:
                 decoded = decoded.select(*cols)
         elif args.where:
-            # the range lookup's pipeline, one interval per bounded
-            # column: manifest key ranges prune files, block stats prune
-            # groups, the kernel drops tombstones and resolves renames
-            # and widenings, the predicate filters the rows
-            from pyspark.sql.types import StructType
+            # a bound on a typed column is served as a range lookup, so
+            # manifest key ranges, block stats and blooms prune; either
+            # way the kernel drops tombstones and resolves renames and
+            # widenings, and the predicate filters the rows
+            from eel_sdk_spark.checkpoint import range_lookup
 
-            from eel_sdk_spark.checkpoint import (_key_aliases, _serve_plan,
-                                                  _stored_probe, plan_files)
-
-            pred = _parse_where(args.where, args.schema)
+            pred, typed = _parse_where(
+                args.where, args.schema,
+                spark.conf.get("spark.sql.session.timeZone"))
             bounded = pred.to_block_ranges()
-            if bounded:
-                snap = (tbl.snapshot(args.snapshot_id)
-                        if args.snapshot_id is not None else tbl.current())
-                schema = StructType.fromDDL(args.schema)
-                types = {f.name: f.dataType.simpleString()
-                         for f in schema.fields}
-                names = {c: {c} | _key_aliases(snap, c) for c in bounded}
-                bounds = [tuple(_stored_probe(v, types.get(c)) for v in b)
-                          for c, b in bounded.items()]
-                files = snap.files
-                for c, b in zip(bounded, bounds):
-                    files = plan_files(snap, files, names[c], tiers=1,
-                                       interval=b)
-                decoded = _serve_plan(spark, snap, schema, args.schema,
-                                      files, names, bounds, None, {},
-                                      lazy=True)
-            else:  # no column bounds (!=): every block group qualifies
+            if bounded and typed:
+                (col, (lo, hi)), = bounded.items()
+                decoded = range_lookup(spark, tbl, lo, hi, args.schema,
+                                       key=col,
+                                       snapshot_id=args.snapshot_id)
+            else:  # != or an untyped literal: every block group
                 decoded = tbl.read_decoded(spark, args.schema,
                                            snapshot_id=args.snapshot_id,
                                            verify=not args.no_verify_crc)

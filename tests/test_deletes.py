@@ -22,12 +22,12 @@ from eel_sdk_spark.encode import BLOCK_SCHEMA_DDL, encode_df
 from eel_sdk_spark.table import ManifestTable
 
 
-def _mk(spark, tmp_path, name, n=4000, parts=8, shuffle="auto"):
+def _mk(spark, tmp_path, name, n=4000, parts=8, shuffle="auto", **kw):
     df = webtext_df(spark, n, parts=parts).cache()
     df.count()
     tbl = ManifestTable(str(tmp_path), name)
     encode_with_checkpoint(spark, df, tbl, n_parts=parts, run_id="r1",
-                           shuffle=shuffle)
+                           shuffle=shuffle, **kw)
     return df, tbl
 
 
@@ -457,22 +457,25 @@ def test_tombstoned_read_plan_is_one_kernel_stage(spark, tmp_path):
 
 def test_decode_job_where_drops_tombstones(spark, tmp_path, monkeypatch):
     """``decode_job --where`` serves the predicate through the read
-    planner: a tombstoned row stays deleted, and a renamed column
-    filters under its new name."""
+    planner: a tombstoned row stays deleted, a renamed column filters
+    under its new name, and a timestamp literal probes the column's
+    block blooms in the stored unit (epoch micros), not as a string."""
     from eel_sdk_spark import session
     from jobs import decode_job
 
-    df, tbl = _mk(spark, tmp_path, "where", n=2000, parts=4)
+    df, tbl = _mk(spark, tmp_path, "where", n=2000, parts=4,
+                  bloom_cols=["warc_ts"])
     tbl.rename_column("lang", "language")
     victim = df.filter("lang = 'en'").first()["url"]
+    pre = tbl.current().snapshot_id
     delete_rows(spark, tbl, [victim])
     monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
 
-    def where(expr):
-        out = str(tmp_path / f"out{abs(hash(expr))}")
+    def where(expr, *extra):
+        out = str(tmp_path / f"out{abs(hash((expr, extra)))}")
         decode_job.main(["--warehouse", str(tmp_path), "--table", "where",
-                         "--where", expr, "--output", out])
+                         "--where", expr, "--output", out, *extra])
         return spark.read.parquet(out)
 
     got = where("language=en")
@@ -481,4 +484,16 @@ def test_decode_job_where_drops_tombstones(spark, tmp_path, monkeypatch):
     assert got.filter(F.col("url") == victim).count() == 0
     assert sorted(got.columns) == sorted(want.columns)
     assert where(f"url={victim}").count() == 0
+    assert where(f"url={victim}", "--snapshot-id", str(pre)).count() == 1
+    # the literal in the session time zone, as Spark casts the string
+    row = df.filter(F.col("url") != victim).select(
+        "url", "warc_ts",
+        F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("s")
+    ).first()
+    got = where(f"warc_ts={row['s']}")
+    want = tbl.read_decoded(spark).filter(F.col("warc_ts") == row["warc_ts"])
+    assert got.count() == want.count() > 0
+    assert row["url"] in {r["url"] for r in got.collect()}
+    assert where(f"warc_ts<={row['s']}").count() == tbl.read_decoded(
+        spark).filter(F.col("warc_ts") <= row["warc_ts"]).count()
     df.unpersist()
