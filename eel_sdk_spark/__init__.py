@@ -26,4 +26,7 @@ Modules
   profiling, data mixing, sequence packing
 """
 
+from eel_sdk_spark import _zipcache
+
+_zipcache.install()  # PySpark workers only: see _zipcache
 __version__ = "0.1.0"

@@ -879,7 +879,7 @@ def _repair_once(spark: SparkSession, tbl: ManifestTable,
 def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
                  schema_ddl: str | None = None, key="url",
                  salt_by_value: str | None = None,
-                 run_index: int = -1) -> DataFrame:
+                 run_index: int = -1, verify: bool = True) -> DataFrame:
     """Key point-lookup against an encoded table, planned and decoded
     in the driver process — no Spark job for a lookup whose planned
     block groups fit one task's input. Returns a local DataFrame of the
@@ -901,9 +901,9 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
        (``sort_by=[key]`` makes the stats disjoint, so a lookup decodes
        ~one block instead of the whole part).
     5. ``decode_file_batches`` decodes only the planned groups,
-       CRC-verified, and keeps the rows equal to the key; the kernel
-       drops the live tombstones too (``deletes.apply_deletes``: a NULL
-       key never matches).
+       CRC-verified unless ``verify=False``, and keeps the rows equal
+       to the key; the kernel drops the live tombstones too
+       (``deletes.apply_deletes``: a NULL key never matches).
 
     When the planned groups span several files and their encoded bytes
     exceed ``spark.sql.files.maxPartitionBytes`` — more than Spark
@@ -949,7 +949,7 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
                            {c: {c} | aliases_by_col[c] for c in cols},
                            [(p, p) for p in probe], parts,
                            {c: (v, v) for c, v in zip(cols, vals)},
-                           lazy=False)
+                           lazy=False, verify=verify)
     finally:
         _BLOCK_ROWS_MEMO.reset(memo)
 
@@ -957,7 +957,7 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
 def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
                 files: list[str], names_by_col: dict[str, set[str]],
                 bounds: list[tuple], parts: set[int] | None,
-                match: dict, lazy: bool) -> DataFrame:
+                match: dict, lazy: bool, verify: bool) -> DataFrame:
     """Plan the block groups of ``files`` (``_plan_block_groups`` over
     the stored-unit ``bounds``) and decode only them, keeping the rows
     inside ``match`` (column -> ``(lo, hi)`` in the probe's own values);
@@ -965,7 +965,8 @@ def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
     is decoded in the driver unless its planned bytes exceed
     ``spark.sql.files.maxPartitionBytes`` and it spans several files or
     is ``lazy``; then it runs as one ``decode_files_df`` job —
-    collected, or with ``lazy`` returned unrun."""
+    collected, or with ``lazy`` returned unrun. ``verify`` checks each
+    decoded block's payload CRC on both branches."""
     from .deletes import load_tombstone_keys, tombstone_specs
     from .encode import decode_context, decode_file_batches, decode_files_df
     from .table import fold_renames
@@ -980,8 +981,8 @@ def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
         .filesMaxPartitionBytes()
     planned_bytes = sum(b for _, b in planned)
     if (lazy or len(plan) > 1) and planned_bytes > task_bytes:
-        df = decode_files_df(spark, list(plan), schema_ddl, snap=snap,
-                             groups=plan, match=match)
+        df = decode_files_df(spark, list(plan), schema_ddl, verify=verify,
+                             snap=snap, groups=plan, match=match)
         if lazy:
             return df
         rows = df.toArrow().cast(arrow_schema)
@@ -990,7 +991,7 @@ def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
         rows = pa.Table.from_batches(
             [b for f, g in plan.items()
              for b in decode_file_batches(f, col_order, arrow_types,
-                                          alias_of, True, groups=g,
+                                          alias_of, verify, groups=g,
                                           match=match, tombstones=loaded)],
             schema=arrow_schema)
     return spark.createDataFrame(rows, schema=schema)
@@ -1065,7 +1066,8 @@ def _fits(v, t: str) -> bool:
 def range_lookup(spark: SparkSession, tbl: ManifestTable,
                  lower, upper, schema_ddl: str | None = None,
                  key: str = "url",
-                 snapshot_id: int | None = None) -> DataFrame:
+                 snapshot_id: int | None = None,
+                 verify: bool = True) -> DataFrame:
     """Key-RANGE query against an encoded table (``lower <= key <=
     upper``; None leaves a side open) AS OF ``snapshot_id`` (default
     the current snapshot), served by the point lookup's pipeline with
@@ -1083,7 +1085,8 @@ def range_lookup(spark: SparkSession, tbl: ManifestTable,
     Spark job. A bigger one, even within one file, returns the lazy
     ``decode_files_df`` frame over the same plan for the caller's action
     to run: a range's decoded rows can be many times its encoded bytes.
-    Both branches drop live tombstones in the decode kernel."""
+    Both branches drop live tombstones in the decode kernel and, unless
+    ``verify=False``, check each block's payload CRC."""
     from pyspark.sql.types import StructType
 
     snap = (tbl.current() if snapshot_id is None
@@ -1103,7 +1106,7 @@ def range_lookup(spark: SparkSession, tbl: ManifestTable,
     files = plan_files(snap, snap.files, names, tiers=1, interval=bounds)
     return _serve_plan(spark, snap, schema, schema_ddl, files,
                        {key: names}, [bounds], None, {key: (lower, upper)},
-                       lazy=True)
+                       lazy=True, verify=verify)
 
 
 def compact_coverage(parts: list[int]) -> "list[int] | dict":

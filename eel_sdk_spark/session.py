@@ -12,13 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 # Arrow batch size = our encode block-size CAP. 64k rows of ~1-2 KB web
-# pages ≈ 64-128 MB raw per block: large enough to amortize symbol tables
-# AND the JVM->Python serializer's per-batch flush (measured: the pure
-# identity-mapInArrow channel moves 0.34 GB/s at 32k rows, 0.39 GB/s at
-# 64k on this box — the channel, not the kernels, is the encode
-# throughput ceiling), small enough that one block fits executor memory
-# comfortably at 100 TB scale. Measured trade: 64k blocks decode ~15%
-# slower than 32k on the eelshape probe (4.9 vs 5.7 M rows/s — fewer,
+# pages ≈ 64-128 MB raw per block: large enough to amortize symbol
+# tables, small enough that one block fits executor memory comfortably
+# at 100 TB scale. The batch size buys no channel throughput: on 4 cores
+# (local[4], an identity mapInArrow over 387 MB of webtext Arrow in 4
+# tasks, best of 4) the channel moves 0.62-0.73 GB/s at 32k rows and
+# 0.50-0.66 GB/s at 64k. Nor is the channel the encode ceiling: traced
+# bulk_serve spends 0.29 s in the kernels and 0.17 s in the channel.
+# (While every task re-read the import archives, see _zipcache, the
+# same channel read 0.42-0.53 GB/s at either size.) Measured trade: 64k
+# blocks decode ~15% slower than 32k on the eelshape probe (4.9 vs 5.7 M rows/s — fewer,
 # chunkier groups), but encode is the north-rule headline and decode
 # stays well above the reference's 3.6 M rows/s read either way.
 # Blocks are further bounded by rows-per-part, so small benchmarks are

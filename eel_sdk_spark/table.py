@@ -109,6 +109,17 @@ def partition_values_of(path: str) -> dict:
     return out
 
 
+def _spark_footer_schema(path: str):
+    """The Spark schema a Spark writer stored in ``path``'s parquet
+    footer, or None."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    stored = (pq.read_metadata(path).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(stored)) if stored else None
+
+
 class ManifestTable:
     def __init__(self, root: str, name: str):
         self.dir = os.path.join(root, name)
@@ -427,7 +438,13 @@ class ManifestTable:
         return self._read_files(spark, files)
 
     def _read_files(self, spark, files: list[str]):
-        """The raw rows of ``files`` as one DataFrame."""
+        """The raw rows of ``files`` as one DataFrame, with no Spark job
+        before an action: each staging group is read with the schema its
+        first file's Spark footer stores, the one Spark's inference would
+        use (a file written outside Spark is still inferred). Partition
+        columns are still found from the paths. The snapshot's
+        ``schema_ddl`` cannot type the files: callers record what they
+        choose there, e.g. a block table's row schema."""
         # basePath keeps hive-style partition columns discoverable when
         # reading explicit leaf files (partition values live in the path,
         # not the files — the re-injection HiveFilePublisher.scala:23-61
@@ -445,8 +462,12 @@ class ManifestTable:
             base = (os.path.join(self.data_dir, rel.split(os.sep)[0])
                     if not rel.startswith("..") else self.data_dir)
             groups.setdefault(base, []).append(f)
-        dfs = [spark.read.option("basePath", b).parquet(*fs)
-               for b, fs in groups.items()]
+        dfs = []
+        for b, fs in groups.items():
+            reader = spark.read.option("basePath", b)
+            schema = _spark_footer_schema(fs[0])
+            dfs.append((reader.schema(schema) if schema else reader)
+                       .parquet(*fs))
         return reduce(lambda a, b: a.unionByName(
             b, allowMissingColumns=True), dfs)
 

@@ -170,7 +170,8 @@ def main(argv=None) -> None:
             kv = kvals[0] if len(kcols) == 1 else tuple(kvals)
             decoded = point_lookup(spark, tbl, kv, args.schema,
                                    key=(kcols[0] if len(kcols) == 1
-                                        else kcols))
+                                        else kcols),
+                                   verify=not args.no_verify_crc)
             if cols:
                 decoded = decoded.select(*cols)
         elif args.key_range:
@@ -202,7 +203,8 @@ def main(argv=None) -> None:
                         f"{args.key!r} is non-string in --schema but "
                         f"the bounds are not integers")
             decoded = range_lookup(spark, tbl, lo, hi, args.schema,
-                                   key=args.key)
+                                   key=args.key,
+                                   verify=not args.no_verify_crc)
             if cols:
                 decoded = decoded.select(*cols)
         elif args.where:
@@ -220,7 +222,8 @@ def main(argv=None) -> None:
                 (col, (lo, hi)), = bounded.items()
                 decoded = range_lookup(spark, tbl, lo, hi, args.schema,
                                        key=col,
-                                       snapshot_id=args.snapshot_id)
+                                       snapshot_id=args.snapshot_id,
+                                       verify=not args.no_verify_crc)
             else:  # != or an untyped literal: every block group
                 decoded = tbl.read_decoded(spark, args.schema,
                                            snapshot_id=args.snapshot_id,

@@ -32,6 +32,31 @@ def test_manifest_commit_append_and_read(spark, tmp_path):
     assert tbl.read(spark, snapshot_id=1).count() == 100
 
 
+def test_read_of_many_appends_starts_no_job(spark, tmp_path):
+    """``read`` types each append's staging directory from its files'
+    Spark footer in the driver: no schema-inference job runs before the
+    action, and the rows and schema are those of Spark's own read."""
+    import uuid
+
+    tbl = ManifestTable(str(tmp_path), "appends")
+    for i in range(4):
+        tbl.write_df(spark.range(i * 10, i * 10 + 10)
+                     .withColumn("v", F.col("id").cast("int")), "")
+    tbl.write_df(spark.range(40, 45).withColumn("w", F.lit("x")), "")
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "manifest read")
+    try:
+        got = tbl.read(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert got.schema.simpleString() == "struct<id:bigint,v:int,w:string>"
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == ([(i, i, None) for i in range(40)]
+                    + [(i, None, "x") for i in range(40, 45)])
+
+
 def test_concurrent_commits_all_survive(tmp_path):
     """16 committers racing on one table (two streams, a compactor, ... —
     the shapes a shared table actually sees): the advisory-lock CAS must

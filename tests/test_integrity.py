@@ -341,3 +341,54 @@ def test_repair_reads_uncovered_parts_in_driver(spark, tmp_path):
     assert plan["repaired_parts"] == sorted(
         set().union(*map(parts_of, [victim] + bare)))
     df.unpersist()
+
+
+def test_decode_job_no_verify_crc_reaches_lookups(spark, tmp_path,
+                                                  monkeypatch):
+    """``decode_job --no-verify-crc`` turns off CRC verification on the
+    ``--key-point``, ``--key-range`` and typed ``--where`` reads, on the
+    in-driver branch and on the job branch alike; without the flag they
+    verify."""
+    from eel_sdk_spark import encode, session
+    from jobs import decode_job
+
+    tbl = _encoded_table(spark, tmp_path, "noverify", n=2000, parts=4)
+    url = tbl.read_decoded(spark).select("url").first()["url"]
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    seen = []
+    batches, files_df = encode.decode_file_batches, encode.decode_files_df
+
+    def spy_batches(path, col_order, arrow_types, alias_of, verify, **kw):
+        seen.append(("driver", verify))
+        return batches(path, col_order, arrow_types, alias_of, verify, **kw)
+
+    def spy_files_df(*a, verify=True, **kw):
+        seen.append(("job", verify))
+        return files_df(*a, verify=verify, **kw)
+
+    monkeypatch.setattr(encode, "decode_file_batches", spy_batches)
+    monkeypatch.setattr(encode, "decode_files_df", spy_files_df)
+
+    def run(*read, crc=True):
+        seen.clear()
+        out = str(tmp_path / f"out{len(os.listdir(tmp_path))}")
+        decode_job.main(["--warehouse", str(tmp_path), "--table", "noverify",
+                         "--output", out, *read]
+                        + ([] if crc else ["--no-verify-crc"]))
+        assert spark.read.parquet(out).count() >= 1
+        return set(seen)
+
+    reads = [("--key-point", url), ("--key-range", f"{url}..{url}"),
+             ("--where", f"url={url}")]
+    for read in reads:
+        assert run(*read, crc=False) == {("driver", False)}, read
+        assert run(*read) == {("driver", True)}, read
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    try:
+        for read in reads[1:]:
+            assert run(*read, crc=False) == {("job", False)}, read
+            assert run(*read) == {("job", True)}, read
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
