@@ -22,7 +22,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .encode import BLOCK_SCHEMA_DDL, encode_df
-from .table import ManifestTable
+from .table import (ManifestTable, adopt_lineage, fold_renames,
+                    retrying_rewrite)
 
 
 def _check_key_type(schema, key: str, value,
@@ -464,8 +465,6 @@ def _key_aliases(snap, key: str) -> set[str]:
     """Historical names of ``key`` under the snapshot's rename history
     (ManifestTable.rename_column) — blocks written pre-rename carry
     them, so every key-matching tier must accept them too."""
-    from .table import fold_renames
-
     fold = fold_renames(snap.properties.get("column_renames", []))
     return {h for h, c in fold.items() if c == key}
 
@@ -688,6 +687,7 @@ def _expand_coverage(cov) -> set[int]:
     return {int(p) for p in cov}
 
 
+@retrying_rewrite
 def repair_table(spark: SparkSession, tbl: ManifestTable,
                  input_df: DataFrame,
                  report: DataFrame | None = None,
@@ -735,36 +735,20 @@ def repair_table(spark: SparkSession, tbl: ManifestTable,
     ``dry_run=True`` returns the plan (files to drop, parts to
     re-encode) without writing anything.
 
-    The healing commit is CAS-guarded on the tombstone list (r8): a
+    The healing commit is guarded on the head's ``committed_at``: a
     ``delete_rows`` landing mid-repair must not be erased by the
-    property overwrite — on conflict the repair re-reads and retries.
+    property overwrite, so on a conflict the repair re-reads the head
+    and runs again (:func:`table.retrying_rewrite`).
     """
-    from .table import CommitConflict
-
-    last_err = None
-    for _ in range(3):
-        try:
-            return _repair_once(spark, tbl, input_df, report,
-                                verify_fingerprint, run_index, dry_run)
-        except CommitConflict as e:
-            last_err = e  # rival delete landed mid-repair: recompute
-    raise last_err
-
-
-def _repair_once(spark: SparkSession, tbl: ManifestTable,
-                 input_df: DataFrame, report, verify_fingerprint: bool,
-                 run_index: int, dry_run: bool) -> dict:
-    from .encode import PART_COL, encode_df, with_part_id
+    from .encode import PART_COL, with_part_id
 
     snap = tbl.current()
     if snap is None or not snap.files:
         raise FileNotFoundError(f"repair: table {tbl.dir} has no snapshot")
-    runs = snap.properties.get("runs", [])
-    if not runs:
+    lin = snap.lineage(run_index)
+    if lin is None:
         raise ValueError("repair: table has no encode run lineage")
-    run = runs[run_index]
-    key, n_parts = run.get("key", "url"), run["n_parts"]
-    salt, salt_by = run.get("salt", 1), run.get("salt_by")
+    runs = snap.properties["runs"]
 
     if report is None:
         report = fsck(spark, tbl)
@@ -802,7 +786,7 @@ def _repair_once(spark: SparkSession, tbl: ManifestTable,
 
     if full_rebuild:
         drop = set(by_name)
-        parts = set(range(n_parts))
+        parts = set(range(lin["n_parts"]))
     else:
         drop = set(damaged_names)
         parts: set[int] = set()
@@ -826,7 +810,10 @@ def _repair_once(spark: SparkSession, tbl: ManifestTable,
     if dry_run:
         return out
 
-    cur_fp = input_fingerprint(input_df, key)
+    # the original input may predate a rename: speak the current names
+    fold = fold_renames(snap.properties.get("column_renames", []))
+    input_df = input_df.toDF(*(fold.get(c, c) for c in input_df.columns))
+    cur_fp = input_fingerprint(input_df, lin["key"])
     if verify_fingerprint:
         # EVERY lineage run must fingerprint-match input_df, not just the
         # resolved one: append/upsert/purge runs record fingerprint=None
@@ -851,14 +838,12 @@ def _repair_once(spark: SparkSession, tbl: ManifestTable,
     if full_rebuild or parts:
         src = input_df
         if not full_rebuild:
-            src = (with_part_id(input_df, key, n_parts, salt, salt_by)
+            src = (with_part_id(input_df, lin["key"], lin["n_parts"],
+                                lin["salt"], lin["salt_by"])
                    .filter(F.col(PART_COL).isin(*sorted(parts)))
                    .drop(PART_COL))
-        blocks = encode_df(src, key=key, n_parts=n_parts,
-                           salt=salt, salt_by=salt_by)
-        new_files, rec = write_run(blocks, tbl,
-                                   f"repair-{snap.snapshot_id}", cur_fp,
-                                   n_parts, salt, salt_by, key)
+        new_files, rec = write_run(src, tbl, f"repair-{snap.snapshot_id}",
+                                   cur_fp, lin)
     # else: every damaged file covered ZERO parts (hash-empty writes) —
     # dropping them from the snapshot IS the repair
     props = dict(snap.properties)
@@ -937,9 +922,8 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
     aliases_by_col = {c: _key_aliases(snap, c) for c in cols}
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     probe = [_stored_probe(v, types.get(c)) for c, v in zip(cols, vals)]
-    run = snap.properties.get("runs", [])[run_index]
-    parts = _lookup_parts(snap, run, cols, probe, types, aliases_by_col,
-                          salt_by_value)
+    parts = _lookup_parts(snap, snap.lineage(run_index), cols, probe,
+                          types, aliases_by_col, salt_by_value)
     memo = _BLOCK_ROWS_MEMO.set({})
     try:
         files = lookup_files(spark, snap,
@@ -969,7 +953,6 @@ def _serve_plan(spark: SparkSession, snap, schema, schema_ddl: str,
     decoded block's payload CRC on both branches."""
     from .deletes import load_tombstone_keys, tombstone_specs
     from .encode import decode_context, decode_file_batches, decode_files_df
-    from .table import fold_renames
 
     planned = [_plan_block_groups(t, names_by_col, bounds, parts)
                for t in _read_block_rows(files)]
@@ -1014,11 +997,12 @@ def _stored_probe(value, typ: str | None):
     return value
 
 
-def _lookup_parts(snap, run: dict, cols: list[str], vals: list,
+def _lookup_parts(snap, lin: dict, cols: list[str], vals: list,
                   types: dict[str, str], aliases_by_col: dict,
                   salt_by_value) -> set[int]:
-    """The parts a key value (``vals``, in the stored unit) may live in,
-    from the Python xxhash64 twin.
+    """The parts a key value (``vals``, in the stored unit) may live in
+    under the lineage ``lin`` (``Snapshot.lineage``), from the Python
+    xxhash64 twin.
     A WIDENED key column (ManifestTable.widen_column) is hashed at every
     historical width — old generations' parts were derived from the
     narrow type, and xxhash64 hashes int32 and int64 differently.
@@ -1029,7 +1013,7 @@ def _lookup_parts(snap, run: dict, cols: list[str], vals: list,
 
     from .encode import part_id_of, xxhash64
 
-    n_parts, salt = run["n_parts"], run.get("salt", 1)
+    n_parts, salt = lin["n_parts"], lin["salt"]
     widenings = snap.properties.get("column_widenings", [])
     type_variants = []
     for c in cols:
@@ -1040,7 +1024,7 @@ def _lookup_parts(snap, run: dict, cols: list[str], vals: list,
     shards: list = [None]
     try:
         if salt > 1 and salt_by_value is not None:
-            t = types.get(run.get("salt_by"))
+            t = types.get(lin["salt_by"])
             shards = [xxhash64([_stored_probe(salt_by_value, t)], [t])
                       % salt]
         elif salt > 1:
@@ -1228,9 +1212,9 @@ def encode_with_checkpoint(
     spark: SparkSession,
     df: DataFrame,
     tbl: ManifestTable,
-    key: str = "url",
+    key=None,
     n_parts: int | None = None,
-    salt: int = 1,
+    salt: int | None = None,
     salt_by: str | None = None,
     run_id: str = "run",
     profile: str = "speed",
@@ -1255,53 +1239,19 @@ def encode_with_checkpoint(
     partitioning params (n_parts/salt/salt_by/key) of the run that wrote
     them — anti-filtering them against part_ids computed under different
     params silently drops rows. On resume this adopts the committed run's
-    params when the caller left them at their defaults, and raises on an
-    explicit mismatch. ``verify_fingerprint`` additionally checks that the
-    input content matches what the committed run saw before skipping
-    anything (an order-independent key-hash fingerprint, one narrow scan).
+    params where the caller left them None, and raises on an explicit
+    mismatch (``table.adopt_lineage``, the rule ``append_encode``
+    follows too); a fresh table defaults to key ``url``, no salt and
+    twice the default parallelism. ``verify_fingerprint`` additionally
+    checks that the input content matches what the committed run saw
+    before skipping anything (an order-independent key-hash
+    fingerprint, one narrow scan).
 
     ``fail_after_commit_parts`` artificially stops after committing only
     the first K parts — the hook the kill-and-resume test uses.
     Returns run metrics (also persisted in the manifest).
     """
-    cur_fp = None  # computed at most ONCE (it is a full key-column scan)
-    snap0 = tbl.head(stage)
-    prior_runs = snap0.properties.get("runs", []) if snap0 else []
-    if prior_runs:
-        last = prior_runs[-1]
-        adopted = {"n_parts": last["n_parts"], "salt": last.get("salt", 1),
-                   "salt_by": last.get("salt_by"), "key": last.get("key", key)}
-        asked = {"n_parts": n_parts, "salt": salt, "salt_by": salt_by,
-                 "key": key}
-        defaults = {"n_parts": None, "salt": 1, "salt_by": None, "key": "url"}
-        for p, want in asked.items():
-            if want != defaults[p] and want != adopted[p]:
-                raise ValueError(
-                    f"resume partitioning mismatch: {p}={want!r} but the "
-                    f"committed run used {adopted[p]!r}; committed part_ids "
-                    f"are only valid under the original params")
-        n_parts, salt = adopted["n_parts"], adopted["salt"]
-        salt_by, key = adopted["salt_by"], adopted["key"]
-        if verify_fingerprint:
-            prior_fp = last.get("fingerprint")
-            cur_fp = input_fingerprint(df, key)  # reused in the run record
-            if prior_fp is not None and cur_fp != prior_fp:
-                raise ValueError(
-                    f"resume input mismatch: fingerprint {cur_fp} != "
-                    f"committed {prior_fp}; skipping committed parts over "
-                    f"different input would lose rows")
-    n_parts = n_parts or spark.sparkContext.defaultParallelism * 2
-    done = committed_part_ids(tbl, stage)
-
     from .encode import PART_COL, with_part_id
-    tagged = with_part_id(df, key, n_parts, salt, salt_by)
-    if done:
-        tagged = tagged.filter(~F.col(PART_COL).isin(*done))
-    if fail_after_commit_parts is not None:
-        remaining = sorted(
-            r[0] for r in tagged.select(PART_COL).distinct().collect())
-        keep = set(remaining[:fail_after_commit_parts])
-        tagged = tagged.filter(F.col(PART_COL).isin(*keep))
 
     # shuffle='local' keeps resume lineage valid (content-derived part
     # assignment) without moving the corpus through shuffle storage;
@@ -1311,25 +1261,41 @@ def encode_with_checkpoint(
     if shuffle is False:
         raise ValueError("encode_with_checkpoint requires content-derived "
                          "part ids: use shuffle=True or shuffle='local'")
-    blocks = encode_df(tagged.drop(PART_COL), key, n_parts, salt, salt_by,
-                       profile=profile, codec_overrides=codec_overrides,
-                       shuffle=shuffle, sort_by=sort_by,
-                       key_bloom=key_bloom, bloom_cols=bloom_cols,
-                       bloom_bits=bloom_bits)
+    lin = adopt_lineage(tbl.head(stage), "resume", key, n_parts, salt,
+                        salt_by)
+    lin["n_parts"] = (lin["n_parts"]
+                      or spark.sparkContext.defaultParallelism * 2)
+    fp = input_fingerprint(df, lin["key"])  # one narrow key-column scan
+    if verify_fingerprint and lin["fingerprint"] not in (None, fp):
+        raise ValueError(
+            f"resume input mismatch: fingerprint {fp} != committed "
+            f"{lin['fingerprint']}; skipping committed parts over "
+            f"different input would lose rows")
+    done = committed_part_ids(tbl, stage)
 
-    files, run = write_run(blocks, tbl, run_id,
-                           cur_fp if cur_fp is not None
-                           else input_fingerprint(df, key),
-                           n_parts, salt, salt_by, key)
+    tagged = with_part_id(df, lin["key"], lin["n_parts"], lin["salt"],
+                          lin["salt_by"])
+    if done:
+        tagged = tagged.filter(~F.col(PART_COL).isin(*done))
+    if fail_after_commit_parts is not None:
+        remaining = sorted(
+            r[0] for r in tagged.select(PART_COL).distinct().collect())
+        keep = set(remaining[:fail_after_commit_parts])
+        tagged = tagged.filter(F.col(PART_COL).isin(*keep))
+
+    files, run = write_run(
+        tagged.drop(PART_COL), tbl, run_id, fp, lin, profile=profile,
+        codec_overrides=codec_overrides, shuffle=shuffle, sort_by=sort_by,
+        key_bloom=key_bloom, bloom_cols=bloom_cols, bloom_bits=bloom_bits)
     if run is None:
         return {"run_id": run_id, "part_ids": [], "skipped_parts": sorted(done),
                 "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
-    _commit_run(tbl, files, run, df, stage, "encode commit")
+    commit_run(tbl, files, run, df, stage=stage)
     return run
 
 
 def append_encode(spark: SparkSession, df: DataFrame, tbl: ManifestTable,
-                  run_id: str = "append", key: str | None = None,
+                  run_id: str = "append", key=None,
                   n_parts: int | None = None, profile: str = "speed",
                   shuffle: bool | str = "auto",
                   sort_by: list[str] | None = None,
@@ -1340,79 +1306,58 @@ def append_encode(spark: SparkSession, df: DataFrame, tbl: ManifestTable,
     The checkpoint API is a same-input resume surface (its fingerprint
     guard rejects different data by design); this one adopts the
     table's partitioning params from the head's last run (raising on an
-    explicit mismatch, same rule as resume) and commits ONE run record,
-    so ``changes_between`` classifies the files as new data (not
+    explicit mismatch, the rule resume follows) and commits ONE run
+    record, so ``changes_between`` classifies the files as new data (not
     unclassified) and the manifest prune tiers cover them. ``stage``
     lands the append on a named ref for write-audit-publish."""
-    from .encode import BLOCK_SCHEMA_DDL, encode_df
-
     snap = tbl.head(stage)
     if snap is None:
         raise FileNotFoundError(
             f"append_encode: table {tbl.dir} has no snapshot — bootstrap "
             f"with encode_with_checkpoint")
-    runs = snap.properties.get("runs", [])
-    last = runs[-1] if runs else {}
-    adopted_key = last.get("key", "url")
-    adopted_parts = last.get("n_parts")
-    from .encode import key_cols as _kcols
-
-    if key is not None and last and _kcols(key) != _kcols(adopted_key):
-        raise ValueError(f"append_encode: key={key!r} but the table's "
-                         f"lineage key is {adopted_key!r}")
-    if n_parts is not None and adopted_parts and n_parts != adopted_parts:
-        raise ValueError(f"append_encode: n_parts={n_parts} but the "
-                         f"table was encoded with {adopted_parts}")
-    key = key or adopted_key
-    n_parts = n_parts or adopted_parts \
-        or spark.sparkContext.defaultParallelism * 2
-    salt = last.get("salt", 1)
-    salt_by = last.get("salt_by")
-
-    blocks = encode_df(df, key=key, n_parts=n_parts, salt=salt,
-                       salt_by=salt_by, profile=profile, shuffle=shuffle,
-                       sort_by=sort_by, **encode_kw)
-    files, run = write_run(blocks, tbl, run_id, None, n_parts, salt,
-                           salt_by, key)
+    lin = adopt_lineage(snap, "append_encode", key, n_parts)
+    lin["n_parts"] = (lin["n_parts"]
+                      or spark.sparkContext.defaultParallelism * 2)
+    files, run = write_run(df, tbl, run_id, None, lin, profile=profile,
+                           shuffle=shuffle, sort_by=sort_by, **encode_kw)
     if run is None:
         return {"run_id": run_id, "part_ids": [], "n_rows": 0,
                 "raw_bytes": 0, "enc_bytes": 0}
-    _commit_run(tbl, files, run, df, stage, "append_encode")
+    commit_run(tbl, files, run, df, stage=stage)
     return run
 
 
-def _commit_run(tbl: ManifestTable, files: list[str], run: dict,
-                df: DataFrame, stage: str | None, what: str) -> None:
-    """Append ``files`` and ``run`` (with ``df``'s row schema) to the
-    head of ``stage``. The runs list is a read-modify-write: CAS +
-    retry, or two concurrent committers would each append to the same
-    stale list and the second would erase the first's lineage
-    record."""
-    from .table import CommitConflict, ddl_of
+def commit_run(tbl: ManifestTable, files: list[str], run: dict | None,
+               df: DataFrame, properties: dict | None = None,
+               expect_properties: dict | None = None,
+               stage: str | None = None) -> None:
+    """Append ``files``, their ``run`` record and ``df``'s row schema
+    (plus ``properties``) to the head of ``stage`` in one commit. The
+    runs list is extended under the commit lock, so a rival committer's
+    record is never erased and no retry is needed."""
+    from .table import ddl_of
 
-    for _ in range(5):
-        head = tbl.head(stage)
-        runs0 = head.properties.get("runs") if head else None
-        try:
-            tbl.commit(files, BLOCK_SCHEMA_DDL,
-                       {"runs": (runs0 or []) + [run],
-                        "row_schema_ddl": ddl_of(df)},
-                       mode="append", stage=stage,
-                       expect_properties={"runs": runs0})
-            return
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"{what} to {tbl.dir}: runs lineage kept "
-                         f"changing under 5 retries")
+    props = {**(properties or {}), "row_schema_ddl": ddl_of(df)}
+    tbl.commit(files, BLOCK_SCHEMA_DDL,
+               lambda head: {**props, "runs":
+                             (head.properties.get("runs", []) if head
+                              else []) + ([run] if run else [])},
+               mode="append", expect_properties=expect_properties,
+               stage=stage)
 
 
-def write_run(blocks: DataFrame, tbl: ManifestTable, run_id: str,
-              fingerprint: str | None, n_parts: int, salt: int,
-              salt_by: str | None, key) -> tuple[list[str], dict | None]:
-    """Write ``encode_df``'s ``blocks`` into a fresh data directory of
+def write_run(df: DataFrame, tbl: ManifestTable, run_id: str,
+              fingerprint: str | None, lineage: dict,
+              **encode_kw) -> tuple[list[str], dict | None]:
+    """Encode ``df`` under ``lineage`` (key, n_parts, salt, salt_by, as
+    ``Snapshot.lineage`` returns it; ``encode_kw`` passes through to
+    ``encode_df``), write the blocks into a fresh data directory of
     ``tbl`` — the one Spark job — and build their run record from the
     written files in the driver: ``(files, run)``, ``run`` None for an
     empty write. Nothing is committed."""
+    key, n_parts = lineage["key"], lineage["n_parts"]
+    salt, salt_by = lineage["salt"], lineage["salt_by"]
+    blocks = encode_df(df, key, n_parts, salt, salt_by, **encode_kw)
     job_dir = tbl.new_data_path()
     blocks.write.mode("overwrite").parquet(job_dir)
     files = ManifestTable.list_written_files(job_dir)
@@ -1628,75 +1573,53 @@ def _run_record(files: list[str], run_id: str,
     }
 
 
+@retrying_rewrite
 def realign_table(spark: SparkSession, tbl: ManifestTable, schema_ddl: str,
                   run_id: str = "realign", n_parts: int | None = None,
                   profile: str = "speed",
                   codec_overrides: dict[str, str] | None = None,
                   sort_by: list | None = None,
                   verify_fingerprint: bool = True) -> dict:
-    from .table import CommitConflict
-
-    last_err = None
-    for _ in range(3):  # rival delete mid-realign: recompute (CAS below)
-        try:
-            return _realign_once(spark, tbl, schema_ddl, run_id, n_parts,
-                                 profile, codec_overrides, sort_by,
-                                 verify_fingerprint)
-        except CommitConflict as e:
-            last_err = e
-    raise last_err
-
-
-def _realign_once(spark: SparkSession, tbl: ManifestTable, schema_ddl: str,
-                  run_id: str, n_parts: int | None, profile: str,
-                  codec_overrides: dict[str, str] | None,
-                  sort_by: list | None,
-                  verify_fingerprint: bool) -> dict:
     """Layout migration: decode the CURRENT snapshot and re-encode it
     part-ALIGNED (``shuffle=True``) in one overwrite commit — the
     "write fast banded now, realign for point-lookup-heavy serving
     later" path. Banded blocks span parts, so compaction alone can
     never restore one-part-per-file locality; this is the honest way.
 
-    Partitioning params (key/n_parts/salt) are adopted from the last
-    committed run so part ids — and therefore resume lineage of future
-    appends — stay IDENTICAL; the content fingerprint is recomputed
-    over the decoded rows and must match the committed one (decode is
-    lossless, so a mismatch means the table is not what its lineage
-    claims — abort rather than republish it). Time travel to the
-    pre-realign snapshot keeps working; old files are reclaimed by
-    ``expire_snapshots``."""
+    Partitioning params (key/salt, and n_parts unless given) are adopted
+    from the last committed run (``Snapshot.lineage``) so part ids — and
+    therefore resume lineage of future appends — stay IDENTICAL; the
+    content fingerprint is recomputed over the decoded rows and must
+    match the committed one (decode is lossless, so a mismatch means the
+    table is not what its lineage claims — abort rather than republish
+    it). Time travel to the pre-realign snapshot keeps working; old
+    files are reclaimed by ``expire_snapshots``. A rival commit landing
+    mid-realign makes it run again from the new head
+    (:func:`table.retrying_rewrite`)."""
+    from .table import ddl_of
+
     snap = tbl.current()
     if snap is None:
         raise ValueError("realign_table: no committed snapshot")
-    runs = snap.properties.get("runs", [])
-    if not runs:
+    lin = snap.lineage()
+    if lin is None:
         raise ValueError("realign_table: table has no run lineage")
-    last = runs[-1]
-    key = last.get("key", "url")
-    n_parts = n_parts or last["n_parts"]
-    salt, salt_by = last.get("salt", 1), last.get("salt_by")
+    lin["n_parts"] = n_parts or lin["n_parts"]
 
     df = tbl.read_decoded(spark, schema_ddl)
     # the fingerprint check is one EXTRA decode pass over the table (the
     # frame is recomputed per action) — sound default, skippable at
     # 100 TB where the rewrite pass itself is already the budget
-    committed_fp = last.get("fingerprint")
+    fp = lin["fingerprint"]
     if verify_fingerprint:
-        fp = input_fingerprint(df, key)
-        if committed_fp is not None and fp != committed_fp:
+        fp = input_fingerprint(df, lin["key"])
+        if lin["fingerprint"] is not None and fp != lin["fingerprint"]:
             raise ValueError(
                 f"realign_table: decoded fingerprint {fp} != committed "
-                f"{committed_fp} — refusing to republish")
-    else:
-        fp = committed_fp
-    from .encode import encode_df
-
-    blocks = encode_df(df, key, n_parts, salt, salt_by, profile=profile,
-                       codec_overrides=codec_overrides, shuffle=True,
-                       sort_by=sort_by)
-    files, run = write_run(blocks, tbl, run_id, fp, n_parts, salt,
-                           salt_by, key)
+                f"{lin['fingerprint']} — refusing to republish")
+    files, run = write_run(df, tbl, run_id, fp, lin, profile=profile,
+                           codec_overrides=codec_overrides, shuffle=True,
+                           sort_by=sort_by)
     if run is None:
         raise ValueError("realign_table: empty table")
     # carry durable properties forward (r8 fix — the bare {"runs": [run]}
@@ -1707,10 +1630,8 @@ def _realign_once(spark: SparkSession, tbl: ManifestTable, schema_ddl: str,
     # tombstone key names). Rewrite-scoped extras (file_*_extra,
     # bloom_index) are dropped — their basenames no longer exist; blocks
     # are re-encoded under CURRENT column names so reads need no mapping,
-    # but the rename HISTORY stays for tombstone translation. CAS on the
-    # tombstone list like every other full-rewrite commit.
-    from .table import ddl_of
-
+    # but the rename HISTORY stays for tombstone translation. Guarded on
+    # committed_at like every other full-rewrite commit.
     props = {k: v for k, v in snap.properties.items()
              if k not in ("runs", "file_parts_extra", "file_stats_extra",
                           "file_key_ranges_extra", "bloom_index",

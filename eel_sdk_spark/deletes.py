@@ -41,7 +41,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .table import ManifestTable
+from .table import ManifestTable, retrying_rewrite
 
 # purge and upsert key sets up to this size prune their rewrite set with
 # every planner tier; larger ones with the key-range tier alone (the
@@ -103,29 +103,12 @@ def delete_rows(spark: SparkSession, tbl: ManifestTable, keys,
         return {"deleted_keys": 0, "snapshot_id": snap.snapshot_id}
     entry = {"key": key, "files": files, "n": n,
              "as_of_snapshot": snap.snapshot_id}
-    # the tombstone list is a read-modify-write: CAS + retry, or two
-    # CONCURRENT delete_rows would each append to the same stale list
-    # and the second commit would erase the first takedown (r8 audit —
-    # same race class the rewrite paths had)
-    from .table import CommitConflict
-
-    for _ in range(5):
-        cur = tbl.current()
-        props = {"tombstones": _tombstone_entries(cur) + [entry]}
-        try:
-            healed = tbl.commit(
-                [], "", props, mode="append",
-                expect_properties={
-                    "tombstones": cur.properties.get("tombstones")})
-            break
-        except CommitConflict:
-            continue
-    else:
-        raise CommitConflict(
-            f"delete: tombstone list of {tbl.dir} kept changing under "
-            f"5 retries — rival delete storm; re-run")
+    # the tombstone list is extended under the commit lock, so a rival
+    # delete_rows landing meanwhile keeps its entry
+    healed = tbl.commit([], "", lambda cur: {
+        "tombstones": _tombstone_entries(cur) + [entry]}, mode="append")
     return {"deleted_keys": n, "snapshot_id": healed.snapshot_id,
-            "tombstone_commits": len(props["tombstones"])}
+            "tombstone_commits": len(healed.properties["tombstones"])}
 
 
 def delete_where(spark: SparkSession, tbl: ManifestTable, condition,
@@ -140,20 +123,16 @@ def delete_where(spark: SparkSession, tbl: ManifestTable, condition,
     composite keys supported). Already-tombstoned rows are excluded by
     the read, so repeated sweeps are idempotent."""
     from .encode import key_cols
-    from .table import fold_renames
 
     snap = tbl.current()
     if snap is None:
         raise FileNotFoundError(f"delete: table {tbl.dir} has no snapshot")
     if key is None:
-        runs = snap.properties.get("runs", [])
-        if not runs:
+        lin = snap.lineage()
+        if lin is None:
             raise ValueError("delete_where: table has no encode run "
                              "lineage — pass key= explicitly")
-        fold = fold_renames(snap.properties.get("column_renames", []))
-        raw = runs[-1].get("key", "url")
-        key = (fold.get(raw, raw) if isinstance(raw, str)
-               else [fold.get(c, c) for c in raw])
+        key = lin["key"]
     cols = key_cols(key)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hits = tbl.read_decoded(spark, schema_ddl).filter(cond).select(*cols)
@@ -271,6 +250,7 @@ def _rewrite_candidates(snap, cols: list[str], columns: list) -> set[str]:
     return set(files)
 
 
+@retrying_rewrite
 def purge_deletes(spark: SparkSession, tbl: ManifestTable,
                   schema_ddl: str, stage: str | None = None) -> dict:
     """Materialize every live tombstone: rewrite ONLY the files that may
@@ -283,45 +263,20 @@ def purge_deletes(spark: SparkSession, tbl: ManifestTable,
     ``stage`` lands the purged snapshot on a named ref for audit before
     ``publish`` (erasure review flows).
 
-    The commit carries an ``expect_properties`` CAS on the tombstone
-    list: a ``delete_rows`` landing while the purge runs would otherwise
-    be silently erased by the full property overwrite (the takedown
-    would resurface). On conflict the purge recomputes over the new
-    tombstones and retries."""
-    from .table import CommitConflict
-
-    last_err = None
-    for _ in range(3):
-        try:
-            return _purge_once(spark, tbl, schema_ddl, stage)
-        except CommitConflict as e:
-            last_err = e  # a rival delete landed mid-purge: recompute
-    raise last_err
-
-
-def _purge_once(spark: SparkSession, tbl: ManifestTable,
-                schema_ddl: str, stage: str | None = None) -> dict:
-    from .checkpoint import write_run
-    from .encode import encode_df
-    from .table import fold_renames
-
+    The overwrite commit is guarded on the head's ``committed_at``: a
+    ``delete_rows`` landing while the purge runs would otherwise be
+    erased by the full property overwrite (the takedown would
+    resurface). On a conflict the purge runs again over the new
+    tombstones (:func:`table.retrying_rewrite`)."""
     snap = tbl.head(stage)
     if snap is None:
         raise FileNotFoundError(f"purge: table {tbl.dir} has no snapshot")
     entries = _tombstone_entries(snap)
     if not entries:
         return {"purged_keys": 0, "rewritten_files": 0}
-    runs = snap.properties.get("runs", [])
-    if not runs:
+    lin = snap.lineage()
+    if lin is None:
         raise ValueError("purge: table has no encode run lineage")
-    run = runs[-1]
-    # run records keep the key name(s) AT ENCODE TIME; translate through
-    # the rename chain so post-rename rewrites decode and re-encode under
-    # the CURRENT name (decode_files_df relabels the blocks the same way)
-    fold = fold_renames(snap.properties.get("column_renames", []))
-    raw_key = run.get("key", "url")
-    run_key = (fold.get(raw_key, raw_key) if isinstance(raw_key, str)
-               else [fold.get(c, c) for c in raw_key])
 
     candidates: set[str] = set()
     for cols, keys in load_tombstone_keys(tombstone_specs(snap)):
@@ -337,23 +292,18 @@ def _purge_once(spark: SparkSession, tbl: ManifestTable,
     rec = None
     n_kept = 0
     if candidates:
+        from .checkpoint import write_run
         from .encode import decode_files_df
 
         kept = decode_files_df(spark, sorted(candidates), schema_ddl,
                                snap=snap)
         n_kept = kept.count()
         if n_kept:
-            blocks = encode_df(kept, key=run_key,
-                               n_parts=run["n_parts"],
-                               salt=run.get("salt", 1),
-                               salt_by=run.get("salt_by"))
             new_files, rec = write_run(
-                blocks, tbl, f"purge-{snap.snapshot_id}", None,
-                run["n_parts"], run.get("salt", 1), run.get("salt_by"),
-                run_key)
+                kept, tbl, f"purge-{snap.snapshot_id}", None, lin)
     props = dict(snap.properties)
     props["tombstones"] = []
-    props["runs"] = runs + ([rec] if rec else [])
+    props["runs"] = props["runs"] + ([rec] if rec else [])
     healed = tbl.commit(survivors + new_files,
                         snap.schema_ddl or "", props, mode="overwrite",
                         stage=stage,
@@ -407,6 +357,7 @@ def _rewrite_tombstones(spark: SparkSession, tbl: ManifestTable,
                                             for e in ours)}]
 
 
+@retrying_rewrite
 def upsert_rows(spark: SparkSession, tbl: ManifestTable,
                 incoming: DataFrame, schema_ddl: str,
                 readmit: bool = False, stage: str | None = None) -> dict:
@@ -437,26 +388,11 @@ def upsert_rows(spark: SparkSession, tbl: ManifestTable,
     files fall back to the per-file bloom scan — append-safe); refresh
     with ``build_bloom_index`` or the next ``compact()``.
 
-    Like ``purge_deletes``, the overwrite commit is CAS-guarded on the
-    tombstone list (a concurrent ``delete_rows`` must not be erased by
-    the property overwrite) and retried on conflict."""
-    from .table import CommitConflict
-
-    last_err = None
-    for _ in range(3):
-        try:
-            return _upsert_once(spark, tbl, incoming, schema_ddl,
-                                readmit, stage)
-        except CommitConflict as e:
-            last_err = e  # a rival delete landed mid-merge: recompute
-    raise last_err
-
-
-def _upsert_once(spark: SparkSession, tbl: ManifestTable,
-                 incoming: DataFrame, schema_ddl: str,
-                 readmit: bool, stage: str | None) -> dict:
+    Like ``purge_deletes``, the overwrite commit is guarded on the
+    head's ``committed_at`` (a concurrent ``delete_rows`` must not be
+    erased by the property overwrite) and runs again on a conflict."""
     from .checkpoint import write_run
-    from .encode import decode_files_df, encode_df
+    from .encode import decode_files_df, key_cols
     from .table import fold_renames
 
     # ``stage`` lands the merged snapshot on a named ref (audit the
@@ -465,19 +401,11 @@ def _upsert_once(spark: SparkSession, tbl: ManifestTable,
     snap = tbl.head(stage)
     if snap is None:
         raise FileNotFoundError(f"upsert: table {tbl.dir} has no snapshot")
-    runs = snap.properties.get("runs", [])
-    if not runs:
+    lin = snap.lineage()
+    if lin is None:
         raise ValueError("upsert: table has no encode run lineage")
-    run = runs[-1]
-    # translate the run's encode-time key name(s) through the rename
-    # chain (callers speak the CURRENT schema); composite lineage keys
-    # arrive from the manifest as a list
-    from .encode import key_cols
-
+    key = lin["key"]
     fold = fold_renames(snap.properties.get("column_renames", []))
-    raw_key = run.get("key", "url")
-    key = (fold.get(raw_key, raw_key) if isinstance(raw_key, str)
-           else [fold.get(c, c) for c in raw_key])
     cols = key_cols(key)
     missing = [c for c in cols if c not in incoming.columns]
     if missing:
@@ -530,29 +458,21 @@ def _upsert_once(spark: SparkSession, tbl: ManifestTable,
         n_kept = kept.count()
         n_replaced = n_before - n_kept
         if n_kept:
-            blocks = encode_df(kept, key=key, n_parts=run["n_parts"],
-                               salt=run.get("salt", 1),
-                               salt_by=run.get("salt_by"))
             files_a, rec = write_run(
-                blocks, tbl, f"upsert-rewrite-{snap.snapshot_id}", None,
-                run["n_parts"], run.get("salt", 1), run.get("salt_by"),
-                key)
+                kept, tbl, f"upsert-rewrite-{snap.snapshot_id}", None, lin)
             new_files += files_a
             recs.append(rec)
 
     n_in = incoming.count()
-    blocks = encode_df(incoming, key=key, n_parts=run["n_parts"],
-                       salt=run.get("salt", 1), salt_by=run.get("salt_by"))
-    files_b, rec = write_run(blocks, tbl, f"upsert-{snap.snapshot_id}",
-                             None, run["n_parts"], run.get("salt", 1),
-                             run.get("salt_by"), key)
+    files_b, rec = write_run(incoming, tbl, f"upsert-{snap.snapshot_id}",
+                             None, lin)
     new_files += files_b
     if rec:
         recs.append(rec)
 
     props = dict(snap.properties)
     props["tombstones"] = entries
-    props["runs"] = runs + recs
+    props["runs"] = props["runs"] + recs
     try:
         healed = tbl.commit(
             survivors + new_files, snap.schema_ddl or "",
@@ -560,7 +480,7 @@ def _upsert_once(spark: SparkSession, tbl: ManifestTable,
             expect_properties={
                 "committed_at": snap.properties.get("committed_at")})
     finally:
-        ikeys.unpersist()  # also on CommitConflict — the retry re-caches
+        ikeys.unpersist()  # also on a conflict — the retry re-caches
     return {"upserted_rows": n_in,
             "upserted_keys": n_keys,
             "replaced_rows": n_replaced,

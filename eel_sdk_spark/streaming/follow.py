@@ -68,8 +68,6 @@ def follow_once(spark, src: ManifestTable, sink: ManifestTable,
     if bootstrap not in ("full", "from_now"):
         raise ValueError(f"bootstrap must be 'full' or 'from_now', "
                          f"got {bootstrap!r}")
-    from ..encode import BLOCK_SCHEMA_DDL, encode_df
-
     cur_src = src.current()
     if cur_src is None:
         return {"rows": 0, "cursor_from": None, "cursor_to": None,
@@ -87,11 +85,10 @@ def follow_once(spark, src: ManifestTable, sink: ManifestTable,
         return {"rows": 0, "cursor_from": cursor, "cursor_to": cursor,
                 "bootstrap": False}
 
-    if key is None or n_parts is None:
-        runs = cur_src.properties.get("runs", [])
-        last_run = runs[-1] if runs else {}
-        key = key or last_run.get("key", "url")
-        n_parts = n_parts or int(last_run.get("n_parts", 8))
+    src_lin = cur_src.lineage() or {}
+    lin = {"key": key or src_lin.get("key", "url"),
+           "n_parts": n_parts or src_lin.get("n_parts", 8),
+           "salt": 1, "salt_by": None}
 
     is_bootstrap = cursor is None
     if is_bootstrap and bootstrap == "from_now":
@@ -132,51 +129,19 @@ def follow_once(spark, src: ManifestTable, sink: ManifestTable,
                         expect_properties=guard)
             return {"rows": 0, "cursor_from": cursor, "cursor_to": target,
                     "bootstrap": is_bootstrap, "deleted_keys": n_deletes}
-        blocks = encode_df(df, key=key, n_parts=n_parts, profile=profile)
         # the sink is a first-class encoded table: commit a run record
         # (lineage for prune tiers, CDC classification, and chained
         # followers adopting key/n_parts) and the row schema (so
         # read_decoded(schema_ddl=None)/row_schema() work on the sink),
-        # exactly as append_encode does
-        from ..checkpoint import write_run
-        from ..table import ddl_of
+        # exactly as append_encode does. The cursor guard makes a rival
+        # FOLLOWER's commit fail ours; a rival APPENDER's run record
+        # stays, as the runs list is extended under the commit lock.
+        from ..checkpoint import commit_run, write_run
 
-        files, rec = write_run(blocks, sink,
-                               f"follow-{consumer_id}-{target}", None,
-                               n_parts, 1, None, key)
-        # the cursor guard already detects rival FOLLOWERS; guarding
-        # the runs list too keeps a rival APPENDER's lineage record
-        # from being erased by this read-modify-write (r8 audit). On a
-        # runs conflict the cursor is still ours — re-read and re-commit
-        # the already-written files.
-        from ..table import CommitConflict
-
-        for _ in range(5):
-            head = sink.current()
-            sink_runs = head.properties.get("runs") if head else None
-            try:
-                sink.commit(files, BLOCK_SCHEMA_DDL,
-                            {prop: target,
-                             "runs": (sink_runs or [])
-                             + ([rec] if rec else []),
-                             "row_schema_ddl": ddl_of(df)},
-                            mode="append",
-                            expect_properties={**guard,
-                                               "runs": sink_runs})
-                break
-            except CommitConflict:
-                # distinguish: cursor moved (rival follower — stand
-                # down, propagate) vs runs moved (rival appender —
-                # retry); re-read decides
-                now = sink.current()
-                got = (now.properties if now else {}).get(prop)
-                if got != guard[prop]:
-                    raise
-                continue
-        else:
-            raise CommitConflict(
-                f"follow_once: sink {sink.dir} runs lineage kept "
-                f"changing under 5 retries")
+        files, rec = write_run(df, sink, f"follow-{consumer_id}-{target}",
+                               None, lin, profile=profile)
+        commit_run(sink, files, rec, df, properties={prop: target},
+                   expect_properties=guard)
     finally:
         df.unpersist()
     return {"rows": n_rows, "deleted_keys": n_deletes,

@@ -24,14 +24,19 @@ Together with the DataSource this closes the loop: warehouse ->
 readStream -> transform -> write_stream_to_table -> warehouse, all
 exactly-once, all increment-bounded.
 
-Why foreachBatch and not a DataSourceStreamWriter: lineage part ids
-are ``pmod(xxhash64(key), n_parts)`` and the JVM xxhash64 has no
-Python twin, so a Python-worker writer could not reproduce the layout
-the lookup tiers verify — foreachBatch keeps the encode on the Spark
-DataFrame API where the hash lives. Reference analogue: the
-reference's sinks are at-least-once batch publishers
-(eel-core/src/main/scala/io/eels/component/hive/HiveSink.scala); this
-is the exactly-once streaming upgrade of the same surface.
+Why foreachBatch and not a DataSourceStreamWriter: the encode is a
+DataFrame plan, not a per-row function. ``encode_df`` adds the part id,
+moves rows to their part (the part-aligned exchange, or per-task bands)
+and groups them into blocks before the kernels run. A
+DataSourceStreamWriter's ``write`` gets one input partition's rows in a
+Python worker, split as the upstream query left them, and can neither
+run that plan nor move rows between tasks. foreachBatch hands the
+driver each micro-batch as a DataFrame, so ``append_encode`` runs on it
+unchanged: one write job, a driver-side run record, one commit.
+Reference analogue: the reference's sinks are at-least-once batch
+publishers (eel-core/src/main/scala/io/eels/component/hive/
+HiveSink.scala); this is the exactly-once streaming upgrade of the same
+surface.
 """
 
 from __future__ import annotations
@@ -59,11 +64,9 @@ def sink_batch(spark, batch_df, batch_id: int, tbl: ManifestTable,
     if transform is not None:
         batch_df = transform(batch_df)
     if head is None:
-        return encode_with_checkpoint(
-            spark, batch_df, tbl, run_id=run_id,
-            **({"key": key} if key is not None else {}),
-            **({"n_parts": n_parts} if n_parts is not None else {}),
-            profile=profile)
+        return encode_with_checkpoint(spark, batch_df, tbl, key=key,
+                                      n_parts=n_parts, run_id=run_id,
+                                      profile=profile)
     return append_encode(spark, batch_df, tbl, run_id=run_id, key=key,
                          n_parts=n_parts, profile=profile)
 

@@ -18,6 +18,7 @@ Layout:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -68,11 +69,49 @@ class Snapshot:
                     out.append(0)
         return out
 
+    def lineage(self, run_index: int = -1) -> dict | None:
+        """How run ``run_index`` partitioned its rows: ``key``,
+        ``n_parts``, ``salt`` and ``salt_by``, plus its input
+        ``fingerprint``. Column names are folded through the rename
+        history (:func:`fold_renames`), so a writer hashes, salts and
+        encodes under the CURRENT names. Every writer that continues
+        the table's partitioning reads it here. None when the snapshot
+        records no run."""
+        runs = (self.properties or {}).get("runs") or []
+        if not runs:
+            return None
+        run = runs[run_index]
+        fold = fold_renames(self.properties.get("column_renames", []))
+        return {"key": _folded(fold, run.get("key", "url")),
+                "n_parts": run["n_parts"], "salt": run.get("salt", 1),
+                "salt_by": _folded(fold, run.get("salt_by")),
+                "fingerprint": run.get("fingerprint")}
+
 
 class CommitConflict(Exception):
     """An ``expect_properties`` commit guard failed: another committer
     changed the guarded property between this committer's read and its
     commit. Nothing was published; re-read and retry (or stand down)."""
+
+
+def retrying_rewrite(rewrite):
+    """Decorate a whole-snapshot rewrite: a function that reads the
+    head, writes the replacement of some of its files and commits it
+    with ``mode="overwrite"``, guarded on the head's ``committed_at``.
+    When a rival commit lands first (a ``delete_rows`` whose tombstones
+    the overwrite would erase), the guard raises :class:`CommitConflict`
+    and the rewrite runs again from the new head, up to 3 times in all;
+    the third conflict propagates. The one place a conflict is
+    retried."""
+    @functools.wraps(rewrite)
+    def run(*args, **kwargs):
+        for attempt in range(3):
+            try:
+                return rewrite(*args, **kwargs)
+            except CommitConflict:
+                if attempt == 2:
+                    raise
+    return run
 
 
 _PART_SEG = re.compile(r"^([^=/]+)=([^/]*)$")
@@ -97,6 +136,39 @@ def fold_renames(entries: list[dict]) -> dict[str, str]:
                 alias[k] = to
         alias[frm] = to
     return alias
+
+
+def _folded(fold: dict[str, str], cols):
+    """A column name, a list of them or None, under a rename fold."""
+    if cols is None or isinstance(cols, str):
+        return fold.get(cols, cols)
+    return [fold.get(c, c) for c in cols]
+
+
+def adopt_lineage(snap: Snapshot | None, what: str, key=None,
+                  n_parts: int | None = None, salt: int | None = None,
+                  salt_by: str | None = None) -> dict:
+    """The partitioning a writer adding a run to ``snap`` must use: its
+    last run's :meth:`Snapshot.lineage` where the caller left a
+    parameter None; a given one must equal it, a historical column name
+    counting as its current one, or ValueError, since committed part
+    ids are only valid under the parameters that wrote them. With no
+    run recorded, the caller's values, key ``url`` and salt 1 by
+    default; ``n_parts`` may stay None."""
+    lin = snap.lineage() if snap else None
+    if lin is None:
+        return {"key": key or "url", "n_parts": n_parts, "salt": salt or 1,
+                "salt_by": salt_by, "fingerprint": None}
+    fold = fold_renames(snap.properties.get("column_renames", []))
+    asked = {"key": _folded(fold, key), "n_parts": n_parts, "salt": salt,
+             "salt_by": _folded(fold, salt_by)}
+    for p, want in asked.items():
+        if want is not None and want != lin[p]:
+            raise ValueError(
+                f"{what} partitioning mismatch: {p}={want!r} but the "
+                f"table's lineage {p} is {lin[p]!r}; committed part_ids "
+                f"are only valid under the original params")
+    return lin
 
 
 def partition_values_of(path: str) -> dict:
@@ -135,10 +207,21 @@ class ManifestTable:
         return os.path.join(self.data_dir, uuid.uuid4().hex)
 
     def commit(self, new_files: list[str], schema_ddl: str,
-               properties: dict | None = None, mode: str = "append",
+               properties=None, mode: str = "append",
                expect_properties: dict | None = None,
                stage: str | None = None) -> Snapshot:
         """Publish ``new_files`` atomically. mode: append | overwrite.
+
+        ``properties`` is a dict, or a function of the head snapshot
+        (None on an empty table) returning one, called under the commit
+        lock. A function is how a read-modify-write on a property (the
+        runs list, the tombstone list, the rename history) commits in
+        one call: it sees every commit that landed before this one, so
+        nothing is lost and nothing needs a retry. It must not call
+        Spark or commit: the lock is an ``flock``, and a nested commit
+        waits on it forever. A change computed from the head's FILES
+        (a rewrite) cannot be recomputed there; it passes a dict and
+        guards ``committed_at`` instead (:func:`retrying_rewrite`).
 
         ``stage`` names a REF instead of moving the main pointer — the
         write half of write-audit-publish: the snapshot is durably
@@ -184,6 +267,8 @@ class ManifestTable:
                             f"commit to {self.dir}: expected property "
                             f"{k!r} == {want!r} but current snapshot has "
                             f"{got!r} — a rival committer advanced it")
+            if callable(properties):
+                properties = properties(cur)
             parent = cur.snapshot_id if cur else None
             base_files = cur.files if (cur and mode == "append") else []
             base_parts = (cur.partitions if (cur and mode == "append"
@@ -431,10 +516,10 @@ class ManifestTable:
             files = [f for f, pv in zip(files, parts)
                      if all(c.eval(pv) for c in constraints)]
             if not files:
-                from pyspark.sql.types import StructType
-
+                # typed as the unpruned read: footer schemas plus the
+                # partition columns, with no Spark job before an action
                 return spark.createDataFrame(
-                    [], StructType.fromDDL(snap.schema_ddl))
+                    [], self._read_files(spark, snap.files).schema)
         return self._read_files(spark, files)
 
     def _read_files(self, spark, files: list[str]):
@@ -454,8 +539,6 @@ class ManifestTable:
         # basePath spanning several such roots raises
         # CONFLICTING_DIRECTORY_STRUCTURES for partitioned layouts.
         # allowMissingColumns keeps add-column schema evolution readable.
-        from functools import reduce
-
         groups: dict[str, list[str]] = {}
         for f in files:
             rel = os.path.relpath(f, self.data_dir)
@@ -468,7 +551,7 @@ class ManifestTable:
             schema = _spark_footer_schema(fs[0])
             dfs.append((reader.schema(schema) if schema else reader)
                        .parquet(*fs))
-        return reduce(lambda a, b: a.unionByName(
+        return functools.reduce(lambda a, b: a.unionByName(
             b, allowMissingColumns=True), dfs)
 
     def rename_column(self, old: str, new: str,
@@ -485,15 +568,13 @@ class ManifestTable:
         them (lookups keep those files conservatively)."""
         if old == new:
             raise ValueError("rename_column: old and new names are equal")
-        # read-modify-write on the rename history: CAS + retry so two
-        # concurrent renames can't erase each other's entry (r8 audit)
-        for _ in range(5):
-            snap = self.head(stage)
+
+        def renamed(snap):
             if snap is None:
                 raise FileNotFoundError(f"table {self.dir} has no snapshot")
-            entries = list(snap.properties.get("column_renames", []))
-            entries.append({"from": old, "to": new})
-            props: dict = {"column_renames": entries}
+            props: dict = {"column_renames":
+                           snap.properties.get("column_renames", [])
+                           + [{"from": old, "to": new}]}
             stored = snap.properties.get("row_schema_ddl")
             if stored:
                 # string-level rewrite (no SparkContext needed — the rename
@@ -506,19 +587,9 @@ class ManifestTable:
                     name, _, typ = fld.partition(" ")
                     parts.append(f"{new if name == old else name} {typ}")
                 props["row_schema_ddl"] = ", ".join(parts)
-            try:
-                return self.commit(
-                    [], "", props, mode="append", stage=stage,
-                    expect_properties={
-                        "column_renames":
-                        snap.properties.get("column_renames"),
-                        # a rival WIDEN also rewrites the stored schema
-                        "row_schema_ddl": stored})
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"rename_column: rename history of {self.dir} kept changing "
-            f"under 5 retries")
+            return props
+
+        return self.commit([], "", renamed, mode="append", stage=stage)
 
     #: widenings a stored column type may take without data loss — the
     #: Iceberg type-promotion matrix (int->long, float->double, decimal
@@ -542,14 +613,7 @@ class ManifestTable:
         JVM xxhash64 hashes int32 and int64 differently, so a widened
         KEY column's old generations live in parts derived from the
         narrow type)."""
-        import re as _re
-
-        # read-modify-write on widening history + stored schema: CAS on
-        # BOTH (a rival rename also rewrites row_schema_ddl — guarding
-        # only our own history would clobber its rewrite) and recompute
-        # everything from a fresh head per retry
-        for _ in range(5):
-            snap = self.head(stage)
+        def widened(snap):
             if snap is None:
                 raise FileNotFoundError(
                     f"table {self.dir} has no snapshot")
@@ -570,8 +634,8 @@ class ManifestTable:
             if frm is None:
                 raise ValueError(f"widen_column: no column {col!r} in "
                                  f"stored schema {stored!r}")
-            dec = (_re.fullmatch(r"decimal\((\d+),(\d+)\)", frm),
-                   _re.fullmatch(r"decimal\((\d+),(\d+)\)", to_type))
+            dec = (re.fullmatch(r"decimal\((\d+),(\d+)\)", frm),
+                   re.fullmatch(r"decimal\((\d+),(\d+)\)", to_type))
             ok = (frm, to_type) in self._WIDENINGS or (
                 dec[0] and dec[1]
                 and int(dec[1].group(1)) >= int(dec[0].group(1))
@@ -584,22 +648,12 @@ class ManifestTable:
                     f"widen_column: {frm} -> {to_type} is not a lossless "
                     f"promotion (allowed: int family up, float->double, "
                     f"decimal precision up at equal scale)")
-            entries = list(snap.properties.get("column_widenings", []))
-            entries.append({"col": col, "from": frm, "to": to_type})
-            try:
-                return self.commit(
-                    [], "", {"column_widenings": entries,
-                             "row_schema_ddl": ", ".join(parts)},
-                    mode="append", stage=stage,
-                    expect_properties={
-                        "column_widenings":
-                        snap.properties.get("column_widenings"),
-                        "row_schema_ddl": stored})
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"widen_column: widening history of {self.dir} kept "
-            f"changing under 5 retries")
+            return {"column_widenings":
+                    snap.properties.get("column_widenings", [])
+                    + [{"col": col, "from": frm, "to": to_type}],
+                    "row_schema_ddl": ", ".join(parts)}
+
+        return self.commit([], "", widened, mode="append", stage=stage)
 
     def row_schema(self, snap=None) -> str:
         """The stored logical row schema (persisted by the encode paths
@@ -854,7 +908,7 @@ class ManifestTable:
         eel-hive/src/main/scala/io/eels/component/hive/Compactor.scala:16-21;
         Iceberg's rewrite_data_files). Old files stay on disk for time
         travel. One rewrite routine serves this and :meth:`binpack`
-        (:meth:`_rewrite`: layout, manifest entries, CAS retries).
+        (:meth:`_rewrite`: layout, manifest entries, conflict retries).
 
         As every file is replaced, a registered bloom index is rebuilt
         after the commit, so lookups keep consulting it instead of
@@ -898,6 +952,7 @@ class ManifestTable:
                 "surviving_files": len(out.files) - len(new_files),
                 "snapshot_id": out.snapshot_id}
 
+    @retrying_rewrite
     def _rewrite(self, spark, stage: str | None, select):
         """Replace some files of the head of ``stage`` by a fresh write
         of their rows, in one overwrite commit: ``select(snap)`` returns
@@ -911,106 +966,101 @@ class ManifestTable:
         files' part coverage, stats and key ranges are folded in the
         driver from their narrow block rows (``checkpoint._file_entries``,
         as a run record's are) and merged into the ``*_extra`` maps:
-        entries of files that did not survive are dropped. Key ranges
-        cover the lineage key's primary component. Their pruning power
-        depends on the layout: the banded 3-key hash scatters key
-        clustering, so rewritten ranges typically widen (they can only
-        over-keep, never wrongly drop a file).
+        entries of files that did not survive are dropped. Block column
+        names are folded through the rename history first, so a file
+        mixing key blocks written before and after a rename gets one
+        range over all of them. Key ranges cover the lineage key's
+        primary component. Their pruning power depends on the layout:
+        the banded 3-key hash scatters key clustering, so rewritten
+        ranges typically widen (they can only over-keep, never wrongly
+        drop a file).
 
-        The commit is CAS-guarded on ``committed_at``: a rival commit
+        The commit is guarded on ``committed_at``: a rival commit
         landing mid-rewrite (a ``delete_rows``, whose tombstones the
         property overwrite would erase) makes the rewrite re-read the
-        head, re-select and retry, up to 3 times."""
+        head, re-select and retry (:func:`retrying_rewrite`)."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
         from .checkpoint import (_file_block_stats, _file_entries,
                                  _read_block_rows, build_bloom_index)
-        from .encode import SUMMARY_COL_PREFIX
+        from .encode import SUMMARY_COL_PREFIX, key_cols
 
-        last_err = None
-        for _ in range(3):
-            snap = self.head(stage)
-            if snap is None or not snap.files:
-                raise FileNotFoundError(f"table {self.dir} has no snapshot")
-            files, n_out = select(snap)
-            if not files:
-                return snap, [], []
-            blocks = {"part_id", "block_seq", "col"} <= set(
-                pq.read_schema(files[0]).names)
-            if blocks:
-                # one read under the merged schema (block files live in
-                # unpartitioned staging dirs); tier-0 summary sentinels
-                # describe the REPLACED files: a rewritten file mixes
-                # many sources, so it has no summary (lookups keep it)
-                # until the next fresh encode
-                df = (spark.read.option("mergeSchema", "true")
-                      .parquet(*files)
-                      .filter(~F.col("col").startswith(SUMMARY_COL_PREFIX)))
-                # BANDED blocks (no-exchange 'local' layout): every
-                # task's anchor is its smallest part — typically part 0
-                # for ALL of them, so hashing on part_id alone would
-                # funnel the whole table through one writer. Files are
-                # read 16 at a time and the test stops at the first
-                # banded one
-                banded = any(
-                    t.filter(pc.not_equal(t["part_id"],
-                                          t["part_hi"])).num_rows
-                    for i in range(0, len(files), 16)
-                    for t in _read_block_rows(files[i:i + 16],
-                                              ("part_id", "part_hi"))
-                    if "part_hi" in t.column_names)
-                by = (["part_id", "block_seq", "writer_uid"] if banded
-                      else ["part_id"])
-                df = df.repartition(n_out, *by).sortWithinPartitions(*by)
-            else:
-                df = self._read_files(spark, files).repartition(n_out)
-            job_dir = self.new_data_path()
-            df.write.mode("overwrite").parquet(job_dir)
-            new_files = self.list_written_files(job_dir)
-            replaced = set(files)
-            survivors = [f for f in snap.files if f not in replaced]
-            props = dict(snap.properties)
-            if blocks:
-                runs = props.get("runs") or []
-                key = runs[-1].get("key") if runs else None
-                if key is not None and not isinstance(key, str):
-                    key = key[0]  # composite key: its primary component
-                parts, stats, ranges = _file_entries(
-                    new_files, _file_block_stats(new_files)[0], {key})
-                live = {os.path.basename(f) for f in survivors}
+        snap = self.head(stage)
+        if snap is None or not snap.files:
+            raise FileNotFoundError(f"table {self.dir} has no snapshot")
+        files, n_out = select(snap)
+        if not files:
+            return snap, [], []
+        blocks = {"part_id", "block_seq", "col"} <= set(
+            pq.read_schema(files[0]).names)
+        if blocks:
+            # one read under the merged schema (block files live in
+            # unpartitioned staging dirs); tier-0 summary sentinels
+            # describe the REPLACED files: a rewritten file mixes
+            # many sources, so it has no summary (lookups keep it)
+            # until the next fresh encode
+            df = (spark.read.option("mergeSchema", "true")
+                  .parquet(*files)
+                  .filter(~F.col("col").startswith(SUMMARY_COL_PREFIX)))
+            # BANDED blocks (no-exchange 'local' layout): every
+            # task's anchor is its smallest part — typically part 0
+            # for ALL of them, so hashing on part_id alone would
+            # funnel the whole table through one writer. Files are
+            # read 16 at a time and the test stops at the first
+            # banded one
+            banded = any(
+                t.filter(pc.not_equal(t["part_id"],
+                                      t["part_hi"])).num_rows
+                for i in range(0, len(files), 16)
+                for t in _read_block_rows(files[i:i + 16],
+                                          ("part_id", "part_hi"))
+                if "part_hi" in t.column_names)
+            by = (["part_id", "block_seq", "writer_uid"] if banded
+                  else ["part_id"])
+            df = df.repartition(n_out, *by).sortWithinPartitions(*by)
+        else:
+            df = self._read_files(spark, files).repartition(n_out)
+        job_dir = self.new_data_path()
+        df.write.mode("overwrite").parquet(job_dir)
+        new_files = self.list_written_files(job_dir)
+        replaced = set(files)
+        survivors = [f for f in snap.files if f not in replaced]
+        props = dict(snap.properties)
+        if blocks:
+            lin = snap.lineage()
+            key = key_cols(lin["key"])[0] if lin else None
+            fold = fold_renames(props.get("column_renames", []))
+            stats = [{**r, "col": fold.get(r["col"], r["col"])}
+                     for r in _file_block_stats(new_files)[0]]
+            parts, stats, ranges = _file_entries(new_files, stats, {key})
+            live = {os.path.basename(f) for f in survivors}
 
-                def merged(old: dict, new: dict) -> dict:
-                    return {**{b: v for b, v in old.items() if b in live},
-                            **new}
+            def merged(old: dict, new: dict) -> dict:
+                return {**{b: v for b, v in old.items() if b in live},
+                        **new}
 
-                props["file_parts_extra"] = merged(
-                    props.get("file_parts_extra", {}), parts)
-                props["file_stats_extra"] = merged(
-                    props.get("file_stats_extra", {}), stats)
-                if key is not None:
-                    kr = props.get("file_key_ranges_extra") or {}
-                    props["file_key_ranges_extra"] = {
-                        "key": key,
-                        "files": merged(kr.get("files", {})
-                                        if kr.get("key") == key else {},
-                                        ranges.get(key, {}))}
-            try:
-                out = self.commit(survivors + new_files, snap.schema_ddl,
-                                  props, mode="overwrite", stage=stage,
-                                  expect_properties={
-                                      "committed_at":
-                                      snap.properties.get("committed_at")})
-            except CommitConflict as e:
-                last_err = e
-                continue
-            if not survivors and stage is None and props.get("bloom_index"):
-                build_bloom_index(spark, self,
-                                  key=props["bloom_index"]["key"])
-                out = self.current()
-            return out, files, new_files
-        raise last_err
+            props["file_parts_extra"] = merged(
+                props.get("file_parts_extra", {}), parts)
+            props["file_stats_extra"] = merged(
+                props.get("file_stats_extra", {}), stats)
+            if key is not None:
+                kr = props.get("file_key_ranges_extra") or {}
+                props["file_key_ranges_extra"] = {
+                    "key": key,
+                    "files": merged(kr.get("files", {})
+                                    if _folded(fold, kr.get("key")) == key
+                                    else {}, ranges.get(key, {}))}
+        out = self.commit(survivors + new_files, snap.schema_ddl, props,
+                          mode="overwrite", stage=stage,
+                          expect_properties={
+                              "committed_at":
+                              snap.properties.get("committed_at")})
+        if not survivors and stage is None and props.get("bloom_index"):
+            build_bloom_index(spark, self, key=props["bloom_index"]["key"])
+            out = self.current()
+        return out, files, new_files
 
     # -- maintenance (Iceberg expireSnapshots / deleteOrphanFiles parity) --
     def expire_snapshots(self, keep_last: int = 1,

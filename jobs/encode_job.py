@@ -25,11 +25,13 @@ def main(argv=None) -> None:
                    help="parquet path, or synthetic:<rows> for the corpus")
     p.add_argument("--warehouse", required=True)
     p.add_argument("--table", default="blocks")
-    p.add_argument("--key", default="url",
+    p.add_argument("--key", default=None,
                    help="lineage key column; comma-separate for a "
-                        "COMPOSITE key, e.g. --key source,doc_id")
+                        "COMPOSITE key, e.g. --key source,doc_id "
+                        "(default: the table's lineage key, else url)")
     p.add_argument("--parts", type=int, default=None)
-    p.add_argument("--salt", type=int, default=1)
+    p.add_argument("--salt", type=int, default=None,
+                   help="default: the table's lineage salt, else 1")
     p.add_argument("--salt-by", default=None,
                    help="fine-grained column spreading hot keys (e.g. url "
                         "when --key is a domain column)")
@@ -98,13 +100,14 @@ def main(argv=None) -> None:
         else:
             df = spark.read.parquet(args.input)
         tbl = ManifestTable(args.warehouse, args.table)
-        key = (args.key.split(",") if "," in args.key else args.key)
+        key = (args.key.split(",") if args.key and "," in args.key
+               else args.key)
         salt = args.salt
         if args.auto_salt:
             from eel_sdk_spark.encode import recommend_salt
 
             n_parts = args.parts or spark.sparkContext.defaultParallelism * 2
-            salt = max(salt, recommend_salt(df, key, n_parts))
+            salt = max(salt or 1, recommend_salt(df, key or "url", n_parts))
         overrides = dict(kv.split("=", 1) for kv in args.codec)
         sort_by = list(args.sort_by)
         if args.zorder:
@@ -120,7 +123,7 @@ def main(argv=None) -> None:
 
             run = append_encode(
                 spark, df, tbl, run_id=args.run_id,
-                key=None if args.key == "url" else key,
+                key=key,
                 n_parts=args.parts, profile=args.profile,
                 shuffle={"auto": "auto", "local": "local",
                          "true": True}[args.shuffle_mode],

@@ -329,24 +329,23 @@ def test_delete_where_predicate_takedown(spark, tmp_path):
 
 
 def test_concurrent_deletes_both_survive(spark, tmp_path, monkeypatch):
-    """r8 audit: delete_rows is a read-modify-write on the tombstone
-    list — without the CAS, two concurrent deletes each append to the
-    same stale list and the second commit erases the first takedown."""
+    """delete_rows is a read-modify-write on the tombstone list: a
+    rival delete landing after this one wrote its sidecar, just before
+    its commit takes the lock, must keep its entry and this one's."""
     import eel_sdk_spark.deletes as D
 
     df, tbl = _mk(spark, tmp_path, "concdel", n=800, parts=2)
     a, b = _some_urls(df, 2)
-    real = D._tombstone_entries
+    real = ManifestTable.commit
     state = {"fired": False}
 
-    def spy(snap):
-        out = real(snap)
+    def spy(self, *args, **kwargs):
         if not state["fired"]:
             state["fired"] = True
             D.delete_rows(spark, tbl, [b])  # rival lands first
-        return out
+        return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(D, "_tombstone_entries", spy)
+    monkeypatch.setattr(ManifestTable, "commit", spy)
     out = D.delete_rows(spark, tbl, [a])
     assert out["tombstone_commits"] == 2  # BOTH entries on the list
     read = tbl.read_decoded(spark, SCHEMA_DDL)

@@ -81,3 +81,26 @@ def test_partition_values_of():
     assert partition_values_of("/wh/data/u1/a=1/b=two/f.parquet") == \
         {"a": "1", "b": "two"}
     assert partition_values_of("/wh/data/u1/part-0.parquet") == {}
+
+
+@pytest.mark.parametrize("ddl", ["ignored", "url string, n int"])
+def test_pruned_to_nothing_read_types_like_unpruned(spark, tmp_path, ddl):
+    """Constraints that prune every file give an empty frame typed as
+    the unpruned read (footer schema plus partition columns), whatever
+    the snapshot's free-form ``schema_ddl`` says, and start no job."""
+    import uuid
+
+    tbl = ManifestTable(str(tmp_path), "p")
+    tbl.write_df(spark.range(6).withColumn("k", (F.col("id") % 2).cast(
+        "int")), ddl, partition_by=["k"])
+    sc = spark.sparkContext
+    group = f"pruned-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pruned read")
+    try:
+        out = tbl.read(spark, constraints=[PartitionEquals("k", "7")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert out.schema.simpleString() == "struct<id:bigint,k:int>"
+    assert out.schema == tbl.read(spark).schema
+    assert out.count() == 0
